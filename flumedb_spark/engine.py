@@ -364,7 +364,7 @@ class Flume:
         if isinstance(self.mapper, ExprMapper):
             # evaluate the expression through the plan (1-row pruned scan)
             rows = self._mapped(
-                self.log.stream_df(self.spark, gte=seq, lte=seq)
+                self.log.stream_df(self.spark, gte=seq, lte=seq, ordered=False)
             ).collect()
             if not rows:
                 raise KeyError(seq)
@@ -539,8 +539,9 @@ class Flume:
 
     def _feed(self, view: FlumeView, gt: int, lte: int) -> None:
         """One incremental batch (seq in (gt, lte]) through the mapper into
-        the view's fold — the pull pipeline of `index.js:51-55`."""
-        batch = self.log.stream_df(self.spark, gt=gt, lte=lte, seqs=True, values=True)
+        the view's fold — the pull pipeline of `index.js:51-55`. The
+        batch is unordered (see :meth:`FlumeView.fold`)."""
+        batch = self.log.stream_df(self.spark, gt=gt, lte=lte, ordered=False)
         view.fold(self._mapped(batch), lte)
         # per-item meter (wrap.js:67,74-76): rows delivered through the
         # feed. Dense seqs make the count exact with zero extra Spark

@@ -481,12 +481,19 @@ class ParquetLog:
         limit: int | None = None,
         seqs: bool = True,
         values: bool = True,
+        ordered: bool = True,
     ) -> DataFrame:
         """Range scan plan (index.js:149-156, README.md:130-133).
 
         `limit` truncates AFTER `reverse` — i.e. top-k from the chosen
         end. Projection flags = column pruning (index.js:96-113).
+        ``ordered=False`` skips the global seq sort (a range-partition
+        sampling job plus a shuffle) for consumers that take the rows as
+        a set, like view folds and point gets; `reverse` and `limit`
+        need the order, so they cannot be combined with it.
         """
+        if not ordered and (reverse or limit is not None):
+            raise ValueError("stream_df: reverse/limit need ordered=True")
         df = self.df(spark)
         if gt is not None:
             df = df.where(F.col("seq") > F.lit(int(gt)))
@@ -496,7 +503,8 @@ class ParquetLog:
             df = df.where(F.col("seq") < F.lit(int(lt)))
         if lte is not None:
             df = df.where(F.col("seq") <= F.lit(int(lte)))
-        df = df.orderBy(F.col("seq").desc() if reverse else F.col("seq").asc())
+        if ordered:
+            df = df.orderBy(F.col("seq").desc() if reverse else F.col("seq").asc())
         if limit is not None:
             df = df.limit(int(limit))
         if seqs and values:

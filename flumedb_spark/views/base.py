@@ -2,8 +2,8 @@
 ``close``, ``createSink`` (here: ``fold``), ``destroy``, ``since``.
 
 A view is a derived, materialized structure built by streaming the log
-through a sink (`README.md:183-184`), consuming records strictly in seq
-order (`README.md:220-223`), resumable from its own ``since`` watermark.
+through a sink (`README.md:183-184`), resumable from its own ``since``
+watermark (`README.md:220-223`).
 
 Spark-first execution model (SURVEY.md §7.0): each view is an
 **incrementally-maintained table**. The engine feeds it batches
@@ -11,15 +11,15 @@ Spark-first execution model (SURVEY.md §7.0): each view is an
 the view folds the batch and commits state + new ``since`` **atomically**
 (state tmp-dir + meta rename in one step) so retries never double-count —
 the exactly-once requirement of SURVEY §7.4.2. This is the
-`foreachBatch`-style incremental fold; because flume streams are
-replayable and strictly ordered it is semantically identical to the
-Structured-Streaming form (SURVEY §2.C streaming row), and
+`foreachBatch`-style incremental fold, the same contract as a
+Structured-Streaming micro-batch sink (SURVEY §2.C streaming row), and
 `flumedb_spark.streaming.live` provides the always-on variant.
 
-Views declare ``ORDER_SENSITIVE``: order-insensitive folds (count/sum,
-index maintenance) are executed with full partition parallelism;
-order-sensitive reducers force a seq-sort into a single fold lane
-(SURVEY §7.4.3).
+A batch holds exactly the seqs in ``(since, upto]``, in no particular
+order — the gate's feed and the live runner deliver the same unordered
+set. Order-insensitive folds (count/sum, index maintenance, latest-by-
+seq) run with full partition parallelism; a fold that needs seq order
+sorts the batch itself, as ``Reduce`` does (SURVEY §7.4.3).
 """
 
 from __future__ import annotations
@@ -38,7 +38,6 @@ class FlumeView:
 
     #: bump to force rebuild on code change (README.md:26-29)
     VERSION: Any = 1
-    ORDER_SENSITIVE = False
     #: method name -> 'sync' | 'async' | 'source'  (wrap.js:126-137)
     METHODS: dict[str, str] = {}
 
@@ -129,8 +128,9 @@ class FlumeView:
 
     # ---- fold (the sink) ----------------------------------------------
     def fold(self, batch: DataFrame, upto: int) -> None:
-        """Consume one batch of mapped `(seq, value)` rows, all with
-        ``since < seq <= upto``, in seq order; must call
+        """Consume one batch of mapped `(seq, value)` rows: exactly the
+        seqs in ``(since, upto]``, in no particular order (a fold that
+        needs seq order sorts the batch itself); must call
         ``self.commit(upto)`` exactly once at the end."""
         raise NotImplementedError
 

@@ -34,7 +34,6 @@ class Bloom(FlumeView):
     (e.g. ``get_json_object(value, '$.user') ``) producing the key.
     """
 
-    ORDER_SENSITIVE = False
     METHODS = {"has": "async", "might_have": "async", "approx_count": "async"}
 
     def __init__(

@@ -36,7 +36,6 @@ class GroupedStats(FlumeView):
     all groups; both gated like any async view method.
     """
 
-    ORDER_SENSITIVE = False  # mergeable partials commute
     METHODS = {"get": "async", "snapshot": "source", "n_groups": "async"}
 
     def __init__(self, version: Any, key_expr: str, field: str = "value", key_type: str = "string"):

@@ -4,10 +4,11 @@ range queries").
 
 Spark-first: state is a ``(key, seq, value)`` snapshot table holding the
 latest record per key — the ``max_by(value, seq)`` idiom (SURVEY §2.B
-V5). Each fold computes the batch's per-key latest with a native
-aggregate (map-side combine, full parallelism), merges it against the
-prior snapshot with a second ``max_by``, and writes a new snapshot dir;
-the meta points at the live snapshot so the swap is atomic.
+V5). Each fold runs ONE native aggregate over the prior snapshot unioned
+with the keyed batch (map-side combine, full parallelism, one hash
+exchange): ``max``/``max_by`` over seq are associative, so this equals
+merging a per-batch latest into the snapshot. It writes a new snapshot
+dir; the meta points at the live snapshot so the swap is atomic.
 
 At 100 TB the snapshot is hash-partitioned by key and the merge is a
 per-partition upsert (MERGE INTO on Delta); point gets prune to one
@@ -39,7 +40,6 @@ class Hashtable(FlumeView):
     encode it in ``version`` so stale snapshots rebuild.
     """
 
-    ORDER_SENSITIVE = False  # max_by/min_by(seq) are order-insensitive
     METHODS = {"get": "async", "keys": "async", "df_snapshot": "source"}
 
     def __init__(
@@ -101,12 +101,14 @@ class Hashtable(FlumeView):
             F.max("seq").alias("seq"), F.max_by("value", "seq").alias("value")
         )
 
-    def fold(self, batch: DataFrame, upto: int) -> None:
-        new = self._latest(self._batch_keys(batch))
+    def _merged(self, batch: DataFrame) -> DataFrame:
+        keyed = self._batch_keys(batch)
         prev = self._snap_df()
-        merged = self._latest(prev.unionByName(new)) if prev is not None else new
+        return self._latest(prev.unionByName(keyed) if prev is not None else keyed)
+
+    def fold(self, batch: DataFrame, upto: int) -> None:
         snap = f"snapshot-{upto:012d}-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(os.path.join(self.path, snap))
+        self._merged(batch).write.mode("overwrite").parquet(os.path.join(self.path, snap))
         old = self._meta.get("snapshot")
         self._meta["snapshot"] = snap
         # retention-gated: a concurrent reader (or a lazy df_snapshot

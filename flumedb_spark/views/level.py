@@ -40,7 +40,6 @@ class Level(FlumeView):
     column for the fully-JVM fast path.
     """
 
-    ORDER_SENSITIVE = False  # index maintenance is order-insensitive
     METHODS = {"get": "async", "read": "source"}
 
     def __init__(
@@ -124,7 +123,9 @@ class Level(FlumeView):
         (`test/rebuild.js:38,48`)."""
         decode = self._engine.log.codec.decode
         idx = self.df().where(F.col("key") == F.lit(key))
-        rows = self._join_back(idx).orderBy("seq").select("seq", "key", "value").collect()
+        # a point get matches few rows: sort them here, not in Spark
+        rows = self._join_back(idx).select("seq", "key", "value").collect()
+        rows.sort(key=lambda r: r.seq)
         return [{"seq": r.seq, "key": r.key, "value": decode(r.value)} for r in rows]
 
     def read(

@@ -59,7 +59,6 @@ class Query(FlumeView):
     and pushes down. ``fields`` declares the JSON projections and types.
     """
 
-    ORDER_SENSITIVE = False
     METHODS = {"query": "async", "explain": "sync", "query_df": "source"}
 
     def __init__(self, version: Any, fields: dict[str, str]):

@@ -37,7 +37,6 @@ class Reduce(FlumeView):
     (test/memlog.js:26-34 returns undefined).
     """
 
-    ORDER_SENSITIVE = True
     METHODS = {"get": "async"}
 
     def __init__(
@@ -199,7 +198,6 @@ class NativeStats(FlumeView):
     stddev/min/max; ``None`` on empty log.
     """
 
-    ORDER_SENSITIVE = False
     METHODS = {"get": "async"}
 
     def __init__(self, version: Any, field: str = "foo", scale: int | None = None):

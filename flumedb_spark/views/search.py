@@ -37,7 +37,6 @@ class Search(FlumeView):
     """``Search(version, text_field='text')`` — inverted token index over a
     JSON field of the log value."""
 
-    ORDER_SENSITIVE = False
     METHODS = {"query": "async", "query_df": "source"}
 
     def __init__(self, version: Any, text_field: str = "text"):

@@ -386,6 +386,9 @@ def test_expr_mapper_jvm_fast_path(spark, tmp_log_dir):
     db.use("sum", Reduce(1, sum_foo))
     db.append([{"foo": 1}, {"foo": 3}])
     assert db.get(0) == {"foo": 2}  # mapped on read
+    assert db.get(1) == {"foo": 6}  # the unordered one-row scan
+    with pytest.raises(KeyError):
+        db.get(2)
     assert [i["value"]["foo"] for i in db.stream()] == [2, 6]
     assert db.sum.get() == 8  # views consume the mapped feed
     # never persisted: raw log still holds the original values

@@ -183,3 +183,34 @@ def test_rebuild_delivery_counts(db):
     # no duplication: each key indexed exactly once
     for k in "12345":
         assert len(db.idx.get(k)) == 1
+
+
+def _concat(acc, v):
+    return (acc or "") + v["tok"]
+
+
+def _join(a, b):
+    return a + b
+
+
+def test_order_sensitive_reduce_folds_in_seq_order(spark, tmp_log_dir, backend):
+    """A batch reaches a fold unordered (FlumeView.fold): an
+    order-sensitive Reduce must sort it itself, with and without a
+    combiner, on every backend (the mapper modes add nothing to order,
+    so this case runs per backend only). Each commit's records are
+    longer than the last, so its file is larger and a size-ordered scan
+    would read it first."""
+    db = Flume(backend(tmp_log_dir + "/log"), spark=spark)
+    db.use("seq_cat", Reduce(1, _concat))
+    db.use("par_cat", Reduce(1, _concat, combiner=_join))
+    toks = [f"{c}{i}" for c in "abcd" for i in range(3)]
+    for c in range(3):
+        db.append([{"tok": t, "pad": "x" * (200 * c)} for t in toks[3 * c : 3 * c + 3]])
+    expect = "".join(toks[:9])
+    assert db.seq_cat.get() == expect and db.par_cat.get() == expect
+    db.append([{"tok": t} for t in toks[9:]])  # incremental fold onto acc
+    expect = "".join(toks)
+    assert db.seq_cat.get() == expect and db.par_cat.get() == expect
+    db.rebuild()
+    assert db.seq_cat.get() == expect and db.par_cat.get() == expect
+    db.close()

@@ -8,6 +8,7 @@ A regression here is a performance bug even when results stay correct.
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -398,3 +399,47 @@ def test_best_of_n_window_is_prompt_partitioned(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "WindowExec" not in plan or "hashpartitioning(prompt_id" in plan
     assert "SinglePartition" not in plan, plan
+
+
+def test_unordered_log_scan_has_no_sort(spark, tmp_path):
+    # view folds and point gets take the range as a set: the unordered
+    # scan must plan neither the global sort nor its range-partition
+    # exchange; the default (public stream_df) keeps both
+    from flumedb_spark import Flume
+    from flumedb_spark.plans import formatted_plan
+
+    db = Flume(str(tmp_path / "log"), spark=spark)
+    for c in range(3):
+        db.append([{"n": 10 * c + i} for i in range(10)])
+    log = db.log
+    p = formatted_plan(log.stream_df(spark, gt=4, lte=25, ordered=False))
+    assert not re.search(r"\bSort\b", p), p
+    assert "rangepartitioning" not in p, p
+    assert "GreaterThan(seq,4)" in p and "LessThanOrEqual(seq,25)" in p
+    p = formatted_plan(log.stream_df(spark, gt=4, lte=25))
+    assert re.search(r"\bSort\b", p) and "rangepartitioning" in p, p
+    with pytest.raises(ValueError):
+        log.stream_df(spark, limit=3, ordered=False)
+    db.close()
+
+
+def test_hashtable_fold_merges_in_one_exchange(spark, tmp_path):
+    # the fold aggregates prev snapshot ∪ keyed batch ONCE: one hash
+    # exchange on key, not a per-batch latest and then a second merge
+    from flumedb_spark import Flume
+    from flumedb_spark.plans import formatted_plan
+    from flumedb_spark.views.hashtable import Hashtable
+
+    db = Flume(str(tmp_path / "log"), spark=spark)
+    db.use("latest", Hashtable(1, key_expr="get_json_object(value, '$.k')", key_type="long"))
+    db.append([{"k": i % 4, "n": i} for i in range(12)])
+    assert db.latest.get(3)["n"] == 11  # the snapshot exists now
+    db.append([{"k": i % 4, "n": 12 + i} for i in range(6)])
+    view = db._views["latest"]
+    batch = db.log.stream_df(spark, gt=view.since, lte=db.since, ordered=False)
+    merged = view._merged(batch)
+    # each Exchange node prints its partitioning as "Arguments: <kind>(..."
+    exchanges = re.findall(r"Arguments: (\w+)\(", formatted_plan(merged))
+    assert exchanges == ["hashpartitioning"], exchanges
+    assert {r.key: r.seq for r in merged.collect()} == {0: 16, 1: 17, 2: 14, 3: 15}
+    db.close()
