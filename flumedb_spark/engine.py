@@ -86,8 +86,8 @@ class ExprMapper:
     for O15 when the transform is SQL-expressible: no Python worker, no
     Arrow transfer, stays inside whole-stage codegen.
 
-    For the point-lookup path the expression is evaluated through a
-    1-row plan, so get/stream/view-feed all see identical semantics.
+    Point gets evaluate the expression over a local DataFrame of the
+    fetched rows, so get/stream/view-feed all see identical semantics.
     """
 
     def __init__(self, expr: str):
@@ -349,6 +349,24 @@ class Flume:
         out = df.mapInPandas(run, schema)
         return out.select(*cols)
 
+    def _map_rows(self, rows: list[dict]) -> list[dict]:
+        """The mapper over a handful of fetched ``(seq, value)`` log rows
+        (point gets). A Python mapper runs in the driver with the same
+        encode/decode round trip as :meth:`_mapped`; an
+        :class:`ExprMapper` is one projection over a local DataFrame of
+        the rows, so every read path evaluates it the same way."""
+        if self.mapper is None or not rows:
+            return rows
+        if isinstance(self.mapper, ExprMapper):
+            local = self.spark.createDataFrame(
+                [(r["seq"], r["value"]) for r in rows], "seq long, value string"
+            )
+            return [r.asDict() for r in self._mapped(local).collect()]
+        codec, mapper = self.log.codec, self.mapper
+        return [
+            {**r, "value": codec.encode(mapper(codec.decode(r["value"])))} for r in rows
+        ]
+
     # ---- write path (O1/O2) --------------------------------------------
     def append(self, values: Any) -> int:
         self._throw_if_closed()
@@ -361,19 +379,10 @@ class Flume:
         (README.md:124-128)."""
         self._throw_if_closed()
         self.meta["get"] += 1
-        if isinstance(self.mapper, ExprMapper):
-            # evaluate the expression through the plan (1-row pruned scan)
-            rows = self._mapped(
-                self.log.stream_df(self.spark, gte=seq, lte=seq, ordered=False)
-            ).collect()
-            if not rows:
-                raise KeyError(seq)
-            return self.log.codec.decode(rows[0].value)
-        rec = self.log.get(self.spark, seq)
-        if rec is None:
+        rows = self._map_rows(self.log.read_seqs([int(seq)]))
+        if not rows:
             raise KeyError(seq)
-        v = rec["value"]
-        return self.mapper(v) if self.mapper else v
+        return self.log.codec.decode(rows[0]["value"])
 
     def stream_df(self, seqs: bool = True, values: bool = True, **opts) -> DataFrame:
         """Range-scan plan with mapper composed (O4/O5). Mapper is skipped

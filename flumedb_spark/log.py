@@ -24,6 +24,8 @@ Spark-first design (SURVEY.md §1.4):
 - reads: ``spark.read.parquet`` — seq-range predicates push down to
   Parquet min/max (the reference's only pushdown, `index.js:39`), column
   pruning covers the ``seqs/values`` projection flags (`index.js:96-113`).
+  Point gets (``get``, ``read_seqs``) read the same files in the driver
+  through Arrow with a seq filter, so a one-record read starts no job.
 
 Files are named by commit index so lexical order == seq order; at scale
 the appender also buckets files into ``seq_bucket=N/`` subdirs (see
@@ -39,6 +41,7 @@ import uuid
 from typing import Any
 
 import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,6 +74,71 @@ def _encode(value: Any) -> str:
 
 def _decode(raw: str) -> Any:
     return json.loads(raw)
+
+
+def read_parquet_where(
+    paths: list[str], column: str, values, columns, where: ds.Expression | None = None
+) -> pa.Table:
+    """Point read in the driver, no Spark job: the rows of the Parquet
+    files at ``paths`` whose ``column`` is in ``values`` (and that match
+    ``where``), as an Arrow table of ``columns``. A directory (a Spark
+    write) stands for its data files. Each value is cast to the column's
+    type, as Spark casts a literal against a typed column: ``"5"`` finds
+    5 in a long column and ``"abc"`` raises. ``None`` matches nothing."""
+    files = []
+    for p in paths:
+        if os.path.isdir(p):
+            files += sorted(
+                os.path.join(p, f) for f in os.listdir(p) if not f.startswith(("_", "."))
+            )
+        else:
+            files.append(p)
+    wanted = [v for v in values if v is not None]
+    if not files or not wanted:
+        return pa.table({c: pa.array([]) for c in columns})
+    data = ds.dataset(files, format="parquet")
+    cond = ds.field(column).isin(pa.array(wanted).cast(data.schema.field(column).type))
+    if where is not None:
+        cond = cond & where
+    return data.to_table(columns=list(columns), filter=cond)
+
+
+def _version_files(txn_dir: str) -> list[str]:
+    try:
+        return sorted(
+            f for f in os.listdir(txn_dir) if f.endswith(".json") and not f.startswith(".")
+        )
+    except FileNotFoundError:
+        return []
+
+
+def load_manifest(path: str) -> dict:
+    """The committed manifest of the log at ``path``, whichever backend
+    wrote it: the newest ``_log/`` version where that directory exists
+    (:class:`VersionedLog`), else ``meta.json``. Every log class loads
+    through it, and so do readers that hold only the path (the streaming
+    source's executors)."""
+    txn_dir = os.path.join(path, "_log")
+    if os.path.isdir(txn_dir):
+        versions = _version_files(txn_dir)
+        if not versions:
+            return {"since": -1, "commits": 0, "files": [], "txn_version": -1}
+        with open(os.path.join(txn_dir, versions[-1])) as f:
+            meta = json.load(f)
+        meta["txn_version"] = int(versions[-1].split(".")[0])
+        return meta
+    meta_path = os.path.join(path, "meta.json")
+    if not os.path.exists(meta_path):
+        return {"since": -1, "commits": 0, "files": []}
+    with open(meta_path) as f:
+        meta = json.load(f)
+    # manifest introduced later: fall back to a directory glob for logs
+    # written before it
+    if "files" not in meta:
+        meta["files"] = sorted(
+            f for f in os.listdir(os.path.join(path, "data")) if f.endswith(".parquet")
+        )
+    return meta
 
 
 class CommitConflict(Exception):
@@ -125,17 +193,7 @@ class ParquetLog:
 
     # ---- meta / since -------------------------------------------------
     def _load_meta(self) -> dict:
-        if os.path.exists(self.meta_path):
-            with open(self.meta_path) as f:
-                meta = json.load(f)
-            # manifest introduced later: fall back to a directory glob
-            # for logs written before it
-            if "files" not in meta:
-                meta["files"] = sorted(
-                    f for f in os.listdir(self.data_dir) if f.endswith(".parquet")
-                )
-            return meta
-        return {"since": -1, "commits": 0, "files": []}
+        return load_manifest(self.path)
 
     def _commit_meta(self, meta: dict | None = None) -> None:
         """Durably commit ``meta`` (atomic tmp+rename), THEN publish it as
@@ -462,13 +520,22 @@ class ParquetLog:
         df = spark.read.schema(LOG_SCHEMA).parquet(*paths)
         return df.where(F.col("seq") <= F.lit(since))
 
+    def read_seqs(self, seqs) -> list[dict]:
+        """The committed ``{"seq", "value"}`` rows whose seq is in
+        ``seqs``, read in the driver through Arrow (no Spark job): the
+        point-get path. Scans and folds go through :meth:`df`."""
+        meta = self._load_meta()
+        paths = [os.path.join(self.data_dir, f) for f in meta.get("files", [])]
+        return read_parquet_where(
+            paths, "seq", seqs, ("seq", "value"), ds.field("seq") <= meta["since"]
+        ).to_pylist()
+
     def get(self, spark: SparkSession, seq: int) -> dict | None:
         """Point lookup (index.js:157-162). None if absent."""
-        rows = self.df(spark).where(F.col("seq") == F.lit(int(seq))).collect()
+        rows = self.read_seqs([int(seq)])
         if not rows:
             return None
-        r = rows[0]
-        return {"seq": r.seq, "value": self.codec.decode(r.value)}
+        return {"seq": rows[0]["seq"], "value": self.codec.decode(rows[0]["value"])}
 
     def stream_df(
         self,
@@ -917,26 +984,7 @@ class VersionedLog(ParquetLog):
         self.txn_dir = os.path.join(path, "_log")
         os.makedirs(self.txn_dir, exist_ok=True)
 
-    # ---- versioned manifest I/O --------------------------------------
-    def _version_files(self) -> list[str]:
-        try:
-            return sorted(
-                f for f in os.listdir(self.txn_dir)
-                if f.endswith(".json") and not f.startswith(".")
-            )
-        except FileNotFoundError:
-            return []
-
-    def _load_meta(self) -> dict:
-        versions = self._version_files()
-        if not versions:
-            return {"since": -1, "commits": 0, "files": [], "txn_version": -1}
-        last = versions[-1]
-        with open(os.path.join(self.txn_dir, last)) as f:
-            meta = json.load(f)
-        meta["txn_version"] = int(last.split(".")[0])
-        return meta
-
+    # ---- versioned manifest I/O (loaded by ``load_manifest``) --------
     def _commit_meta(self, meta: dict | None = None) -> None:
         m = self._meta if meta is None else meta
         v = int(m.get("txn_version", -1)) + 1
@@ -958,7 +1006,7 @@ class VersionedLog(ParquetLog):
         self._prune_versions(v)
 
     def _prune_versions(self, head: int) -> None:
-        for f in self._version_files():
+        for f in _version_files(self.txn_dir):
             try:
                 if int(f.split(".")[0]) <= head - self.keep_versions:
                     os.remove(os.path.join(self.txn_dir, f))

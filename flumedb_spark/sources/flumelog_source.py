@@ -5,7 +5,9 @@ with custom source").
 Unlike the file-source tail in `streaming/live.py` (which relies on
 file-discovery order), this source speaks the log's native offset
 language: an offset IS the log's ``since`` watermark, read from the
-manifest commit. That gives:
+manifest commit through ``load_manifest`` — the loader every log backend
+uses, so a ``VersionedLog``'s ``_log/`` versions resolve like a
+``meta.json``. That gives:
 
 - exact resume semantics: the checkpointed offset is a seq, the same
   number the engine's views track (`index.js:39` ``opts.gt = upto``);
@@ -23,7 +25,6 @@ Register once per session then:
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -31,6 +32,8 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
+
+from ..log import load_manifest
 
 LOG_DDL = "seq bigint, ts timestamp, value string"
 
@@ -50,11 +53,7 @@ class FlumeLogStreamReader(DataSourceStreamReader):
         self.rows_per_partition = rows_per_partition
 
     def _since(self) -> int:
-        meta_path = os.path.join(self.path, "meta.json")
-        if not os.path.exists(meta_path):
-            return -1
-        with open(meta_path) as f:
-            return json.load(f).get("since", -1)
+        return load_manifest(self.path)["since"]
 
     def initialOffset(self) -> dict:
         return {"since": -1}
@@ -86,9 +85,7 @@ class FlumeLogStreamReader(DataSourceStreamReader):
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        meta_path = os.path.join(partition.path, "meta.json")
-        with open(meta_path) as f:
-            files = json.load(f).get("files", [])
+        files = load_manifest(partition.path).get("files", [])
         data_dir = os.path.join(partition.path, "data")
         out_schema = pa.schema(
             [

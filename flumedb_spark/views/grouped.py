@@ -11,20 +11,21 @@ never the history.
 
 At 100 TB: the snapshot is hash-partitioned by key; the merge touches
 only partitions containing batch keys (MERGE INTO on Delta); reads are
-pruned point/range lookups on the snapshot.
+pruned point/range lookups on the snapshot (``get`` reads it in the
+driver through Arrow).
 """
 
 from __future__ import annotations
 
 import math
 import os
-import shutil
 import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..log import read_parquet_where
 from .base import FlumeView
 
 
@@ -103,23 +104,27 @@ class GroupedStats(FlumeView):
 
     # ---- reads ---------------------------------------------------------
     @staticmethod
-    def _row_to_stats(r) -> dict:
-        mean = r.s / r.n
-        var = max(r.sq / r.n - mean * mean, 0.0)
+    def _row_to_stats(r: dict) -> dict:
+        mean = r["s"] / r["n"]
+        var = max(r["sq"] / r["n"] - mean * mean, 0.0)
         return {
-            "count": r.n,
-            "sum": r.s,
+            "count": r["n"],
+            "sum": r["s"],
             "mean": mean,
             "stdev": math.sqrt(var),
-            "min": r.mn,
-            "max": r.mx,
+            "min": r["mn"],
+            "max": r["mx"],
         }
 
     def get(self, key: Any) -> dict | None:
-        snap = self._snap_df()
+        """One group's stats: a driver-side Arrow read of the snapshot
+        (no Spark job), like ``Hashtable.get``."""
+        snap = self._meta.get("snapshot")
         if snap is None:
             return None
-        rows = snap.where(F.col("key") == F.lit(key)).collect()
+        rows = read_parquet_where(
+            [os.path.join(self.path, snap)], "key", [key], ("n", "s", "sq", "mn", "mx")
+        ).to_pylist()
         return self._row_to_stats(rows[0]) if rows else None
 
     def snapshot(self) -> DataFrame:

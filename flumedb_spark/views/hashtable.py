@@ -10,6 +10,12 @@ exchange): ``max``/``max_by`` over seq are associative, so this equals
 merging a per-batch latest into the snapshot. It writes a new snapshot
 dir; the meta points at the live snapshot so the swap is atomic.
 
+A point ``get`` reads the snapshot in the driver through Arrow with a
+key filter, an in-process lookup like the reference's hash map: it
+starts no Spark job. Scans (``keys``, ``df_snapshot``) and folds stay
+on Spark. Snapshot dirs are immutable and a replaced one is deleted
+only after the retention window, so a reader never sees a torn one.
+
 At 100 TB the snapshot is hash-partitioned by key and the merge is a
 per-partition upsert (MERGE INTO on Delta); point gets prune to one
 partition, hot lookup sets broadcast.
@@ -18,7 +24,6 @@ partition, hot lookup sets broadcast.
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 from typing import Any, Callable
 
@@ -26,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..log import read_parquet_where
 from .base import FlumeView
 
 
@@ -121,13 +127,13 @@ class Hashtable(FlumeView):
 
     # ---- reads ---------------------------------------------------------
     def get(self, key: Any) -> Any:
-        snap = self._snap_df()
+        snap = self._meta.get("snapshot")
         if snap is None:
             return None
-        rows = snap.where(F.col("key") == F.lit(key)).collect()
-        if not rows:
+        rows = read_parquet_where([os.path.join(self.path, snap)], "key", [key], ("value",))
+        if not rows.num_rows:
             return None
-        return self._engine.log.codec.decode(rows[0].value)
+        return self._engine.log.codec.decode(rows["value"][0].as_py())
 
     def keys(self) -> list:
         snap = self._snap_df()

@@ -8,14 +8,17 @@ Spark-first: the index is an incrementally-maintained ``(key, seq)``
 table. Each fold explodes the batch's keys and appends one Parquet file;
 the committed-file list lives in the view's meta (a mini manifest — the
 same commit shape Delta uses), so a retried fold never double-indexes
-(exactly-once, SURVEY §7.4.2). Point gets and key ranges are plain
-pruned scans + a join back to the log on ``seq``; the reference's
+(exactly-once, SURVEY §7.4.2). A point ``get`` reads Parquet in the
+driver through Arrow: the index files filtered on the key, then the
+log's rows for the matched seqs (``ParquetLog.read_seqs``), so it starts
+no Spark job. Key ranges (``read``) and folds stay on Spark: a pruned
+index scan + a join back to the log on ``seq``. The reference's
 charwise order-preserving key encoding is unnecessary because the index
 column keeps its native type and sorts natively (SURVEY §2.B V2).
 
 At 100 TB: index files are appended per-batch and compacted by key-range
-(``compact()``); the join-back broadcasts the matched seq set when small
-(point lookups) and sort-merges on ``seq`` otherwise.
+(``compact()``); the range join-back broadcasts the matched seq set when
+small and sort-merges on ``seq`` otherwise.
 """
 
 from __future__ import annotations
@@ -28,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..log import read_parquet_where
 from .base import FlumeView
 
 
@@ -98,8 +102,11 @@ class Level(FlumeView):
         self.commit(upto)
 
     # ---- reads ---------------------------------------------------------
+    def _files(self) -> list[str]:
+        return [os.path.join(self._data_dir(), f) for f in self._meta.get("files", [])]
+
     def df(self) -> DataFrame:
-        files = [os.path.join(self._data_dir(), f) for f in self._meta.get("files", [])]
+        files = self._files()
         if not files:
             return self.spark.createDataFrame([], f"key {self.key_type}, seq long")
         return self.spark.read.parquet(*files)
@@ -120,13 +127,18 @@ class Level(FlumeView):
 
     def get(self, key: Any) -> list[dict]:
         """Point lookup: all log records indexed under ``key``, seq order
-        (`test/rebuild.js:38,48`)."""
-        decode = self._engine.log.codec.decode
-        idx = self.df().where(F.col("key") == F.lit(key))
-        # a point get matches few rows: sort them here, not in Spark
-        rows = self._join_back(idx).select("seq", "key", "value").collect()
-        rows.sort(key=lambda r: r.seq)
-        return [{"seq": r.seq, "key": r.key, "value": decode(r.value)} for r in rows]
+        (`test/rebuild.js:38,48`). Both halves are driver-side Arrow reads
+        (no Spark job): the index files filtered on ``key``, then the
+        log's committed rows for the matched seqs."""
+        engine = self._engine
+        hits = read_parquet_where(self._files(), "key", [key], ("key", "seq")).to_pylist()
+        fetched = engine._map_rows(engine.log.read_seqs({h["seq"] for h in hits}))
+        values = {r["seq"]: r["value"] for r in fetched}
+        # the join back on seq: a record indexed twice under ``key``
+        # comes back twice, a redacted seq drops out
+        rows = sorted((h for h in hits if h["seq"] in values), key=lambda h: h["seq"])
+        decode = engine.log.codec.decode
+        return [{"seq": h["seq"], "key": h["key"], "value": decode(values[h["seq"]])} for h in rows]
 
     def read(
         self,

@@ -12,6 +12,8 @@ Behaviors covered per (backend, mapper) combination:
 - view-ahead-of-log forces destroy-then-rebuild (memlog.js:98-126)
 - close -> use-after-close throws (memlog.js:143-168)
 - rebuild delivery counting: no loss, no duplication (rebuild.js:19-62)
+- driver-side point gets (``db.get``, ``Level.get``) equal the Spark scan,
+  before and after redaction and compaction
 """
 
 import math
@@ -213,4 +215,41 @@ def test_order_sensitive_reduce_folds_in_seq_order(spark, tmp_log_dir, backend):
     assert db.seq_cat.get() == expect and db.par_cat.get() == expect
     db.rebuild()
     assert db.seq_cat.get() == expect and db.par_cat.get() == expect
+    db.close()
+
+
+def _k_key(v):
+    return [str(v["k"])]
+
+
+def test_point_gets_match_the_scan(spark, tmp_log_dir, backend):
+    """``db.get`` and ``Level.get`` read the manifest's files in the
+    driver: on every backend they must equal the Spark scan. Seqs come
+    from the log itself, never from arithmetic: on OffsetLog they are
+    byte offsets."""
+    db = Flume(backend(tmp_log_dir + "/log"), spark=spark)
+    db.use("idx", Level(1, key_fn=_k_key))
+    for c in range(3):
+        db.append([{"k": i % 3, "c": c} for i in range(4)])
+
+    def check():
+        scan = db.stream()
+        for item in scan:
+            assert db.get(item["seq"]) == item["value"]
+        for k in range(3):
+            want = [(i["seq"], i["value"]) for i in scan if i["value"]["k"] == k]
+            assert [(r["seq"], r["value"]) for r in db.idx.get(str(k))] == want
+        with pytest.raises(KeyError):
+            db.get(scan[-1]["seq"] + 1)  # past the head
+        return scan
+
+    scan = check()
+    gone = scan[4]["seq"]
+    assert db.delete_seqs([gone]) == 1
+    with pytest.raises(KeyError):
+        db.get(gone)
+    assert len(check()) == len(scan) - 1
+    db.log.compact(spark)
+    db._views["idx"].compact()
+    assert len(check()) == len(scan) - 1
     db.close()

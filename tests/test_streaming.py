@@ -287,6 +287,31 @@ def test_live_runner_with_custom_source(spark, tmp_log_dir):
     db.close()
 
 
+def test_live_runner_with_custom_source_on_versioned_log(spark, tmp_log_dir):
+    # the offset-native source loads the manifest the way the log does:
+    # a VersionedLog keeps it in _log/ versions and writes no meta.json,
+    # so a source reading meta.json sat at since -1 and never folded
+    from flumedb_spark.log import VersionedLog
+
+    db = Flume(VersionedLog(tmp_log_dir), spark=spark).use("stats", NativeStats(1, field="foo"))
+    db.append([{"foo": 2}, {"foo": 4}])
+    runner = LiveViewRunner(db, "stats", source="datasource")
+    runner.start()
+    try:
+        runner.process_all_available()
+        assert db.stats.since == db.since
+        db.append({"foo": 6})
+        runner.process_all_available()
+        assert db.stats.since == db.since
+        live = db.stats.get(since=-1)
+    finally:
+        runner.stop()
+    gated = Flume(VersionedLog(tmp_log_dir), spark=spark).use("fresh", NativeStats(1, field="foo"))
+    assert live == gated.fresh.get() and live["sum"] == 12
+    gated.close()
+    db.close()
+
+
 def test_stream_static_enrichment_join(spark, tmp_log_dir, tmp_path):
     # stream-static join: enrich the live log stream with a dimension
     # table (broadcast per micro-batch) - the standard streaming
