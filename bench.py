@@ -45,8 +45,8 @@ HEADLINE = [
     # north-star. r9 (VERDICT-r8 #6): the ANN headline slots now carry
     # the SEEDED plans — the bucketed shapes you'd run at scale — and
     # both are oracle-paired; the brute-force numpy serving twin
-    # (ns_similarity_topk_np) and the xxhash64 raw paths remain
-    # correctness/pytest twins outside the headline set.
+    # (ns_similarity_topk_np) and the library's random-plane / trained
+    # paths remain correctness/pytest twins outside the headline set.
     "ns_dedup_exact",
     "ns_minhash_lsh_candidates",
     "ns_ivf_ann_topk_seeded",

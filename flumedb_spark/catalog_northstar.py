@@ -689,10 +689,9 @@ def ns_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # (The rows-only ns_lsh_ann_topk catalog entry was retired in r9: the
-# xxhash64-hyperplane fast path stays a library function —
-# similarity.lsh_ann_topk, pytest-covered — and the oracle-checked
-# ns_lsh_ann_topk_md5 twin pins the same bucket-probe machinery with
-# md5-parity planes. VERDICT-r8 #3.)
+# random-plane path stays a library function — similarity.lsh_ann_topk,
+# pytest-covered — and the oracle-checked ns_lsh_ann_topk_md5 row runs
+# the same similarity.lsh_buckets core with md5-parity planes.)
 
 
 # ---------------------------------------------------------------------
@@ -1389,18 +1388,17 @@ def ns_pipeline_filter_dedup_join(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # (The rows-only ns_ivf_ann_topk catalog entry was retired in r9: the
-# trained-k-means fast path stays a library function —
-# similarity.ivf_ann_topk, pytest-covered — and the oracle-checked
-# ns_ivf_ann_topk_seeded twin pins the same coarse-quantize/probe
-# machinery with seed centroids. VERDICT-r8 #3.)
+# trained-k-means path stays a library function — similarity.ivf_ann_topk,
+# pytest-covered — and the oracle-checked ns_ivf_ann_topk_seeded row runs
+# the same nearest_centroid/ivf_candidates core with seed centroids.)
 
 
 # ---------------------------------------------------------------------
-# ANN parity twins — fully cross-engine-checkable approximate search
-# (VERDICT r2 item 4). The production paths above (BLAS sketches /
-# trained k-means) stay rows-only because their hash/model state is
-# engine-specific; these twins pin the SAME candidate-generation and
-# scoring MACHINERY with engine-portable ingredients:
+# ANN parity twins — fully cross-engine-checkable approximate search.
+# The library paths (similarity.lsh_ann_topk / ivf_ann_topk) stay
+# rows-only because their plane draw / trained model is engine-specific;
+# these rows run the SAME similarity.py primitives with engine-portable
+# ingredients:
 #   - LSH: hyperplane signs derived from md5 parity (the minhash md5
 #     pattern) instead of numpy RNG,
 #   - IVF: seed centroids (the n_centroids lowest-id vectors, i.e.
@@ -1458,8 +1456,8 @@ _ANN_SCORE_TAIL = """
 
 def _lsh_md5_sql(d: dict, n_planes: int = 6, n_tables: int = 8, k: int = 10) -> str:
     """Hyperplane-LSH top-k with md5-parity plane signs — identical
-    arithmetic in Spark SQL and DuckDB (mirrors operators/similarity.py
-    lsh_ann_topk:243 semantics with a portable sign source)."""
+    arithmetic in Spark SQL and DuckDB (the semantics of
+    operators/similarity.py lsh_buckets with a portable sign source)."""
     tbl_series = d["series"].format(a=0, b=n_tables - 1, alias="tbl")
     plane_series = d["series"].format(a=0, b=n_planes - 1, alias="plane")
     return f"""
@@ -1495,7 +1493,7 @@ def _lsh_md5_sql(d: dict, n_planes: int = 6, n_tables: int = 8, k: int = 10) -> 
 def _ivf_assign_ctes(d: dict, n_centroids: int) -> str:
     """Shared CTE block: flatten embeddings to exact ints, take the
     n_centroids lowest-id vectors as seed centroids (== Lloyd iteration
-    0 of operators/similarity.py ivf_train:318), and Voronoi-assign
+    0 of operators/similarity.py ivf_train), and Voronoi-assign
     every vector to its nearest centroid. Used by the seeded-IVF ANN
     entries and the SemDeDup entry — both engines generate from this
     one text, so the assignment arithmetic is identical."""
@@ -1528,7 +1526,7 @@ def _ivf_assign_ctes(d: dict, n_centroids: int) -> str:
 
 def _ivf_seeded_sql(d: dict, n_centroids: int = 16, n_probe: int = 4, k: int = 10) -> str:
     """IVF top-k over SEED centroids (the n_centroids lowest-id vectors
-    == Lloyd iteration 0 of operators/similarity.py ivf_train:318): the
+    == Lloyd iteration 0 of operators/similarity.py ivf_train): the
     Voronoi assignment, multi-probe, and candidate scoring machinery,
     engine-portable. Production uses the trained model; the probing
     math is identical."""
@@ -1603,321 +1601,69 @@ def _recall_sql(approx_sql: str) -> str:
     """
 
 
-# ---------------------------------------------------------------------
-# r10 OPTIMIZATION (guide §2.4 "remove shuffles outright", §1.2 "the
-# distributed algorithm"): the single-text ANN SQL above stays as the
-# ORACLE (and as the reference statement of the arithmetic), but the
-# Spark side no longer runs the EXPLODED form at all. The flat CTE
-# materialized n_vecs x d rows and every downstream step (norms, LSH
-# sums, Voronoi dots, PQ subdistances, candidate dots) was a join+agg
-# over that explosion — n_vecs x d x 48 intermediate rows for the LSH
-# sums alone, 34-52 Exchange nodes per query even after the r10 batch-1
-# materialization pass. Every per-vector quantity is a WITHIN-ROW
-# reduction, so the Spark side now keeps each embedding as ONE row
-# (vec_id, earr, n2) and computes signatures / assignments / dots with
-# array expressions (zip_with + aggregate): same integer arithmetic,
-# zero explosion, and the only shuffles left are the tiny bucket /
-# candidate-table exchanges. The md5-parity LSH plane signs are
-# 8x6x64 CONSTANTS (md5 of "{tbl}|{plane}|{i}" — no data involved), so
-# they are computed at plan-construction time and folded into the
-# bucket expressions as literal arrays.
-# Oracles are byte-identical to before; equivalence is hash-gated by
-# tools/check_correctness.py at sf0.01 + sf0.1.
-# ---------------------------------------------------------------------
+# The Spark side of the ANN rows below composes operators/similarity.py's
+# ANN core: one exact-int array row per vector, array-expression
+# signatures, assignments and dots, and the same integer arithmetic as
+# the exploded-`flat` oracle text above (which stays as the reference
+# statement). Equivalence is hash-gated by tools/check_correctness.py
+# at sf0.01 + sf0.1. The query side is `vec_id < 5`, the oracles' filter.
 
 
-#: exact-BIGINT dot product of two bigint arrays — identical to the
-#: flat-table `sum(a.e * b.e)` over the join on i: indices present in
-#: only one side contribute nothing (zip_with pads with NULL, coalesced
-#: to 0), common indices multiply exactly.
-def _arr_dot(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-        "CAST(0 AS BIGINT), (acc, v) -> acc + coalesce(v, CAST(0 AS BIGINT)))"
-    )
-
-
-def _ann_dim(spark: SparkSession) -> int:
-    """Max embedding dimensionality — the `max(i)` bound the flat-CTE
-    oracles derive from the data. One tiny aggregate per construction
-    (embeddings is dimension-table-sized; the scan is columnar)."""
-    return int(
-        spark.sql("SELECT max(size(embedding)) AS d FROM embeddings").head()[0]
-    )
-
-
-def _ann_vecs_ckpt(spark: SparkSession, per_row_ops: int = 64):
-    """(vec_id, earr, n2): one row per embedding with the exact-int
-    element array and its squared norm, materialized once per query
-    construction (localCheckpoint — paid inside the timed region each
-    bench pass, the r6 honesty rule).
-
-    Width is SIZE-ADAPTIVE, not a local-mode constant (guide §2):
-    ~750k interpreted array-ops per task, estimated from the cached
-    relation's optimizer statistics (metadata only — no extra job).
-    ``per_row_ops`` is the heaviest consumer's per-vector op count
-    (tables x planes x d for LSH buckets, n_centroids x d for the
-    IVF/PQ quantizers)."""
-    est_bytes = int(
-        str(
-            spark.table("embeddings")
-            ._jdf.queryExecution()
-            .optimizedPlan()
-            .stats()
-            .sizeInBytes()
-        )
-    )
-    # ~720 estimated bytes per embeddings row (id + 64-float array)
-    rows_est = max(1, est_bytes // 720)
-    # r11 (VERDICT-r10 #1): cap by SESSION parallelism, not a literal
-    # core count — at cluster scale the conf/defaultParallelism carry
-    # the real executor width, and a hard 32 would serialize the
-    # interpreted array kernels over the op-heaviest table in the
-    # family (the same derivation graph._edge_table uses).
-    cap = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-    )
-    width = min(cap, max(1, round(rows_est * per_row_ops / 750_000)))
-    return (
-        spark.sql(
-            """SELECT vec_id,
-                 transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS earr
-               FROM embeddings
-               WHERE embedding IS NOT NULL AND size(embedding) > 0"""
-        )
-        .selectExpr(
-            "vec_id",
-            "earr",
-            "aggregate(earr, CAST(0 AS BIGINT), (acc, x) -> acc + x * x) AS n2",
-        )
-        .repartition(width)
-        .localCheckpoint(eager=True)
-    )
-
-
-def _ann_ranked_arr(spark: SparkSession, cand, vecs):
-    """Candidate scoring tail over (query_id, vec_id) pairs: exact-int
-    dots + cosine + per-query rank — the `norms`/`dots`/`scored`/
-    `ranked` chain of _ANN_SCORE_TAIL with both vector sides served
-    from the materialized array table (broadcast: it is
-    embedding-count-sized, kilobytes per thousand vectors)."""
-    return spark.sql(
-        f"""
-        SELECT query_id, neighbor_id, cos_raw,
-          row_number() OVER (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id) AS rn
-        FROM (
-          SELECT c.query_id, c.vec_id AS neighbor_id,
-            CAST({_arr_dot('a.earr', 'b.earr')} AS DOUBLE)
-              / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) AS cos_raw
-          FROM {{cand}} c
-          JOIN {{v}} a ON a.vec_id = c.query_id
-          JOIN {{v}} b ON b.vec_id = c.vec_id
-        ) scored
-        """,
-        cand=cand,
-        v=vecs,
-    )
-
-
-def _ann_recall_arr(spark: SparkSession, vecs, approx):
-    """Exact-cosine recall@10 core over the array table + an {approx}
-    frame — same arithmetic as _EXACT_TOPK_CORE / _recall_sql's tail
-    (brute force restricted to the 5-query ground-truth set)."""
-    return spark.sql(
-        f"""
-        WITH qv AS (SELECT vec_id AS query_id, earr AS qarr, n2 AS qn2 FROM {{v}} WHERE vec_id < 5),
-        exact AS (
-          SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, b.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.query_id ORDER BY
-                CAST({_arr_dot('q.qarr', 'b.earr')} AS DOUBLE)
-                  / (sqrt(CAST(q.qn2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) DESC,
-                b.vec_id) AS rn
-            FROM qv q JOIN {{v}} b ON b.vec_id != q.query_id
-          ) ex WHERE rn <= 10
-        )
-        SELECT e.query_id,
-          CAST(sum(CASE WHEN a.neighbor_id IS NULL THEN 0 ELSE 1 END) AS BIGINT)
-            AS hits
-        FROM exact e
-        LEFT JOIN {{approx}} a
-          ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-        GROUP BY e.query_id ORDER BY e.query_id
-        """,
-        v=vecs,
-        approx=approx,
-    )
-
-
-def _lsh_ranked_spark(
-    spark: SparkSession, vecs, d: int, n_planes: int = 6, n_tables: int = 8
-):
-    """LSH candidate ranking over the array table. The md5-parity
-    plane signs depend only on (tbl, plane, i) — pure constants — so
-    they are evaluated at construction time (hashlib.md5 == the same
-    md5 both engines' SQL computes) and folded into the bucket
-    expressions as literal sign arrays; each (vec, tbl) bucket is then
-    one zip_with dot per plane. The bucket table (n_tables rows/vec)
-    is checkpointed before its self-join (the minhash_lsh_candidates
-    lesson: a lazy self-join computes the signature pipeline twice).
-    Arithmetic identical to _lsh_md5_sql."""
+def _md5_plane_signs(d: int, n_planes: int = 6, n_tables: int = 8) -> list:
+    """The md5-parity plane signs of _lsh_md5_sql as a [table][plane][i]
+    matrix. They depend only on (tbl, plane, i), so hashlib.md5 computes
+    them at construction time, equal to the md5 both engines' SQL runs."""
     import hashlib
 
     def sgn(t: int, p: int, i: int) -> int:
         h = hashlib.md5(f"{t}|{p}|{i}".encode()).hexdigest()
         return 1 if int(h[0], 16) % 2 == 1 else -1
 
-    structs = []
-    for t in range(n_tables):
-        parts = []
-        for p in range(n_planes):
-            lits = ",".join(str(sgn(t, p, i)) for i in range(1, d + 1))
-            s = _arr_dot(f"array({lits})", "earr")
-            parts.append(
-                f"(CASE WHEN {s} >= 0 THEN CAST({1 << p} AS BIGINT)"
-                " ELSE CAST(0 AS BIGINT) END)"
-            )
-        structs.append(
-            f"named_struct('tbl', {t}, 'bucket', {' + '.join(parts)})"
-        )
-    buckets = spark.sql(
-        f"SELECT vec_id, eb.tbl, eb.bucket FROM {{v}} "
-        f"LATERAL VIEW explode(array({','.join(structs)})) E AS eb",
-        v=vecs,
-    ).localCheckpoint(eager=True)
-    cand = spark.sql(
-        """
-        SELECT DISTINCT q.vec_id AS query_id, c.vec_id
-        FROM {bk} q
-        JOIN {bk} c ON c.tbl = q.tbl AND c.bucket = q.bucket AND c.vec_id != q.vec_id
-        WHERE q.vec_id < 5
-        """,
-        bk=buckets,
-    )
-    return _ann_ranked_arr(spark, cand, vecs)
-
-
-def _ivf_vcs_expr(spark: SparkSession, vecs, n_centroids: int = 16,
-                  where: str = "TRUE"):
-    """Voronoi cosine table (the `vcs` CTE of _ivf_assign_ctes) over
-    the array table as a LAZY frame. The seed-centroid side is
-    n_centroids rows (broadcast); each (vec, cent) cosine is one
-    zip_with dot — arithmetic identical to the cflat/cnorm/vc/vcs CTE
-    chain."""
-    cvecs = spark.sql(
-        f"SELECT vec_id AS cent_id, earr AS carr, n2 AS cn2 FROM {{v}} "
-        f"ORDER BY vec_id LIMIT {n_centroids}",
-        v=vecs,
-    )
-    return spark.sql(
-        f"""
-        SELECT v.vec_id, c.cent_id,
-          CAST({_arr_dot('v.earr', 'c.carr')} AS DOUBLE)
-            / (sqrt(CAST(v.n2 AS DOUBLE)) * sqrt(CAST(c.cn2 AS DOUBLE))) AS cos_c
-        FROM {{v}} v CROSS JOIN {{c}} c
-        WHERE {where}
-        """,
-        v=vecs,
-        c=cvecs,
-    )
-
-
-def _ivf_assign_ckpt(spark: SparkSession, vecs):
-    """Voronoi assignment (nearest seeded centroid per vector, the
-    struct-max argmax — r10 wave 2) materialized ONCE per construction.
-    r11 (guide §2.3 applied to the materialization, the PQ-codes
-    device): the checkpoint previously stored the full n_vecs x
-    n_centroids cosine table and the downstream query re-read and
-    re-aggregated it; the argmax now folds INTO the checkpoint job
-    (map-side combinable), so the materialized frame is ONE row per
-    vector (16x smaller) and the probe side recomputes the 5 query
-    vectors' cosines (n_queries x n_centroids — metadata-scale)."""
-    return (
-        spark.sql(
-            """
-            SELECT vec_id, CAST(-m.g AS BIGINT) AS cent_id FROM (
-              SELECT vec_id, max(named_struct('c', cos_c, 'g', -cent_id)) AS m
-              FROM {vcs} GROUP BY vec_id
-            ) ar
-            """,
-            vcs=_ivf_vcs_expr(spark, vecs),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-
-def _ivf_ranked_spark(spark: SparkSession, vecs, assign, n_probe: int = 4):
-    """Seeded-IVF candidate ranking over materialized vecs + assign —
-    arithmetic identical to _ivf_seeded_sql; the probe side recomputes
-    the 5 query vectors' cosines (r11, see _ivf_assign_ckpt).
-
-    The probe side is BROADCAST by hint (guide §3.1): it is bounded at
-    n_queries x n_probe rows BY CONSTRUCTION (20 here) at any scale,
-    but it hangs off a window over a checkpointed RDD, so the planner
-    has no stats and was picking a SortMergeJoin — two exchanges and
-    two sorts of which one side is the data-sized assign table
-    (plan-verified SMJ -> BHJ, rows identical, paired A/B 1.07x)."""
-    cand = spark.sql(
-        f"""
-        WITH probe AS (
-          SELECT vec_id AS query_id, cent_id FROM (
-            SELECT vec_id, cent_id,
-              row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, cent_id) AS rn
-            FROM {{vcs_q}}
-          ) pr WHERE rn <= {n_probe}
-        )
-        SELECT /*+ BROADCAST(p) */ DISTINCT p.query_id, a.vec_id
-        FROM probe p JOIN {{a}} a ON a.cent_id = p.cent_id AND a.vec_id != p.query_id
-        """,
-        vcs_q=_ivf_vcs_expr(spark, vecs, where="v.vec_id < 5"),
-        a=assign,
-    )
-    return _ann_ranked_arr(spark, cand, vecs)
+    return [
+        [[sgn(t, p, i) for i in range(1, d + 1)] for p in range(n_planes)]
+        for t in range(n_tables)
+    ]
 
 
 @query("ns_lsh_ann_topk_md5", oracle=_lsh_md5_sql(_ANN_DUCK))
 def ns_lsh_ann_topk_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vecs = _ann_vecs_ckpt(spark, per_row_ops=48 * 64)
-    ranked = _lsh_ranked_spark(spark, vecs, _ann_dim(spark))
-    return spark.sql(
-        "SELECT query_id, neighbor_id, round(cos_raw, 6) AS cosine, "
-        "CAST(rn AS INT) AS rank FROM {r} WHERE rn <= 10 ORDER BY query_id, rank",
-        r=ranked,
-    )
+    emb = spark.table("embeddings")
+    vecs = similarity.exact_int_vectors(emb, 6 * 8)
+    bk = similarity.lsh_buckets(vecs, _md5_plane_signs(similarity.embedding_dim(emb)))
+    cand = similarity.lsh_candidates(bk, bk.where("vec_id < 5"))
+    return similarity.top_k(similarity.rank_candidates(cand, vecs), 10)
 
 
 @query("ns_lsh_ann_recall10", oracle=_recall_sql(_lsh_md5_sql(_ANN_DUCK)))
 def ns_lsh_ann_recall10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vecs = _ann_vecs_ckpt(spark, per_row_ops=48 * 64)
-    approx = (
-        _lsh_ranked_spark(spark, vecs, _ann_dim(spark))
-        .where("rn <= 10")
-        .select("query_id", "neighbor_id")
-    )
-    return _ann_recall_arr(spark, vecs, approx)
+    emb = spark.table("embeddings")
+    vecs = similarity.exact_int_vectors(emb, 6 * 8)
+    bk = similarity.lsh_buckets(vecs, _md5_plane_signs(similarity.embedding_dim(emb)))
+    cand = similarity.lsh_candidates(bk, bk.where("vec_id < 5"))
+    approx = similarity.rank_candidates(cand, vecs).where("rn <= 10")
+    exact = similarity.cosine_topk(emb, query_ids=[0, 1, 2, 3, 4], k=10)
+    return similarity.recall_hits(exact, approx)
 
 
 @query("ns_ivf_ann_topk_seeded", oracle=_ivf_seeded_sql(_ANN_DUCK))
 def ns_ivf_ann_topk_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vecs = _ann_vecs_ckpt(spark, per_row_ops=16 * 64)
-    ranked = _ivf_ranked_spark(spark, vecs, _ivf_assign_ckpt(spark, vecs))
-    return spark.sql(
-        "SELECT query_id, neighbor_id, round(cos_raw, 6) AS cosine, "
-        "CAST(rn AS INT) AS rank FROM {r} WHERE rn <= 10 ORDER BY query_id, rank",
-        r=ranked,
-    )
+    vecs = similarity.exact_int_vectors(spark.table("embeddings"), 16)
+    cents = similarity.seed_centroids(vecs, 16)
+    assign = similarity.nearest_centroid(vecs, cents)
+    cand = similarity.ivf_candidates(vecs.where("vec_id < 5"), cents, assign, 4)
+    return similarity.top_k(similarity.rank_candidates(cand, vecs), 10)
 
 
 @query("ns_ivf_ann_recall10", oracle=_recall_sql(_ivf_seeded_sql(_ANN_DUCK)))
 def ns_ivf_ann_recall10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vecs = _ann_vecs_ckpt(spark, per_row_ops=16 * 64)
-    approx = (
-        _ivf_ranked_spark(spark, vecs, _ivf_assign_ckpt(spark, vecs))
-        .where("rn <= 10")
-        .select("query_id", "neighbor_id")
-    )
-    return _ann_recall_arr(spark, vecs, approx)
+    emb = spark.table("embeddings")
+    vecs = similarity.exact_int_vectors(emb, 16)
+    cents = similarity.seed_centroids(vecs, 16)
+    assign = similarity.nearest_centroid(vecs, cents)
+    cand = similarity.ivf_candidates(vecs.where("vec_id < 5"), cents, assign, 4)
+    approx = similarity.rank_candidates(cand, vecs).where("rn <= 10")
+    exact = similarity.cosine_topk(emb, query_ids=[0, 1, 2, 3, 4], k=10)
+    return similarity.recall_hits(exact, approx)
 
 
 from .operators.sampling import _bucket_expr as _sampling_bucket_expr  # noqa: E402
@@ -2530,16 +2276,10 @@ def _semdedup_sql(d: dict, n_centroids: int = 16, tau: float = 0.35) -> str:
 @query("ns_semantic_dedup", oracle=_semdedup_sql(_ANN_DUCK))
 def ns_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup keep/drop decisions over seeded clusters (see
-    _semdedup_sql). r10 OPTIMIZATION: array-native Spark side (see the
-    comment block above _ann_vecs_ckpt) — vecs / vcs / assign
-    materialized once per construction, intra-cluster pair cosines are
-    per-row zip_with dots; arithmetic and oracle unchanged."""
-    vecs = _ann_vecs_ckpt(spark, per_row_ops=16 * 64)
-    # r11: the vcs cosine table was checkpointed ONLY to feed this
-    # assign checkpoint — the argmax now folds into one materialization
-    # job (the PQ-codes device; see _ivf_assign_ckpt), dropping a
-    # blocking job and a 16x-larger intermediate.
-    assign = _ivf_assign_ckpt(spark, vecs)
+    _semdedup_sql): the seeded-IVF assignment of operators/similarity.py,
+    then intra-cluster pair cosines as per-row zip_with dots."""
+    vecs = similarity.exact_int_vectors(spark.table("embeddings"), 16)
+    assign = similarity.nearest_centroid(vecs, similarity.seed_centroids(vecs, 16))
     return spark.sql(
         f"""
         WITH pairs AS (
@@ -2549,7 +2289,7 @@ def ns_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         pcos AS (
           SELECT p.va, p.vb,
-            CAST({_arr_dot('fa.earr', 'fb.earr')} AS DOUBLE)
+            CAST({similarity.arr_dot_sql('fa.earr', 'fb.earr')} AS DOUBLE)
               / (sqrt(CAST(fa.n2 AS DOUBLE)) * sqrt(CAST(fb.n2 AS DOUBLE))) AS c
           FROM pairs p
           JOIN {{flat}} fa ON fa.vec_id = p.va
@@ -3445,119 +3185,16 @@ def _pq_recall_sql(d: dict, dv: str, m: int = 4, n_codes: int = 16) -> str:
     """
 
 
-def _pq_dtab_expr(
-    spark: SparkSession, vecs, d: int, m: int = 4, n_codes: int = 16,
-    where: str = "TRUE",
-):
-    """PQ subdistance table (the `dtab` CTE of _pq_ctes) over the
-    array table as a LAZY frame. The subspace of 1-based index ``i`` is
-    ``((i-1)*m) div nd`` (nd = the global max dimensionality, same as
-    the dim CTE), so subspace ``s`` covers the contiguous index range
-    [ceil(s*nd/m)+1, ceil((s+1)*nd/m)] — computed here in Python from
-    ``d``. r11: the squared differences are ONE ``zip_with`` over the
-    full arrays shared by all subspaces, then one slice-fold per
-    subspace — identical values to the old per-subspace
-    slice/slice/zip chains (slicing a zip of full arrays == zipping
-    the slices: absent-on-either-side indices are NULL either way and
-    coalesce to 0, exactly like the join on (i, s)) with ~3x fewer
-    array allocations per (vec, centroid) row."""
-    cvecs = spark.sql(
-        f"SELECT vec_id AS cent_id, earr AS carr FROM {{v}} "
-        f"ORDER BY vec_id LIMIT {n_codes}",
-        v=vecs,
-    )
-    structs = []
-    for s in range(m):
-        lo = -((-s * d) // m) + 1
-        hi = -((-(s + 1) * d) // m)
-        n = hi - lo + 1
-        d2 = (
-            f"aggregate(slice(dsq, {lo}, {n}), "
-            "CAST(0 AS BIGINT), (acc, v) -> acc + coalesce(v, CAST(0 AS BIGINT)))"
-        )
-        structs.append(f"named_struct('s', CAST({s} AS BIGINT), 'd2', {d2})")
-    return spark.sql(
-        f"""
-        SELECT p.vec_id, sd.s, p.cent_id, sd.d2
-        FROM (
-          SELECT v.vec_id, c.cent_id,
-            zip_with(earr, carr, (x, y) -> (x - y) * (x - y)) AS dsq
-          FROM {{v}} v CROSS JOIN {{c}} c
-          WHERE {where}
-        ) p
-        LATERAL VIEW explode(array({','.join(structs)})) E AS sd
-        """,
-        v=vecs,
-        c=cvecs,
-    )
-
-
-def _pq_codes_ckpt(spark: SparkSession, vecs, d: int):
-    """PQ code assignment (the `codes` CTE: nearest sub-centroid per
-    (vec, subspace) as a map-side-combinable struct-min — r10 wave 2)
-    materialized ONCE per construction. r11 (guide §2.3 "aggregate
-    before you shuffle" applied to the materialization itself): the
-    checkpoint previously stored the full n_vecs x n_codes x m
-    subdistance table and the final job re-read and re-aggregated it;
-    the argmin now folds INTO the checkpoint job, so the materialized
-    frame is n_vecs x m code rows (16x smaller) and the query-side
-    distances are recomputed from the 5 query vectors (n_queries x
-    n_codes x m rows — metadata-scale) instead of being stored."""
-    return (
-        spark.sql(
-            """
-            SELECT vec_id, s, m.cent_id AS code FROM (
-              SELECT vec_id, s, min(named_struct('d2', d2, 'cent_id', cent_id)) AS m
-              FROM {dtab} GROUP BY vec_id, s
-            ) cr
-            """,
-            dtab=_pq_dtab_expr(spark, vecs, d),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-
-def _pq_ranked_spark(spark: SparkSession, vecs, codes, d: int):
-    """ADC ranking over the materialized code table — arithmetic
-    identical to _pq_ctes' codes/qt/adc/rankedpq chain; the query
-    distance table is recomputed from the 5 query vectors (r11, see
-    _pq_codes_ckpt).
-
-    The qt side is BROADCAST by hint (guide §3.1): it is bounded at
-    n_queries x n_codes x m rows BY CONSTRUCTION (320 here) at any
-    scale, but the stats-less checkpoint RDDs made the planner pick a
-    SortMergeJoin that hash-shuffled the DATA-SIZED codes table on
-    (s, code) — a key that has nothing to do with the downstream
-    (query_id, neighbor_id) grouping. The broadcast removes that
-    data-sized exchange outright (plan-verified SMJ -> BHJ, rows
-    identical, paired A/B 1.05-1.10x locally)."""
-    return spark.sql(
-        """
-        WITH adc AS (
-          SELECT /*+ BROADCAST(qt) */ qt.query_id, v.vec_id AS neighbor_id,
-            CAST(sum(qt.d2) AS BIGINT) AS adc_d2
-          FROM {codes} v JOIN (
-            SELECT vec_id AS query_id, s, cent_id, d2 FROM {qt}
-          ) qt ON qt.s = v.s AND qt.cent_id = v.code
-          WHERE v.vec_id != qt.query_id
-          GROUP BY 1, 2
-        )
-        SELECT query_id, neighbor_id, adc_d2,
-          row_number() OVER (PARTITION BY query_id ORDER BY adc_d2, neighbor_id) AS rn
-        FROM adc
-        """,
-        codes=codes,
-        qt=_pq_dtab_expr(spark, vecs, d, where="v.vec_id < 5"),
-    )
-
-
 @query("ns_pq_ann_topk_seeded", oracle=_pq_seeded_sql(_ANN_DUCK, "//"))
 def ns_pq_ann_topk_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-ADC top-10 with seeded codebooks; the ranking key is an
     exact BIGINT — zero floats in the ordering (see _pq_ctes)."""
-    vecs = _ann_vecs_ckpt(spark, per_row_ops=16 * 64)
-    d = _ann_dim(spark)
-    ranked = _pq_ranked_spark(spark, vecs, _pq_codes_ckpt(spark, vecs, d), d)
+    emb = spark.table("embeddings")
+    vecs = similarity.exact_int_vectors(emb, 16)
+    d = similarity.embedding_dim(emb)
+    cents = similarity.seed_centroids(vecs, 16)
+    codes = similarity.pq_codes(vecs, cents, d, 4)
+    ranked = similarity.pq_ranked(vecs.where("vec_id < 5"), cents, codes, d, 4)
     return spark.sql(
         "SELECT query_id, neighbor_id, adc_d2, CAST(rn AS INT) AS rank "
         "FROM {r} WHERE rn <= 10 ORDER BY query_id, rank",
@@ -3569,35 +3206,26 @@ def ns_pq_ann_topk_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ns_pq_ann_recall10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 of PQ-ADC vs exact squared-L2 — quantization loss
     measured, not assumed (see _pq_recall_sql)."""
-    vecs = _ann_vecs_ckpt(spark, per_row_ops=16 * 64)
-    d = _ann_dim(spark)
-    approx = (
-        _pq_ranked_spark(spark, vecs, _pq_codes_ckpt(spark, vecs, d), d)
-        .where("rn <= 10")
-        .select("query_id", "neighbor_id")
-    )
-    return spark.sql(
+    emb = spark.table("embeddings")
+    vecs = similarity.exact_int_vectors(emb, 16)
+    d = similarity.embedding_dim(emb)
+    cents = similarity.seed_centroids(vecs, 16)
+    codes = similarity.pq_codes(vecs, cents, d, 4)
+    queries = vecs.where("vec_id < 5")
+    approx = similarity.pq_ranked(queries, cents, codes, d, 4).where("rn <= 10")
+    exact = spark.sql(
         f"""
-        WITH qv AS (SELECT vec_id AS query_id, earr AS qarr, n2 AS qn2 FROM {{v}} WHERE vec_id < 5),
-        exact AS (
-          SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, b.vec_id AS neighbor_id,
-              row_number() OVER (PARTITION BY q.query_id ORDER BY
-                (q.qn2 + b.n2 - 2 * {_arr_dot('q.qarr', 'b.earr')}), b.vec_id) AS rn
-            FROM qv q JOIN {{v}} b ON b.vec_id != q.query_id
-          ) ex WHERE rn <= 10
-        )
-        SELECT e.query_id,
-          CAST(sum(CASE WHEN a.neighbor_id IS NULL THEN 0 ELSE 1 END) AS BIGINT)
-            AS hits
-        FROM exact e
-        LEFT JOIN {{approx}} a
-          ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-        GROUP BY e.query_id ORDER BY e.query_id
+        SELECT query_id, neighbor_id FROM (
+          SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
+            row_number() OVER (PARTITION BY q.vec_id ORDER BY
+              (q.n2 + b.n2 - 2 * {similarity.arr_dot_sql('q.earr', 'b.earr')}), b.vec_id) AS rn
+          FROM {{q}} q JOIN {{v}} b ON b.vec_id != q.vec_id
+        ) ex WHERE rn <= 10
         """,
+        q=queries,
         v=vecs,
-        approx=approx,
     )
+    return similarity.recall_hits(exact, approx)
 
 
 _CANONICAL_TAIL = """,

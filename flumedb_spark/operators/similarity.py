@@ -2,10 +2,14 @@
 
 - ``cosine_topk``: brute-force exact top-k — the baseline. All arithmetic
   is JVM higher-order functions (zip_with/aggregate); no UDF.
-- ``lsh_ann_topk``: random-hyperplane LSH bucketing — the scale path:
-  candidates share a hash bucket, so the join is equi on the sketch, not
-  a cross product. Hyperplanes are derived deterministically from
-  xxhash64, so results are reproducible without a stored model.
+- ``lsh_ann_topk`` / ``ivf_ann_topk``: the scale paths. Candidates share
+  a hyperplane hash bucket or a probed centroid list, so the join is
+  equi on the bucket or list, not a cross product. Both are built on the
+  ANN core below (exact-int vector table, literal-plane LSH buckets,
+  struct-argmax centroid assignment, PQ codes), which the catalog's
+  oracle-checked ANN rows call too. Hyperplanes come from a fixed-seed
+  draw and centroids from RNG-free k-means, so results are reproducible
+  without a stored model.
 
 Exact cross-engine arithmetic: embeddings are float32; we scale each
 component to an integer (round(x * 1e6)) so dot products and norms are
@@ -126,103 +130,174 @@ def near_dup_pairs(
     )
 
 
-# ---- LSH ANN (scale path) ------------------------------------------
+# ---- ANN core ---------------------------------------------------------
+#
+# One exact-int vector table, and array expressions over it: a bucket
+# sign, a centroid cosine, a PQ subdistance and a candidate dot are each
+# a within-row zip_with/aggregate reduction, so no step explodes vectors
+# into per-component rows. The catalog's oracle-checked ANN rows and the
+# library functions below compose the same primitives; they differ only
+# in the plane matrix and the centroid frame they pass in. Each
+# primitive takes its query side as a frame, so a caller restricts the
+# queries with any filter (``vec_id < 5``, ``isin(query_ids)``).
+
+_QUANTIZE = "transform({}, x -> CAST(round(CAST(x AS DOUBLE) * " + str(SCALE) + ") AS BIGINT))"
+_NORM2 = "aggregate({}, CAST(0 AS BIGINT), (acc, x) -> acc + x * x)"
 
 
-def _hyperplane_sign(vec: Column, table: int, plane: int) -> Column:
-    """Sign of <vec, r> where r[i] = ±1 derived from
-    xxhash64(table, plane, i) — a deterministic random hyperplane,
-    independent per (table, plane)."""
-    signed = F.transform(
-        vec,
-        lambda x, i: F.when(
-            F.xxhash64(F.lit(table), F.lit(plane), i).bitwiseAND(F.lit(1)) == 1,
-            _iscale(x),
-        ).otherwise(-_iscale(x)),
-    )
-    total = F.aggregate(signed, F.lit(0).cast("long"), lambda acc, v: acc + v)
-    return (total >= 0).cast("long")
+def arr_dot_sql(a: str, b: str) -> str:
+    """SQL text of the exact BIGINT dot product of two bigint arrays.
 
-
-def lsh_bucket(vec: Column, n_planes: int = 8, table: int = 0) -> Column:
-    """n-bit random-hyperplane sketch -> bucket id (one hash table)."""
-    bucket = F.lit(0).cast("long")
-    for p in range(n_planes):
-        bucket = bucket * 2 + _hyperplane_sign(vec, table, p)
-    return bucket
-
-
-def lsh_buckets(vec: Column, n_planes: int, n_tables: int) -> Column:
-    """array of (table, bucket) structs — one sketch per hash table.
-
-    AND over ``n_planes`` bits within a table (precision), OR across
-    ``n_tables`` tables (recall): the same AND/OR amplification as
-    MinHash banding. A single table has no recall knob — a true
-    neighbor that flips one of its 8 bits is lost forever; with L
-    tables it is found unless it misses in every one.
-
-    JVM/expression form — fine for a handful of planes; the hot path
-    (:func:`lsh_sketch_np`) computes the same structure as one BLAS
-    matmul per Arrow batch, because L*b interpreted higher-order-
-    function passes per vector dominate runtime long before the hash
-    math does.
-    """
-    return F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("table"),
-                lsh_bucket(vec, n_planes, t).alias("bucket"),
-            )
-            for t in range(n_tables)
-        ]
-    )
-
-
-def lsh_sketch_np(
-    embeddings: DataFrame,
-    n_planes: int,
-    n_tables: int,
-    vec_col: str = "embedding",
-    seed: int = 0,
-) -> DataFrame:
-    """(vec_id, table, bucket) via one matmul per Arrow batch.
-
-    The plane matrix R (d x L*b, entries ±1) derives from a fixed-seed
-    Mersenne Twister — deterministic run-to-run and machine-to-machine.
-    sign(X @ R) yields every table's every bit in a single BLAS call;
-    bits pack into per-table bucket ids. At 100 TB this is the shape
-    that survives: R is broadcast once inside the closure and each
-    executor does (batch x d) @ (d x L*b).
-    """
-    import numpy as np
-    import pandas as pd
-
-    total = n_planes * n_tables
-
-    def run(batches):
-        R = None
-        for pdf in batches:
-            mat = np.array([list(v) for v in pdf["emb"]], dtype=np.float64)
-            if R is None:
-                d = mat.shape[1]
-                rng = np.random.RandomState(seed)
-                R = rng.randint(0, 2, size=(d, total)) * 2 - 1
-            bits = (mat @ R) >= 0  # (batch, L*b)
-            weights = 1 << np.arange(n_planes - 1, -1, -1)
-            buckets = bits.reshape(-1, n_tables, n_planes) @ weights  # (batch, L)
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].values, n_tables),
-                    "table": np.tile(np.arange(n_tables), n),
-                    "bucket": buckets.reshape(-1),
-                }
-            )
-
+    An index present on only one side contributes nothing (zip_with pads
+    with NULL, coalesced to 0), the same as summing ``a.e * b.e`` over a
+    join of the exploded components on their index."""
     return (
-        _spread(embeddings)
-        .select("vec_id", F.col(vec_col).alias("emb"))
-        .mapInPandas(run, "vec_id long, table int, bucket long")
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+        "CAST(0 AS BIGINT), (acc, v) -> acc + coalesce(v, CAST(0 AS BIGINT)))"
+    )
+
+
+def embedding_dim(embeddings: DataFrame, vec_col: str = "embedding") -> int:
+    """The largest vector length: one small aggregate."""
+    return int(embeddings.select(F.max(F.size(vec_col))).head()[0])
+
+
+def exact_int_vectors(
+    embeddings: DataFrame, ops_per_element: int, vec_col: str = "embedding"
+) -> DataFrame:
+    """``(vec_id, earr, n2)``: one row per vector with its components
+    scaled to exact integers (``round(x * 1e6)``) and its squared norm,
+    materialized once with ``localCheckpoint``. Null and empty vectors
+    are dropped.
+
+    The width is size-adaptive: about 750k interpreted array ops per
+    task, estimated from the input's optimizer statistics (metadata
+    only, no job) and capped by the session's parallelism, the same
+    derivation ``graph._edge_table`` uses. ``ops_per_element`` is the
+    heaviest consumer's work per vector component: planes x tables for
+    LSH buckets, centroids for the IVF and PQ quantizers."""
+    spark = embeddings.sparkSession
+    est_bytes = int(
+        str(embeddings._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    )
+    # ~720 estimated bytes per row of a 64-component float vector
+    elements_est = max(1, est_bytes // 720) * 64
+    cap = max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
+    width = min(cap, max(1, round(elements_est * ops_per_element / 750_000)))
+    v = f"`{vec_col}`"
+    return (
+        spark.sql(
+            f"SELECT vec_id, {_QUANTIZE.format(v)} AS earr FROM {{e}} "
+            f"WHERE {v} IS NOT NULL AND size({v}) > 0",
+            e=embeddings,
+        )
+        .selectExpr("vec_id", "earr", f"{_NORM2.format('earr')} AS n2")
+        .repartition(width)
+        .localCheckpoint(eager=True)
+    )
+
+
+def rank_candidates(cand: DataFrame, vecs: DataFrame) -> DataFrame:
+    """Score ``(query_id, vec_id)`` candidate pairs and rank them per
+    query: ``(query_id, neighbor_id, cos_raw, rn)``, ``rn`` by cosine
+    descending, then neighbor id. Both vector sides are read from the
+    exact-int table, so the cosine is the one :func:`cosine_topk`
+    computes for the same pair, bit for bit."""
+    return cand.sparkSession.sql(
+        f"""
+        SELECT query_id, neighbor_id, cos_raw,
+          row_number() OVER (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id) AS rn
+        FROM (
+          SELECT c.query_id, c.vec_id AS neighbor_id,
+            CAST({arr_dot_sql('a.earr', 'b.earr')} AS DOUBLE)
+              / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) AS cos_raw
+          FROM {{cand}} c
+          JOIN {{v}} a ON a.vec_id = c.query_id
+          JOIN {{v}} b ON b.vec_id = c.vec_id
+        ) scored
+        """,
+        cand=cand,
+        v=vecs,
+    )
+
+
+def top_k(ranked: DataFrame, k: int) -> DataFrame:
+    """The first ``k`` rows per query of :func:`rank_candidates`:
+    ``(query_id, neighbor_id, cosine, rank)``, ordered."""
+    return ranked.sparkSession.sql(
+        "SELECT query_id, neighbor_id, round(cos_raw, 6) AS cosine, "
+        f"CAST(rn AS INT) AS rank FROM {{r}} WHERE rn <= {k} ORDER BY query_id, rank",
+        r=ranked,
+    )
+
+
+def recall_hits(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """``(query_id, hits)``: per query, how many of its exact neighbours
+    the approximate set also holds, as an exact integer. Joined from the
+    exact side, so a query whose approximate set misses every exact
+    neighbour reports ``hits = 0`` instead of vanishing."""
+    return exact.sparkSession.sql(
+        """
+        SELECT e.query_id,
+          CAST(sum(CASE WHEN a.neighbor_id IS NULL THEN 0 ELSE 1 END) AS BIGINT)
+            AS hits
+        FROM {exact} e
+        LEFT JOIN {approx} a
+          ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
+        GROUP BY e.query_id ORDER BY e.query_id
+        """,
+        exact=exact,
+        approx=approx,
+    )
+
+
+# ---- LSH ------------------------------------------------------------------
+
+
+def lsh_buckets(vecs: DataFrame, planes) -> DataFrame:
+    """``(vec_id, tbl, bucket)``: one row per vector and hash table.
+
+    ``planes[t][p]`` is the ±1 sign vector of plane ``p`` in table
+    ``t``. A vector's bucket in table ``t`` sets bit ``p`` when its
+    exact-int dot with that plane is >= 0: AND over the planes of a
+    table (precision), OR across tables through the candidate join
+    (recall). The planes are constants, so they are folded into the
+    expression as literal arrays, one zip_with dot per plane. The table
+    is checkpointed before its self-join, because a lazy self-join runs
+    the bucket pipeline once per side (docs/SCALING.md #4)."""
+    structs = []
+    for t, table in enumerate(planes):
+        parts = []
+        for p, signs in enumerate(table):
+            lits = ",".join(str(int(x)) for x in signs)
+            s = arr_dot_sql(f"array({lits})", "earr")
+            parts.append(
+                f"(CASE WHEN {s} >= 0 THEN CAST({1 << p} AS BIGINT)"
+                " ELSE CAST(0 AS BIGINT) END)"
+            )
+        structs.append(f"named_struct('tbl', {t}, 'bucket', {' + '.join(parts)})")
+    return vecs.sparkSession.sql(
+        f"SELECT vec_id, eb.tbl, eb.bucket FROM {{v}} "
+        f"LATERAL VIEW explode(array({','.join(structs)})) E AS eb",
+        v=vecs,
+    ).localCheckpoint(eager=True)
+
+
+def lsh_candidates(buckets: DataFrame, queries: DataFrame) -> DataFrame:
+    """``(query_id, vec_id)``: every other vector sharing a bucket with a
+    query in any table, deduplicated across tables before any scoring.
+    ``queries`` is a subset of the rows of ``buckets``."""
+    return buckets.sparkSession.sql(
+        """
+        SELECT DISTINCT q.vec_id AS query_id, c.vec_id
+        FROM {q} q
+        JOIN {bk} c ON c.tbl = q.tbl AND c.bucket = q.bucket AND c.vec_id != q.vec_id
+        """,
+        q=queries,
+        bk=buckets,
     )
 
 
@@ -235,82 +310,133 @@ def lsh_ann_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: score only pairs sharing a bucket in ANY of
-    ``n_tables`` hyperplane hash tables (OR-amplification).
+    ``n_tables`` random-hyperplane hash tables (OR-amplification).
 
     Recall/cost knobs: more planes = smaller buckets = fewer candidates
     (precision); more tables = more chances to catch a true neighbor
-    (recall). Defaults 6/8 measure >=0.9 recall@10 vs exact cosine on
-    the synthetic embeddings. The per-table bucket join replaces the
-    cross product, and candidate pairs are deduplicated BEFORE scoring,
-    so each pair is scored once no matter how many tables matched — at
-    100x corpus growth the cost is (candidates x d), never N^2.
+    (recall). The plane matrix is a fixed-seed Mersenne Twister draw
+    (``np.random.RandomState(0)``), so results are reproducible run to
+    run and machine to machine. Candidate pairs are deduplicated before
+    scoring, so at 100x corpus growth the cost is (candidates x d),
+    never N^2."""
+    import numpy as np
 
-    The sketch table is MATERIALIZED once (localCheckpoint) before the
-    bucket self-join — the broadcast query side would otherwise
-    recompute the full corpus sketch (the self-join recompute trap,
-    docs/SCALING.md #4). Candidate scoring stays on the exact-int JVM
-    path deliberately: it is the SAME scoring expression as
-    :func:`cosine_topk`, so any (query, neighbor) pair the two paths
-    share carries a bit-identical cosine (pinned by
-    tests/test_operators.py) — a BLAS variant measured only ~0.15s
-    faster at sf0.1 and loses that property to ulps.
-    """
-    embeddings = _spread(embeddings)
-    sketches = lsh_sketch_np(embeddings, n_planes, n_tables, vec_col).localCheckpoint(
-        eager=True
-    )
-    q = sketches.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("table").alias("qtable"),
-        F.col("bucket").alias("qbucket"),
-    )
-    if query_ids is not None:
-        q = q.where(F.col("query_id").isin(query_ids))
-    # candidate ids per query, deduped across tables before any scoring
-    cand = (
-        sketches.join(
-            F.broadcast(q),
-            (F.col("table") == F.col("qtable"))
-            & (F.col("bucket") == F.col("qbucket"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select("query_id", "vec_id")
-        .distinct()
-    )
-    corpus = embeddings.select(
-        F.col("vec_id"), F.col(vec_col).alias("vec"), int_norm2(F.col(vec_col)).alias("n2")
-    )
-    qvecs = corpus.select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec"), F.col("n2").alias("qn2")
-    )
-    if query_ids is not None:
-        qvecs = qvecs.where(F.col("query_id").isin(query_ids))
-    scored = (
-        cand.join(corpus, "vec_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine_expr(
-                int_dot(F.col("qvec"), F.col("vec")), F.col("qn2"), F.col("n2")
-            ).alias("cos_raw"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("cos_raw"), 6).alias("cosine"),
-            F.col("rn").cast("int").alias("rank"),
-        )
-        .orderBy("query_id", "rank")
+    vecs = exact_int_vectors(embeddings, n_planes * n_tables, vec_col)
+    d = embedding_dim(embeddings, vec_col)
+    signs = np.random.RandomState(0).randint(0, 2, size=(d, n_planes * n_tables)) * 2 - 1
+    bk = lsh_buckets(vecs, signs.T.reshape(n_tables, n_planes, d))
+    q = bk if query_ids is None else bk.where(F.col("vec_id").isin(query_ids))
+    return top_k(rank_candidates(lsh_candidates(bk, q), vecs), k)
+
+
+# ---- IVF ------------------------------------------------------------------
+
+
+def seed_centroids(vecs: DataFrame, n_centroids: int) -> DataFrame:
+    """``(cent_id, carr, cn2)``: the ``n_centroids`` lowest-id rows of
+    the exact-int table as centroids (Lloyd iteration 0), reproducible
+    in any engine."""
+    return vecs.sparkSession.sql(
+        "SELECT vec_id AS cent_id, earr AS carr, n2 AS cn2 FROM {v} "
+        f"ORDER BY vec_id LIMIT {n_centroids}",
+        v=vecs,
     )
 
 
-# ---- IVF ANN (alternative scale path) -------------------------------
+def _quantized(centroids: DataFrame) -> DataFrame:
+    """``(cent_id, cvec)`` float centroids as an exact-int centroid frame."""
+    return centroids.selectExpr(
+        "cent_id", f"{_QUANTIZE.format('cvec')} AS carr"
+    ).selectExpr("cent_id", "carr", f"{_NORM2.format('carr')} AS cn2")
+
+
+def _centroid_cosines(vecs: DataFrame, cents: DataFrame) -> DataFrame:
+    """``(vec_id, cent_id, cos_c)`` for every vector and centroid, lazy.
+    The centroid side is ``n_centroids`` rows and is broadcast."""
+    return vecs.sparkSession.sql(
+        f"""
+        SELECT v.vec_id, c.cent_id,
+          CAST({arr_dot_sql('v.earr', 'c.carr')} AS DOUBLE)
+            / (sqrt(CAST(v.n2 AS DOUBLE)) * sqrt(CAST(c.cn2 AS DOUBLE))) AS cos_c
+        FROM {{v}} v CROSS JOIN {{c}} c
+        """,
+        v=vecs,
+        c=cents,
+    )
+
+
+def nearest_centroid(vecs: DataFrame, cents: DataFrame) -> DataFrame:
+    """``(vec_id, cent_id)``: each vector's nearest centroid by cosine,
+    ties to the lowest ``cent_id``, materialized once.
+
+    The argmax is a struct max, which combines map-side and folds into
+    the checkpoint job: the materialized frame is one row per vector,
+    not the vectors x centroids cosine table."""
+    return vecs.sparkSession.sql(
+        """
+        SELECT vec_id, CAST(-m.g AS BIGINT) AS cent_id FROM (
+          SELECT vec_id, max(named_struct('c', cos_c, 'g', -cent_id)) AS m
+          FROM {vcs} GROUP BY vec_id
+        ) ar
+        """,
+        vcs=_centroid_cosines(vecs, cents),
+    ).localCheckpoint(eager=True)
+
+
+def ivf_candidates(
+    queries: DataFrame, cents: DataFrame, assign: DataFrame, n_probe: int
+) -> DataFrame:
+    """``(query_id, vec_id)``: the members of each query's ``n_probe``
+    nearest centroid lists (ties to the lowest ``cent_id``). The query
+    cosines are recomputed from ``queries``, a subset of the exact-int
+    table.
+
+    The probe side is broadcast by hint: it is n_queries x n_probe rows
+    by construction, but it hangs off a window over a checkpointed RDD,
+    so the planner has no statistics for it and otherwise picks a
+    SortMergeJoin that shuffles the data-sized assignment table."""
+    return queries.sparkSession.sql(
+        f"""
+        WITH probe AS (
+          SELECT vec_id AS query_id, cent_id FROM (
+            SELECT vec_id, cent_id,
+              row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, cent_id) AS rn
+            FROM {{vcs_q}}
+          ) pr WHERE rn <= {n_probe}
+        )
+        SELECT /*+ BROADCAST(p) */ DISTINCT p.query_id, a.vec_id
+        FROM probe p JOIN {{a}} a ON a.cent_id = p.cent_id AND a.vec_id != p.query_id
+        """,
+        vcs_q=_centroid_cosines(queries, cents),
+        a=assign,
+    )
+
+
+def _lloyd(
+    embeddings: DataFrame, vecs: DataFrame, n_centroids: int, n_iters: int, vec_col: str
+) -> DataFrame:
+    spark = embeddings.sparkSession
+    raw = embeddings.select("vec_id", F.col(vec_col).alias("vec"))
+    cents = [
+        [float(x) for x in r.vec]
+        for r in raw.where(F.size("vec") > 0).orderBy("vec_id").limit(n_centroids).collect()
+    ]
+    for _ in range(n_iters):
+        cdf = spark.createDataFrame(list(enumerate(cents)), "cent_id int, cvec array<double>")
+        means = (
+            nearest_centroid(vecs, _quantized(cdf))
+            .join(raw, "vec_id")
+            .select("cent_id", F.posexplode("vec").alias("pos", "x"))
+            .groupBy("cent_id", "pos")
+            .agg(F.avg("x").alias("m"))
+            .collect()
+        )
+        by_cent: dict[int, dict[int, float]] = {}
+        for r in means:
+            by_cent.setdefault(r.cent_id, {})[r.pos] = r.m
+        for cid, dims in by_cent.items():
+            cents[cid] = [dims[p] for p in sorted(dims)]
+    return spark.createDataFrame(list(enumerate(cents)), "cent_id int, cvec array<double>")
 
 
 def ivf_train(
@@ -322,54 +448,21 @@ def ivf_train(
     """Spherical k-means (Lloyd) with deterministic seeding.
 
     Init = the ``n_centroids`` lowest-vec_id vectors; each iteration
-    broadcasts the (k x d) centroid matrix, assigns every vector to its
-    max-cosine centroid JVM-side, and recomputes each centroid as the
-    element-wise mean of its members (one groupBy over exploded
-    positions). Only the k x d centroid matrix visits the driver per
-    iteration — the classic distributed k-means shape; at 100 TB each
-    iteration is one broadcast + one shuffle of k*d partial sums per
-    partition (map-side combined), never a vector collect. No RNG
-    anywhere, so the trained model is reproducible run-to-run.
+    assigns every vector to its max-cosine centroid JVM-side
+    (:func:`nearest_centroid` against the exact-int centroids) and
+    recomputes each centroid as the element-wise mean of its members
+    (one groupBy over exploded positions). Only the k x d centroid
+    matrix visits the driver per iteration — the classic distributed
+    k-means shape; at 100 TB each iteration is one broadcast + one
+    shuffle of k*d partial sums per partition (map-side combined), never
+    a vector collect. No RNG anywhere, so the trained model is
+    reproducible run-to-run.
 
     Returns (cent_id int, cvec array<double>) — empty clusters keep
     their previous centroid.
     """
-    spark = embeddings.sparkSession
-    base = _spread(embeddings).select("vec_id", F.col(vec_col).alias("vec"))
-    cents = [
-        [float(x) for x in r.vec]
-        for r in base.orderBy("vec_id").limit(n_centroids).collect()
-    ]
-    for _ in range(n_iters):
-        cdf = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)], "cent_id int, cvec array<double>"
-        )
-        pairs = base.join(F.broadcast(cdf)).select(
-            "vec_id",
-            "vec",
-            "cent_id",
-            cosine_expr(
-                int_dot(F.col("vec"), F.col("cvec")),
-                int_norm2(F.col("vec")),
-                int_norm2(F.col("cvec")),
-            ).alias("ccos"),
-        )
-        wv = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("cent_id"))
-        assigned = pairs.withColumn("rn", F.row_number().over(wv)).where(F.col("rn") == 1)
-        means = (
-            assigned.select("cent_id", F.posexplode("vec").alias("pos", "x"))
-            .groupBy("cent_id", "pos")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        by_cent: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cent.setdefault(r.cent_id, {})[r.pos] = r.m
-        for cid, dims in by_cent.items():
-            cents[cid] = [dims[p] for p in sorted(dims)]
-    return spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "cent_id int, cvec array<double>"
-    )
+    vecs = exact_int_vectors(embeddings, n_centroids, vec_col)
+    return _lloyd(embeddings, vecs, n_centroids, n_iters, vec_col)
 
 
 def ivf_assign(
@@ -378,37 +471,16 @@ def ivf_assign(
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF-flat assignment against trained (or supplied) centroids.
+    """IVF-flat assignment ``(vec_id, cent_id)`` against trained (or
+    supplied) centroids: the posting lists (centroid -> members) are
+    the inverted file.
 
     Centroids come from :func:`ivf_train` (deterministic k-means) unless
-    a ``(cent_id, cvec)`` DataFrame is passed in. The centroid set is
-    broadcast and assignment is one map-side pass; the posting lists
-    (centroid -> members) are the inverted file.
-    """
-    embeddings = _spread(embeddings)
-    base = embeddings.select(
-        "vec_id", F.col(vec_col).alias("vec"), int_norm2(F.col(vec_col)).alias("n2")
-    )
+    a ``(cent_id, cvec)`` DataFrame is passed in."""
+    vecs = exact_int_vectors(embeddings, n_centroids, vec_col)
     if centroids is None:
-        centroids = ivf_train(embeddings, n_centroids, vec_col=vec_col)
-    cents = centroids.select(
-        "cent_id", "cvec", int_norm2(F.col("cvec")).alias("cn2")
-    )
-    scored = base.join(F.broadcast(cents)).select(
-        "vec_id",
-        "vec",
-        "n2",
-        "cent_id",
-        cosine_expr(int_dot(F.col("vec"), F.col("cvec")), F.col("n2"), F.col("cn2")).alias(
-            "ccos"
-        ),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("cent_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "vec", "n2", "cent_id")
-    )
+        centroids = _lloyd(embeddings, vecs, n_centroids, 3, vec_col)
+    return nearest_centroid(vecs, _quantized(centroids))
 
 
 def ivf_ann_topk(
@@ -426,53 +498,95 @@ def ivf_ann_topk(
     n_probe == n_centroids). Centroids are k-means-trained
     (deterministically) so posting lists reflect the data's actual
     cluster structure, not an arbitrary seed sample."""
-    centroids = ivf_train(embeddings, n_centroids, vec_col=vec_col)
-    assigned = ivf_assign(embeddings, n_centroids, vec_col, centroids=centroids)
-    base = _spread(embeddings).select(
-        "vec_id", F.col(vec_col).alias("vec"), int_norm2(F.col(vec_col)).alias("n2")
-    )
-    cents = centroids.select("cent_id", "cvec", int_norm2(F.col("cvec")).alias("cn2"))
-    q = base.select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec"), F.col("n2").alias("qn2")
-    )
-    if query_ids is not None:
-        q = q.where(F.col("query_id").isin(query_ids))
-    # per query: its n_probe closest centroids
-    qc = q.join(F.broadcast(cents)).select(
-        "query_id",
-        "qvec",
-        "qn2",
-        "cent_id",
-        cosine_expr(int_dot(F.col("qvec"), F.col("cvec")), F.col("qn2"), F.col("cn2")).alias(
-            "ccos"
-        ),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("ccos").desc(), F.col("cent_id"))
-    probes = (
-        qc.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= n_probe)
-        .select("query_id", "qvec", "qn2", "cent_id")
-    )
-    # score only members of the probed lists
-    cands = probes.join(assigned, "cent_id").where(F.col("vec_id") != F.col("query_id"))
-    scored = cands.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        cosine_expr(int_dot(F.col("qvec"), F.col("vec")), F.col("qn2"), F.col("n2")).alias(
-            "cos_raw"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_raw").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("cos_raw"), 6).alias("cosine"),
-            F.col("rn").cast("int").alias("rank"),
+    vecs = exact_int_vectors(embeddings, n_centroids, vec_col)
+    cents = _quantized(_lloyd(embeddings, vecs, n_centroids, 3, vec_col))
+    assign = nearest_centroid(vecs, cents)
+    q = vecs if query_ids is None else vecs.where(F.col("vec_id").isin(query_ids))
+    return top_k(rank_candidates(ivf_candidates(q, cents, assign, n_probe), vecs), k)
+
+
+# ---- PQ -------------------------------------------------------------------
+
+
+def _pq_subdistances(vecs: DataFrame, cents: DataFrame, d: int, m: int) -> DataFrame:
+    """``(vec_id, s, cent_id, d2)``: squared L2 distance per subspace
+    between each vector and each sub-centroid, lazy. The subspace of
+    1-based index ``i`` is ``((i-1)*m) div d``, so subspace ``s`` covers
+    the contiguous index range [ceil(s*d/m)+1, ceil((s+1)*d/m)]. The
+    squared differences are one ``zip_with`` over the full arrays,
+    shared by all subspaces, then one slice-fold per subspace (an index
+    absent on either side is NULL and counts 0)."""
+    structs = []
+    for s in range(m):
+        lo = -((-s * d) // m) + 1
+        hi = -((-(s + 1) * d) // m)
+        n = hi - lo + 1
+        d2 = (
+            f"aggregate(slice(dsq, {lo}, {n}), "
+            "CAST(0 AS BIGINT), (acc, v) -> acc + coalesce(v, CAST(0 AS BIGINT)))"
         )
-        .orderBy("query_id", "rank")
+        structs.append(f"named_struct('s', CAST({s} AS BIGINT), 'd2', {d2})")
+    return vecs.sparkSession.sql(
+        f"""
+        SELECT p.vec_id, sd.s, p.cent_id, sd.d2
+        FROM (
+          SELECT v.vec_id, c.cent_id,
+            zip_with(earr, carr, (x, y) -> (x - y) * (x - y)) AS dsq
+          FROM {{v}} v CROSS JOIN {{c}} c
+        ) p
+        LATERAL VIEW explode(array({','.join(structs)})) E AS sd
+        """,
+        v=vecs,
+        c=cents,
+    )
+
+
+def pq_codes(vecs: DataFrame, cents: DataFrame, d: int, m: int) -> DataFrame:
+    """``(vec_id, s, code)``: the nearest sub-centroid per vector and
+    subspace (squared L2, ties to the lowest ``cent_id``), materialized
+    once. The argmin is a struct min folded into the checkpoint job, so
+    the materialized frame is n_vecs x m code rows, not the full
+    subdistance table."""
+    return vecs.sparkSession.sql(
+        """
+        SELECT vec_id, s, m.cent_id AS code FROM (
+          SELECT vec_id, s, min(named_struct('d2', d2, 'cent_id', cent_id)) AS m
+          FROM {dtab} GROUP BY vec_id, s
+        ) cr
+        """,
+        dtab=_pq_subdistances(vecs, cents, d, m),
+    ).localCheckpoint(eager=True)
+
+
+def pq_ranked(
+    queries: DataFrame, cents: DataFrame, codes: DataFrame, d: int, m: int
+) -> DataFrame:
+    """Asymmetric-distance (ADC) ranking ``(query_id, neighbor_id,
+    adc_d2, rn)`` over the code table, ``rn`` by the exact BIGINT
+    distance, then neighbor id. The query distance table is recomputed
+    from ``queries``, a subset of the exact-int table.
+
+    That table is broadcast by hint: it is n_queries x n_codes x m rows
+    by construction, but the checkpoints carry no statistics, and the
+    planner otherwise picks a SortMergeJoin that shuffles the data-sized
+    code table on (s, code)."""
+    return queries.sparkSession.sql(
+        """
+        WITH adc AS (
+          SELECT /*+ BROADCAST(qt) */ qt.query_id, v.vec_id AS neighbor_id,
+            CAST(sum(qt.d2) AS BIGINT) AS adc_d2
+          FROM {codes} v JOIN (
+            SELECT vec_id AS query_id, s, cent_id, d2 FROM {qt}
+          ) qt ON qt.s = v.s AND qt.cent_id = v.code
+          WHERE v.vec_id != qt.query_id
+          GROUP BY 1, 2
+        )
+        SELECT query_id, neighbor_id, adc_d2,
+          row_number() OVER (PARTITION BY query_id ORDER BY adc_d2, neighbor_id) AS rn
+        FROM adc
+        """,
+        codes=codes,
+        qt=_pq_subdistances(queries, cents, d, m),
     )
 
 

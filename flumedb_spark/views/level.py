@@ -84,7 +84,12 @@ class Level(FlumeView):
                 for pdf in it:
                     seqs, keys = [], []
                     for s, v in zip(pdf["seq"], pdf["value"]):
-                        for k in key_fn(decode(v)) or []:
+                        ks = key_fn(decode(v))
+                        if isinstance(ks, (str, bytes)):
+                            raise TypeError(
+                                f"Level key_fn must return a list of keys, got {type(ks).__name__} {ks!r}"
+                            )
+                        for k in ks or []:
                             seqs.append(s)
                             keys.append(str(k))
                     yield pd.DataFrame({"seq": pd.Series(seqs, dtype="int64"), "key": keys})

@@ -30,7 +30,7 @@ def test_small_file_ratio_trigger(spark, tmp_path):
 
 def test_engine_maintain_compacts_log_and_views(spark, tmp_path):
     db = Flume(str(tmp_path / "db"), spark=spark)
-    db.use("idx", Level(1, key_fn=lambda v: str(v["foo"])))
+    db.use("idx", Level(1, key_fn=lambda v: [str(v["foo"])]))
     for i in range(18):
         db.append({"foo": i})
         db.idx.get(str(i))  # fold incrementally: one index commit each

@@ -153,10 +153,49 @@ def test_scoring_family_plan_shapes(plans):
 
 
 def test_kmv_and_pq_stay_jvm_side(plans):
-    for q in ("ns_kmv_set_ops", "ns_pq_ann_topk_seeded", "ns_pq_ann_recall10"):
+    for q in (
+        "ns_kmv_set_ops",
+        "ns_pq_ann_topk_seeded",
+        "ns_pq_ann_recall10",
+        "ns_lsh_ann_topk_md5",
+        "ns_ivf_ann_topk_seeded",
+        "ns_semantic_dedup",
+    ):
         p = plans(q)
         assert "BatchEvalPython" not in p, f"{q} fell into a Python UDF"
         assert "ArrowEvalPython" not in p, f"{q} fell into a Pandas UDF"
+    # the IVF probe and the PQ query table are bounded by construction
+    # and broadcast by hint: a SortMergeJoin would shuffle the
+    # data-sized assignment or code table
+    for q in ("ns_ivf_ann_topk_seeded", "ns_pq_ann_topk_seeded"):
+        assert "SortMergeJoin" not in plans(q), q
+
+
+def test_library_ann_stays_jvm_side(spark, sf_dir, monkeypatch):
+    """``lsh_ann_topk`` and ``ivf_ann_topk`` run on the same array-
+    expression core as the catalog's ANN rows: neither the final plan
+    nor the plan of any table they materialize on the way holds a
+    Python stage."""
+    from flumedb_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    seen = []
+    checkpoint = type(emb).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        seen.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(emb), "localCheckpoint", spy)
+    for df in (
+        similarity.lsh_ann_topk(emb, query_ids=[0, 1], k=5),
+        similarity.ivf_ann_topk(emb, query_ids=[0, 1], k=5, n_centroids=4, n_probe=2),
+    ):
+        seen.append(df._jdf.queryExecution().executedPlan().toString())
+    for p in seen:
+        for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in p, node
+    assert len(seen) >= 4  # the spy saw the materialized tables too
 
 
 def test_retrieval_selection_family_plan_shapes(plans):

@@ -230,3 +230,20 @@ def test_point_gets_start_no_spark_job(spark, tmp_log_dir):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     db.close()
+
+
+def _name_str(v):
+    return v["name"]  # a bare string, not a list of keys
+
+
+def test_level_key_fn_returning_a_string_fails_loudly(spark, tmp_log_dir):
+    """A ``key_fn`` that returns one string instead of a list of keys
+    would index the string's characters, and ``get`` of the whole key
+    would come back empty with no error. The fold rejects it, so the
+    gated read raises and names ``key_fn``."""
+    db = Flume(tmp_log_dir, spark=spark)
+    db.use("by_name", Level(1, key_fn=_name_str))
+    db.append(RECS[:5])
+    with pytest.raises(Exception, match="key_fn"):
+        db.by_name.get("n2")
+    db.close()
