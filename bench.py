@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -196,10 +197,7 @@ def main() -> None:
     # size POST-SHUFFLE partitions to the shuffled data volume (the
     # cluster policy is 100-200MB per shuffle partition; map-side width
     # is untouched, scans stay ~cores-wide).
-    import re
-
-    m = re.search(r"sf([0-9.]+)$", os.path.basename(sf_dir.rstrip("/")))
-    sf_guess = float(m.group(1)) if m else 0.1
+    sf_guess = sf_of(sf_dir)
     # r5: "1", not "8", at tiny SFs — the sizing rule (100-200MB per
     # post-shuffle partition) yields ONE partition for tens-of-MB
     # shuffles, and the A/B (min-of-3 interleaved, quiet host) showed
@@ -251,27 +249,25 @@ def main() -> None:
             qs[name](spark, "/root/testdata/sf0.001").count()
         except Exception:
             pass
+    # Width is PER-MODE since r6 (VERDICT-r5 #3): the r5 "width 1 at
+    # sf<=0.2" policy was A/B'd on the batched DAG (-30%, confirmed
+    # again this round) but taxes the SEQUENTIAL headline pass — the
+    # same-process interleaved A/B (widths 1 and 8 alternating per
+    # sweep, min-of-3; `tools/probe.py ab --width 1,8` reruns it) shows
+    # width 8 cuts the heavy sequential shapes 30-50% (q1 -39%, q3 -42%,
+    # window_top3 -49%) and the sweep total -18%, which is the r5
+    # 3.01->3.24 sequential drift's cause. TPC-H sequential stays at
+    # width 1 (its cascaded multi-join shapes measured +7% at width 8).
+    seq_width = "8" if sf_guess <= 0.2 else None
     # register the benched SF last, then pin every table as decoded
     # in-memory columnar batches — the warm-engine analogue of DuckDB's
     # buffer pool (the comparison oracle runs warm from OS cache too).
-    # At cluster scale this is `spark.catalog.cacheTable` over the hot
-    # working set, sized to executor storage memory.
-    qs["o7_since"](spark, sf_dir).collect()
-    from flumedb_spark.catalog import TABLES
-
-    # cache FACTS at the ingest layout's width: AQE coalesces small
-    # shuffles at runtime, so the cached *input* stays ~cores-wide and
-    # scans/joins keep full map-side parallelism (narrowing facts capped
-    # q1/q3/q5/q10 at 8 of 32 cores in round 2 — measured regression,
-    # don't re-add; gate: tests/test_bench_plans.py). DIMENSIONS narrow
-    # by size (~300k rows/partition): a 32-task scan stage over a
-    # 1500-row dim is pure scheduling floor — star joins measured -26%
-    # at sf0.1 (r4 A/B). The rule scales: at sf100k a 15B-row customer
-    # still caches ~50k partitions wide.
-    _narrow_dims(spark)
-    for t in TABLES:
-        spark.catalog.cacheTable(t)
-        spark.table(t).count()  # materialize the cache
+    # At cluster scale this is the table cache over the hot working
+    # set, sized to executor storage memory.
+    serve_tables(
+        spark, sf_dir, aqe_for_sf,
+        seq_width or os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"],
+    )
     load_sec = round(time.perf_counter() - t0, 4)
     print(f"# [t={_elapsed():.0f}s] load+warm done ({load_sec:.0f}s)", file=sys.stderr)
 
@@ -300,23 +296,12 @@ def main() -> None:
     # per pass makes every timed number the full end-to-end cost a user
     # pays per query; for ops without eager construction the delta is
     # only the plan-construction cost already declared above.
-    # Width is PER-MODE since r6 (VERDICT-r5 #3): the r5 "width 1 at
-    # sf<=0.2" policy was A/B'd on the batched DAG (-30%, confirmed
-    # again this round) but taxes the SEQUENTIAL headline pass — the
-    # same-process interleaved A/B (tools/ab_seq_width.py, min-of-3)
-    # shows width 8 cuts the heavy sequential shapes 30-50% (q1 -39%,
-    # q3 -42%, window_top3 -49%) and the sweep total -18%, which is the
-    # r5 3.01->3.24 sequential drift's cause. TPC-H sequential stays at
-    # width 1 (its cascaded multi-join shapes measured +7% at width 8).
-    seq_width = "8" if sf_guess <= 0.2 else None
-    if seq_width:
-        spark.conf.set("spark.sql.shuffle.partitions", seq_width)
     # r7 (VERDICT-r6 #1a): the Spark and DuckDB sides are now
     # INTERLEAVED PER-QUERY — each pass times qs[name] and then, within
     # the same micro-window, that query's oracle on the same process's
     # DuckDB connection. A host stall inflates BOTH sides of the pair
-    # it lands on, so the ratio is self-adjudicating; the tools/ab_*.py
-    # methodology promoted into the artifact itself.
+    # it lands on, so the ratio is self-adjudicating; the same-process
+    # interleaved A/B methodology promoted into the artifact itself.
     con, duck_names = _duck_connect(sf_dir, cpus, HEADLINE)
     best: dict[str, float] = {}
     duck_best: dict[str, float] = {}
@@ -490,21 +475,11 @@ def main() -> None:
             print(f"# sf1 synthesis failed: {exc}", file=sys.stderr)
     if sf_guess <= 0.2 and os.path.exists(os.path.join(sf1_dir, "lineitem.parquet")):
         try:
-            from flumedb_spark.catalog import TABLES as _tables
-
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
-            # scale sections size their own post-shuffle width (the
-            # benched-SF "1" would serialize sf1/sf10 shuffles): 8
+            # AQE on; scale sections size their own post-shuffle width
+            # (the benched-SF "1" would serialize sf1/sf10 shuffles): 8
             # matches the width the r4 parity numbers were taken at.
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
             scale_recached = True
-            for t in _tables:
-                spark.catalog.uncacheTable(t)
-            qs["o7_since"](spark, sf1_dir).collect()
-            _narrow_dims(spark)
-            for t in _tables:
-                spark.catalog.cacheTable(t)
-                spark.table(t).count()
+            serve_tables(spark, sf1_dir, "true", "8")
             # min-of-2 (not 1): the sf1 section is the headline scale
             # claim and a single pass is hostage to one host stall.
             # TPCH rides along: its sf0.1 ratio is pure scheduling
@@ -584,21 +559,12 @@ def main() -> None:
         }
     else:
         try:
-            from flumedb_spark.catalog import TABLES as _tables
-
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
-            # sf10 shuffles are ~GBs — the 100-200MB rule gives ~cores
-            # width here, and the interleaved A/B agrees (q21 10.7->5.9s,
-            # q9 -24%, q3/q5 -10% at 32 vs 8; 64 regresses on overhead)
-            spark.conf.set("spark.sql.shuffle.partitions", str(min(cpus, 32)))
+            # AQE on; sf10 shuffles are ~GBs — the 100-200MB rule gives
+            # ~cores width here, and the interleaved A/B agrees (q21
+            # 10.7->5.9s, q9 -24%, q3/q5 -10% at 32 vs 8; 64 regresses
+            # on overhead)
             scale_recached = True
-            for t in _tables:
-                spark.catalog.uncacheTable(t)
-            qs["o7_since"](spark, sf10_dir).collect()
-            _narrow_dims(spark)
-            for t in _tables:
-                spark.catalog.cacheTable(t)
-                spark.table(t).count()
+            serve_tables(spark, sf10_dir, "true", str(min(cpus, 32)))
             t10: dict[str, float] = {}
             for name in sf10_names:  # warm pass (codegen/caches), not recorded
                 tw = time.perf_counter()
@@ -645,21 +611,9 @@ def main() -> None:
         if scale_recached:
             # restore the benched-SF serving state the earlier sections
             # measured under: sf_dir tables cached, benched-SF AQE
-            # policy, batched width 1
-            from flumedb_spark.catalog import TABLES as _tables
-
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_for_sf)
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                "1" if seq_width else os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"],
-            )
-            for t in _tables:
-                spark.catalog.uncacheTable(t)
-            qs["o7_since"](spark, sf_dir).collect()
-            _narrow_dims(spark)
-            for t in _tables:
-                spark.catalog.cacheTable(t)
-                spark.table(t).count()
+            # policy, batched width 1 (scale sections run only at
+            # sf<=0.2)
+            serve_tables(spark, sf_dir, aqe_for_sf, "1")
         xq: dict[str, float] = {}
         xduck_best: dict[str, float] = {}
         xducks = [n for n in EXTRAS if n in _oracle_names()] if con else []
@@ -728,13 +682,10 @@ def main() -> None:
         }
     else:
         try:
-            from flumedb_spark.catalog import TABLES as _tables
-
             spark.conf.set("spark.sql.adaptive.enabled", aqe_for_sf)
             if seq_width:
                 spark.conf.set("spark.sql.shuffle.partitions", seq_width)
-            for t in _tables:
-                spark.catalog.uncacheTable(t)
+            spark.catalog.clearCache()
             uq: dict[str, float] = {}
             for name in HEADLINE:
                 t0 = time.perf_counter()
@@ -884,64 +835,56 @@ def _batched_interleaved(
         return {}
 
 
-def _batched_submission(build, names: list[str]) -> float | None:
-    """Min-of-3 seconds for the whole query set as ONE Spark action:
-    each result tagged + json-packed to a common 2-column schema,
-    unioned, one count(). Amortizes the per-query scheduling floor and
-    overlaps all queries' stages across cores — the shape of a
-    multi-query ETL DAG submitted together.
-
-    ``build`` is a zero-arg callable returning {name: DataFrame} with
-    FRESH plans; it runs INSIDE the timed region each pass (r6 honesty
-    rule: eager-construction operators must pay their materialization
-    in the number, same as the sequential passes)."""
-    try:
-        import time as _time
-        from functools import reduce as _reduce
-
-        from pyspark.sql import functions as F
-
-        def assemble():
-            prepared = build()
-            parts = [
-                prepared[n].select(
-                    F.lit(n).alias("q"),
-                    F.to_json(
-                        F.struct(*[F.col(c) for c in prepared[n].columns])
-                    ).alias("r"),
-                )
-                for n in names
-            ]
-            return _reduce(lambda a, b: a.unionByName(b), parts)
-
-        # count(), not a plan-pinned collect: same honesty rule as the
-        # sequential passes (a pinned Dataset re-collected would reuse
-        # shuffle outputs and time only the final stage). Each timed
-        # pass assembles and plans the union ONCE — the amortized
-        # serving shape — and executes every stage.
-        assemble().count()  # warm/codegen for the union shape
-        best = float("inf")
-        for _ in range(3):
-            t0 = _time.perf_counter()
-            assemble().count()
-            best = min(best, _time.perf_counter() - t0)
-        return round(best, 4)
-    except Exception as exc:  # pragma: no cover - best-effort section
-        print(f"# batched submission failed: {exc}", file=sys.stderr)
-        return None
-
-
 DIM_TABLES = ["region", "nation", "customer", "supplier", "part"]
 
 
-def _narrow_dims(spark, rows_per_partition: int = 300_000) -> None:
-    """Re-register dimension views coalesced to ~rows_per_partition
-    before caching: dim scan stages at small SFs are dozens of
-    near-empty tasks per star join. Facts are untouched (the r2
+def sf_of(sf_dir: str) -> float:
+    """Scale factor from an ``.../sf<N>`` directory name; 0.1, the
+    benched SF, when the name carries none."""
+    m = re.search(r"sf([0-9.]+)$", os.path.basename(sf_dir.rstrip("/")))
+    return float(m.group(1)) if m else 0.1
+
+
+def serve_tables(spark, sf_dir: str, aqe: str, width: str) -> None:
+    """Put ``spark`` in the bench's serving state for ``sf_dir``: every
+    table uncached, AQE set to ``aqe`` and the post-shuffle width to
+    ``width``, the tables registered at ``sf_dir`` with narrowed dims,
+    then each table cached and materialized.
+
+    Warm-up calls at another sf must run BEFORE this: a query at a
+    different sf_dir re-registers every temp view (the catalog memoizes
+    per sf_dir), which silently discards the narrowed-dim views and
+    orphans their cache entries (r4 review finding: sections that warmed
+    late measured uncached, un-narrowed dims)."""
+    from flumedb_spark.catalog import TABLES, register_tables
+
+    for t in TABLES:
+        if spark.catalog.tableExists(t):
+            spark.catalog.uncacheTable(t)
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    spark.conf.set("spark.sql.shuffle.partitions", width)
+    register_tables(spark, sf_dir)
+    # cache FACTS at the ingest layout's width: AQE coalesces small
+    # shuffles at runtime, so the cached *input* stays ~cores-wide and
+    # scans/joins keep full map-side parallelism (narrowing facts capped
+    # q1/q3/q5/q10 at 8 of 32 cores in round 2 — measured regression,
+    # don't re-add; gate: tests/test_bench_plans.py).
+    _narrow_dims(spark)
+    for t in TABLES:
+        spark.catalog.cacheTable(t)
+        spark.table(t).count()  # materialize the cache
+
+
+def _narrow_dims(spark) -> None:
+    """Re-register dimension views coalesced to ~300k rows per
+    partition before caching: a 32-task scan stage over a 1500-row dim
+    is pure scheduling floor — star joins measured -26% at sf0.1 (r4
+    A/B). The rule scales: at sf100k a 15B-row customer still
+    caches ~50k partitions wide. Facts are untouched (the r2
     no-narrowing rule and its plan gate apply to facts/map width)."""
     for t in DIM_TABLES:
         df = spark.table(t)
-        w = max(1, df.count() // rows_per_partition)
+        w = max(1, df.count() // 300_000)
         df.coalesce(w).createOrReplaceTempView(t)
 
 

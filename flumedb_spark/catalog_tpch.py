@@ -425,7 +425,7 @@ def q21_waiting_suppliers(spark, sf_dir):
     ONE narrow shuffle of lineitem (24 B/row: okey, skey, date), no
     self-joins.
 
-    Same-methodology A/B (tools/ab_query.py min-of-N, r10): sf1
+    Same-methodology A/B (`tools/probe.py ab` min-of-N, r10): sf1
     2.18 s -> 1.17 s (-46%); sf10 flat (8.13 -> 8.18); sf0.1 0.50 ->
     0.68 (the collect_list agg costs more than the broadcasts at the
     scheduling-floor SF). Kept for the scale trend: at 100 TB the

@@ -193,7 +193,8 @@ def minhash_lsh_candidates(
     The band table is MATERIALIZED once before the self-join: a
     self-join on a lazy plan computes the whole shingle->minhash
     pipeline twice (once per side) — measured 2.7-5.5s vs 0.85s at
-    sf0.1 (tools/ab_minhash.py; the r2 `shuffle_hash` pin on the
+    sf0.1 (round-2 join-hint A/B, docs/SCALING.md #4; `tools/probe.py
+    ab` times the current row; the r2 `shuffle_hash` pin on the
     unmaterialized plan was a 2.66x regression). At cluster scale this
     is the standard LSH shape anyway: persist the signature/band table
     (it is ~n_bands rows per doc — tiny next to the corpus), then
