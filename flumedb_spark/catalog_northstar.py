@@ -11,6 +11,7 @@ hashes match bit-for-bit.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .catalog import query, shared_sql
 from .operators import bpe as bpe_mod
@@ -1606,7 +1607,8 @@ def _recall_sql(approx_sql: str) -> str:
 # signatures, assignments and dots, and the same integer arithmetic as
 # the exploded-`flat` oracle text above (which stays as the reference
 # statement). Equivalence is hash-gated by tools/check_correctness.py
-# at sf0.01 + sf0.1. The query side is `vec_id < 5`, the oracles' filter.
+# at sf0.01 + sf0.1. The query side is `vec_id < 5`, the oracles' filter;
+# LSH broadcasts it by hint, so the bucket table streams at any size.
 
 
 def _md5_plane_signs(d: int, n_planes: int = 6, n_tables: int = 8) -> list:
@@ -1630,7 +1632,7 @@ def ns_lsh_ann_topk_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.table("embeddings")
     vecs = similarity.exact_int_vectors(emb, 6 * 8)
     bk = similarity.lsh_buckets(vecs, _md5_plane_signs(similarity.embedding_dim(emb)))
-    cand = similarity.lsh_candidates(bk, bk.where("vec_id < 5"))
+    cand = similarity.lsh_candidates(bk, F.broadcast(bk.where("vec_id < 5")))
     return similarity.top_k(similarity.rank_candidates(cand, vecs), 10)
 
 
@@ -1639,7 +1641,7 @@ def ns_lsh_ann_recall10(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.table("embeddings")
     vecs = similarity.exact_int_vectors(emb, 6 * 8)
     bk = similarity.lsh_buckets(vecs, _md5_plane_signs(similarity.embedding_dim(emb)))
-    cand = similarity.lsh_candidates(bk, bk.where("vec_id < 5"))
+    cand = similarity.lsh_candidates(bk, F.broadcast(bk.where("vec_id < 5")))
     approx = similarity.rank_candidates(cand, vecs).where("rn <= 10")
     exact = similarity.cosine_topk(emb, query_ids=[0, 1, 2, 3, 4], k=10)
     return similarity.recall_hits(exact, approx)

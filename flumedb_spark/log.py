@@ -647,11 +647,12 @@ class ParquetLog:
         re-executing its scan between actions, a batch plan built from a
         pre-swap manifest) keep reading bit-identical data; deletion
         happens later via :meth:`vacuum`, gated on a retention window no
-        healthy reader outlives. Live tails additionally observe the
-        compacted files as new and re-deliver the prefix, which
-        `LiveViewRunner`'s fresh-seq filter + per-batch seq dedup make a
-        no-op, and the stream source reads with ignoreMissingFiles as a
-        last line of defense for readers that DO outlive retention.
+        healthy reader outlives. A file-source live tail additionally
+        observes the compacted files as new and re-delivers the prefix,
+        which `LiveViewRunner` folds to a no-op (it folds the manifest
+        range up to the batch's max seq, already covered), and the
+        stream source reads with ignoreMissingFiles as a last line of
+        defense for readers that DO outlive retention.
         """
         snap = self._load_meta()
         since = snap["since"]

@@ -376,6 +376,16 @@ def train_quality_classifier_lr(
     state = spark.range(1).select(
         F.lit(-1).cast("long").alias("b"), F.lit(0).cast("long").alias("w_micro")
     )
+    # the gradient's input carries one bias row per doc (b = -1, c = 1),
+    # so one bucket-keyed aggregate yields the bias gradient sum(err) too;
+    # the margin's input (lab) must not carry it
+    grad_in = lab.select("doc_id", "b", "c").unionByName(
+        lab.select("doc_id").distinct().select(
+            "doc_id",
+            F.lit(-1).cast("long").alias("b"),
+            F.lit(1).cast("long").alias("c"),
+        )
+    )
     for _ in range(n_iters):
         per_doc = (
             lab.join(F.broadcast(state), "b", "left")
@@ -400,21 +410,15 @@ def train_quality_classifier_lr(
             )
         )
         grad = (
-            lab.join(per_doc.select("doc_id", "err"), "doc_id")
+            grad_in.join(per_doc.select("doc_id", "err"), "doc_id")
             .groupBy("b")
             .agg(F.sum(F.col("c") * F.col("err")).cast("long").alias("g"))
-        )
-        bias_g = per_doc.agg(F.sum("err").cast("long").alias("g")).select(
-            F.lit(-1).cast("long").alias("b"),
-            F.lit(0).cast("long").alias("w_micro"),
-            "g",
         )
         # union + groupBy instead of a FULL OUTER join (full outer
         # cannot broadcast — it would SortMergeJoin two kilobyte tables
         # every iteration)
         state = (
             grad.select("b", F.lit(0).cast("long").alias("w_micro"), "g")
-            .unionByName(bias_g)
             .unionByName(
                 state.select("b", "w_micro", F.lit(0).cast("long").alias("g"))
             )

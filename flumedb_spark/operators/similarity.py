@@ -289,7 +289,8 @@ def lsh_buckets(vecs: DataFrame, planes) -> DataFrame:
 def lsh_candidates(buckets: DataFrame, queries: DataFrame) -> DataFrame:
     """``(query_id, vec_id)``: every other vector sharing a bucket with a
     query in any table, deduplicated across tables before any scoring.
-    ``queries`` is a subset of the rows of ``buckets``."""
+    ``queries`` is a subset of the rows of ``buckets``; mark it with
+    ``F.broadcast`` when it is bounded."""
     return buckets.sparkSession.sql(
         """
         SELECT DISTINCT q.vec_id AS query_id, c.vec_id
@@ -325,7 +326,9 @@ def lsh_ann_topk(
     d = embedding_dim(embeddings, vec_col)
     signs = np.random.RandomState(0).randint(0, 2, size=(d, n_planes * n_tables)) * 2 - 1
     bk = lsh_buckets(vecs, signs.T.reshape(n_tables, n_planes, d))
-    q = bk if query_ids is None else bk.where(F.col("vec_id").isin(query_ids))
+    # a bounded query side is broadcast by hint, so the bucket table
+    # streams at any corpus size; all-pairs is left to the planner
+    q = bk if query_ids is None else F.broadcast(bk.where(F.col("vec_id").isin(query_ids)))
     return top_k(rank_candidates(lsh_candidates(bk, q), vecs), k)
 
 

@@ -2,8 +2,8 @@
 API form of O6 (BASELINE.json `spark_approach`: "Structured Streaming
 with custom source").
 
-Unlike the file-source tail in `streaming/live.py` (which relies on
-file-discovery order), this source speaks the log's native offset
+Unlike the file-source tail in `streaming/live.py` (which lists the
+data dir, committed or not), this source speaks the log's native offset
 language: an offset IS the log's ``since`` watermark, read from the
 manifest commit through ``load_manifest`` — the loader every log backend
 uses, so a ``VersionedLog``'s ``_log/`` versions resolve like a
@@ -14,7 +14,8 @@ uses, so a ``VersionedLog``'s ``_log/`` versions resolve like a
 - no dependence on file naming/discovery order — compaction can rewrite
   files freely between micro-batches, because each batch re-resolves
   its seq range against the current manifest;
-- per-batch partitioning by seq sub-ranges for parallel reads.
+- one partition per committed file that overlaps the batch's seq range,
+  planned from each file's footer min/max seq, read once per file name.
 
 Register once per session then:
 
@@ -38,19 +39,41 @@ from ..log import load_manifest
 LOG_DDL = "seq bigint, ts timestamp, value string"
 
 
-class _SeqRangePartition(InputPartition):
-    def __init__(self, path: str, gt: int, lte: int):
-        self.path = path
+class _FilePartition(InputPartition):
+    """One committed log file's rows with seq in ``(gt, lte]``."""
+
+    def __init__(self, file: str, gt: int, lte: int):
+        self.file = file
         self.gt = gt
         self.lte = lte
+
+
+def _seq_range(fpath: str) -> tuple[int | None, int | None]:
+    """A file's min and max seq from its footer, over ALL row groups (row
+    group 0's max alone would prune files whose later groups hold
+    in-range seqs); ``(None, None)`` when a group has no statistics, so
+    the file is never pruned."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(fpath)
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        stats = md.row_group(g).column(0).statistics
+        if stats is None or stats.min is None or stats.max is None:
+            return None, None
+        lo = stats.min if lo is None else min(lo, stats.min)
+        hi = stats.max if hi is None else max(hi, stats.max)
+    return lo, hi
 
 
 class FlumeLogStreamReader(DataSourceStreamReader):
     """Offsets are ``{"since": <seq>}`` — the log's own watermark."""
 
-    def __init__(self, path: str, rows_per_partition: int = 100_000):
+    def __init__(self, path: str):
         self.path = path
-        self.rows_per_partition = rows_per_partition
+        self.data_dir = os.path.join(path, "data")
+        # file path -> footer seq range; committed files are immutable
+        self._ranges: dict[str, tuple[int | None, int | None]] = {}
 
     def _since(self) -> int:
         return load_manifest(self.path)["since"]
@@ -62,31 +85,34 @@ class FlumeLogStreamReader(DataSourceStreamReader):
         return {"since": self._since()}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+        """One partition per committed file whose seq range overlaps
+        ``(gt, lte]``, resolved against the current manifest, so
+        compaction can rewrite files between micro-batches. Files are
+        planned by their recorded seqs, never by seq arithmetic: on an
+        ``OffsetLog`` seqs are byte offsets."""
         gt, lte = start["since"], end["since"]
         if lte <= gt:
             return []
-        # split the seq range so big catch-up batches read in parallel
-        parts = []
-        lo = gt
-        while lo < lte:
-            hi = min(lo + self.rows_per_partition, lte)
-            parts.append(_SeqRangePartition(self.path, lo, hi))
-            lo = hi
-        return parts
+        paths = [
+            os.path.join(self.data_dir, f)
+            for f in load_manifest(self.path).get("files", [])
+        ]
+        # paths that left the manifest (compacted away) drop out
+        self._ranges = {p: self._ranges.get(p) or _seq_range(p) for p in paths}
+        return [
+            _FilePartition(p, gt, lte)
+            for p, (lo, hi) in self._ranges.items()
+            if lo is None or (hi > gt and lo <= lte)
+        ]
 
-    def read(self, partition: _SeqRangePartition):
-        # executor-side: resolve the seq range against the CURRENT
-        # manifest (robust to compaction between batches), read only
-        # files whose parquet min/max overlaps the range. Yields Arrow
-        # RecordBatches (the DataSource API's batch path): filtering via
-        # pyarrow.compute and zero per-row Python — measured 14x the
-        # row-tuple yield path on 500k rows (2.55M vs 184k rows/s).
+    def read(self, partition: _FilePartition):
+        # Yields Arrow RecordBatches (the DataSource API's batch path):
+        # filtering via pyarrow.compute and zero per-row Python — measured
+        # 14x the row-tuple yield path on 500k rows (2.55M vs 184k rows/s).
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        files = load_manifest(partition.path).get("files", [])
-        data_dir = os.path.join(partition.path, "data")
         out_schema = pa.schema(
             [
                 pa.field("seq", pa.int64()),
@@ -94,37 +120,15 @@ class FlumeLogStreamReader(DataSourceStreamReader):
                 pa.field("value", pa.string()),
             ]
         )
-        for fname in files:
-            fpath = os.path.join(data_dir, fname)
-            md = pq.read_metadata(fpath)
-            # file-level seq pruning over ALL row groups: a multi-row-group
-            # file's min/max must aggregate every group — row group 0's max
-            # alone would skip files whose later groups hold in-range seqs
-            f_min = f_max = None
-            for g in range(md.num_row_groups):
-                stats = md.row_group(g).column(0).statistics
-                if stats is None or stats.min is None or stats.max is None:
-                    f_min = f_max = None  # unknown stats: never prune
-                    break
-                f_min = stats.min if f_min is None else min(f_min, stats.min)
-                f_max = stats.max if f_max is None else max(f_max, stats.max)
-            if f_max is not None and (
-                f_max <= partition.gt or f_min > partition.lte
-            ):
-                continue
-            table = pq.read_table(fpath, columns=["seq", "ts", "value"])
-            seq = table.column("seq")
-            mask = pc.and_(
-                pc.greater(seq, pa.scalar(partition.gt, pa.int64())),
-                pc.less_equal(seq, pa.scalar(partition.lte, pa.int64())),
-            )
-            filtered = table.filter(mask)
-            if filtered.num_rows == 0:
-                continue
-            # tz-naive us timestamps: Spark reads them as session-TZ
-            # (UTC), matching the stored tz-aware-UTC values
-            filtered = filtered.cast(out_schema)
-            yield from filtered.to_batches()
+        table = pq.read_table(partition.file, columns=["seq", "ts", "value"])
+        seq = table.column("seq")
+        mask = pc.and_(
+            pc.greater(seq, pa.scalar(partition.gt, pa.int64())),
+            pc.less_equal(seq, pa.scalar(partition.lte, pa.int64())),
+        )
+        # tz-naive us timestamps: Spark reads them as session-TZ (UTC),
+        # matching the stored tz-aware-UTC values
+        yield from table.filter(mask).cast(out_schema).to_batches()
 
     def commit(self, end: dict) -> None:
         pass  # the log is immutable; nothing to acknowledge
@@ -144,21 +148,14 @@ class FlumeLogDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("flumelog source requires .option('path', <log dir>)")
-        return FlumeLogStreamReader(
-            path, int(self.options.get("rows_per_partition", 100_000))
-        )
+        return FlumeLogStreamReader(path)
 
 
 def register(spark) -> None:
     spark.dataSource.register(FlumeLogDataSource)
 
 
-def stream_log_custom(spark, log, rows_per_partition: int = 100_000):
+def stream_log_custom(spark, log):
     """``readStream`` over the log via the custom source."""
     register(spark)
-    return (
-        spark.readStream.format("flumelog")
-        .option("path", log.path)
-        .option("rows_per_partition", rows_per_partition)
-        .load()
-    )
+    return spark.readStream.format("flumelog").option("path", log.path).load()

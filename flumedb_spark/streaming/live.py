@@ -3,25 +3,32 @@
 The reference's live feed is ``stream({gt: upto, live: true})`` — emit
 the existing suffix, then keep emitting new appends in seq order
 (`index.js:39`, `README.md:133`). Structured Streaming gives the same
-semantics over the ParquetLog for free:
+semantics over the log:
 
-- **source**: ``readStream`` with the file source over the log's data
-  dir. The appender writes one new file per commit named by commit
-  index, so discovery order == seq order; the checkpointed file list is
-  exactly the reference's ``since`` resume point (`index.js:39`
-  ``opts.gt = upto`` ≙ checkpoint recovery — SURVEY §4 calls this the
-  most load-bearing mapping in the design).
-- **sink**: ``foreachBatch`` folding each micro-batch into a
-  :class:`~flumedb_spark.views.base.FlumeView`. The view's atomic
-  (state, since) commit makes redelivered batches idempotent — the
-  crash-retry path re-runs a batch, ``fold`` sees ``seq <= since`` rows
-  filtered out, nothing double-counts (exactly-once, SURVEY §7.4.2).
+- **source**: either ``readStream`` with the file source over the log's
+  data dir (``source="files"``, the default, :func:`stream_log`) or the
+  offset-native Python DataSource whose offsets are the log's ``since``
+  (``source="datasource"``, ``sources/flumelog_source.py``). The
+  checkpointed offset is the reference's ``since`` resume point
+  (`index.js:39` ``opts.gt = upto`` ≙ checkpoint recovery — SURVEY §4
+  calls this the most load-bearing mapping in the design).
+- **sink**: ``foreachBatch`` with one fold path for both sources. A
+  micro-batch only says how far the log has grown (its max seq); the
+  rows folded are the committed range ``(view.since, head]`` read from
+  the manifest by the gate's own feed (``Flume._feed``). Files no
+  commit lists (a torn append, an OCC loser's staged replay) and files
+  compaction has replaced are therefore never folded as records. The
+  view's atomic ``(state, since)`` commit is the idempotent sink: a
+  redelivered batch finds ``since`` already past it and folds nothing
+  (exactly-once, Structured Streaming, SIGMOD 2018; SURVEY §7.4.2).
 
-At scale the file source becomes a real log bus (Kafka/Delta CDF) with
-the identical contract: ordered offsets + checkpointed resume.
+At scale the source becomes a real log bus (Kafka/Delta CDF) with the
+identical contract: ordered offsets + checkpointed resume.
 """
 
 from __future__ import annotations
+
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,105 +66,25 @@ def stream_log(
     log: ParquetLog,
     gt: int | None = None,
     max_files_per_trigger: int | None = None,
-    with_provenance: bool = False,
 ) -> DataFrame:
     """Unbounded ``(seq, ts, value)`` stream over the log (O6).
 
     ``gt`` bounds the start like the reference's ``{gt: upto}``; new
-    appends keep flowing until the query stops. ``with_provenance``
-    appends a ``_src_file`` column (source file basename) so folds can
-    gate on manifest-committed files (``committed_file_filter``).
+    appends keep flowing until the query stops. The file source lists
+    the data dir itself, so it also delivers files no commit lists (a
+    torn append, an OCC loser's staged replay) and compaction's
+    replacements of rows already seen; :class:`LiveViewRunner` reads only
+    the batch's max seq, so neither reaches a view.
     """
-    # compaction-safe: compact() deletes per-commit files AFTER staging
-    # compacted replacements that contain every row, so a file that
-    # vanishes between discovery and read can be skipped — its rows
-    # arrive via the (new-to-the-source) compacted file and the fold's
-    # fresh-seq filter dedupes. Writes are flock-serialized, so no
-    # discovery snapshot can contain a post-compaction append without
-    # also containing the compacted files (no gap-loss interleaving).
+    # compaction keeps the replaced files as tombstones until vacuum;
+    # ignoreMissingFiles covers a reader that outlives the retention
     reader = spark.readStream.schema(LOG_SCHEMA).option("ignoreMissingFiles", "true")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    # carry the source file per row: the fold gate below admits only
-    # rows from MANIFEST-COMMITTED files. The file source discovers the
-    # data dir directly, which can surface files no committed manifest
-    # references — a torn append (file written, crash before the meta
-    # commit) or an OCC loser's replayed stage — holding the same seqs
-    # a later commit assigns to DIFFERENT values. Folding those would
-    # advance view.since past seqs whose committed records then look
-    # stale and are dropped forever.
     df = reader.parquet(log.data_dir)
-    if with_provenance:
-        df = df.select(
-            "*",
-            F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
-                "_src_file"
-            ),
-        )
     if gt is not None:
         df = df.where(F.col("seq") > F.lit(int(gt)))
     return df
-
-
-def resolve_committed_files(
-    log: ParquetLog, present: set, grace_seconds: float = 5.0
-) -> set:
-    """Grace-poll the committed manifest until it covers ``present``.
-
-    A discovered-but-uncommitted file is normally just an in-flight
-    append (the writer commits the same file name moments later), so
-    unknown names get a short grace poll before being treated as
-    orphans — a crashed append's retry and an OCC loser's replay both
-    re-write under a fresh uuid name, so a name that never becomes
-    committed never will be. Returns the final committed-file set.
-
-    Runs lock-free (pure manifest reads + sleeps) so callers can poll
-    BEFORE taking the engine lock — the in-flight-append case must not
-    stall gated reads for the grace window."""
-    import time as _time
-
-    deadline = _time.monotonic() + grace_seconds
-    while True:
-        log.refresh_since()
-        committed = set(log._meta.get("files", []))
-        # tombstoned (compacted-away) files are KNOWN non-manifest names:
-        # their rows live on in the committed compacted files, so drop
-        # them immediately — only genuinely unknown names get the grace
-        # poll (they are usually an append whose commit is in flight)
-        tombstoned = {t.get("file") for t in log._meta.get("tombstones", [])}
-        unknown = present - committed - tombstoned
-        if not unknown or _time.monotonic() >= deadline:
-            return committed
-        _time.sleep(0.05)
-
-
-def committed_file_filter(
-    log: ParquetLog,
-    batch: DataFrame,
-    grace_seconds: float = 5.0,
-    committed: set | None = None,
-    present: set | None = None,
-) -> DataFrame:
-    """Admit only rows whose source file the COMMITTED manifest lists.
-
-    Pass ``present`` AND ``committed`` (from a prior collect +
-    ``resolve_committed_files``) to make this a pure plan rewrite — the
-    lock-held fold path pre-resolves both lock-free so no Spark job
-    runs under the engine lock."""
-    if "_src_file" not in batch.columns:
-        return batch  # source without file provenance (custom datasource reads committed-only)
-    if present is None:
-        present = {
-            r.f
-            for r in batch.select(F.col("_src_file").alias("f")).distinct().collect()
-        }
-    if committed is None:
-        committed = resolve_committed_files(log, present, grace_seconds)
-    drop = present - committed
-    out = batch
-    if drop:
-        out = out.where(~F.col("_src_file").isin(*drop))
-    return out.drop("_src_file")
 
 
 class LiveViewRunner:
@@ -165,9 +92,10 @@ class LiveViewRunner:
     the engine's read-time catch-up loop (O9).
 
     ``start()`` launches a foreachBatch query resuming from the view's
-    persisted ``since``; each micro-batch folds the new seq range and
-    commits atomically. Reads through the engine's gate stay correct
-    whether maintenance is read-driven or stream-driven.
+    persisted ``since``; each micro-batch folds the committed log up to
+    the batch's last seq through the engine's feed and commits
+    atomically. Reads through the engine's gate stay correct whether
+    maintenance is read-driven or stream-driven.
     """
 
     def __init__(
@@ -184,119 +112,45 @@ class LiveViewRunner:
         self.query = None
 
     def _fold_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        view = self.view
-        # Resolve the committed-file set BEFORE taking the engine lock:
-        # the grace poll (up to 5s when a batch carries a not-yet-
-        # committed in-flight append) must not stall every gated read
-        # and fold for the window.
-        committed = present = None
-        if "_src_file" in batch.columns:
-            present = {
-                r.f
-                for r in batch.select(F.col("_src_file").alias("f"))
-                .distinct()
-                .collect()
-            }
-            committed = resolve_committed_files(self.engine.log, present)
-            # Post-grace triage of still-unknown files (r4 review): a
-            # slow same-name commit (>grace window: GC pause, disk
-            # stall) must NOT be silently dropped — the checkpointed
-            # file source never redelivers, so the view would advance
-            # past those seqs forever. Distinguish by seq: rows whose
-            # seqs exceed the committed head can only come from an
-            # in-flight append → FAIL the batch (checkpoint does not
-            # advance; the supervisor restarts and redelivers after the
-            # commit lands). Rows whose seqs are all <= head are a torn
-            # append / OCC-loser orphan whose authoritative rows live in
-            # committed files → safe to drop.
-            tomb = {
-                t.get("file")
-                for t in self.engine.log._meta.get("tombstones", [])
-            }
-            unknown = present - committed - tomb
-            if unknown:
-                head = self.engine.log.refresh_since()
-                # Re-snapshot AFTER the refresh (r4 ADVICE): if the slow
-                # commit landed between resolve's last manifest read and
-                # this refresh, `head` now covers the file's seqs but the
-                # stale `committed` set still excludes the file — the
-                # mx <= head branch would let committed_file_filter
-                # silently drop rows of a now-committed file the
-                # checkpointed source never redelivers. Recomputing
-                # committed/tomb/unknown from the refreshed meta makes
-                # the drop decision and the head check read ONE snapshot.
-                committed = set(self.engine.log._meta.get("files", []))
-                tomb = {
-                    t.get("file")
-                    for t in self.engine.log._meta.get("tombstones", [])
-                }
-                unknown = present - committed - tomb
-            if unknown:
-                mx = (
-                    batch.where(F.col("_src_file").isin(*unknown))
-                    .agg(F.max("seq").alias("m"))
-                    .collect()[0]
-                    .m
+        mx = batch.agg(F.max("seq").alias("m")).collect()[0].m
+        if mx is None:
+            return
+        # A seq past the committed head is normally an append whose
+        # commit is in flight: poll the manifest for up to 5 s, outside
+        # the engine lock so the wait stalls no gated read. Past that,
+        # fail the batch: the checkpoint does not advance, and the
+        # supervisor's restart redelivers it once the commit lands. A
+        # never-committed orphan's seqs are reassigned by a later
+        # commit, which then covers them.
+        deadline = time.monotonic() + 5.0
+        while (head := self.engine.log.refresh_since()) < mx:
+            if time.monotonic() >= deadline:
+                raise RuntimeError(
+                    f"micro-batch carries seq {mx} past the committed head "
+                    f"{head} after the grace window (an uncommitted append or "
+                    "an orphan file); failing the batch so the checkpoint "
+                    "does not advance"
                 )
-                if mx is not None and int(mx) > head:
-                    raise RuntimeError(
-                        "micro-batch carries uncommitted file(s) past the "
-                        f"grace window: {sorted(unknown)[:3]} (max seq {mx} "
-                        f"> committed head {head}); failing the batch so "
-                        "the checkpoint does not advance — the supervisor "
-                        "restart redelivers it once the commit lands"
-                    )
-        # Serialize with the engine's read-driven catch-up: Flume._gate ->
-        # _catch_up folds under engine._lock, and without taking the same
-        # lock here both paths can fold overlapping seq ranges — for
-        # append-style views (Level/Search/Bloom) that double-indexes the
-        # range. view.since is (re-)read only after acquiring, so a range
-        # the reader already folded shrinks to a no-op.
+            time.sleep(0.05)
+        # Serialize with the engine's read-driven catch-up (Flume._gate
+        # folds under the same lock), or both paths could fold one range
+        # and double-index append-style views (Level/Search/Bloom).
+        # view.since is read only after acquiring, so a range the reader
+        # or an earlier batch already folded is a no-op. Fold errors
+        # propagate: the query fails and the supervisor restarts it.
         with self.engine._lock:
-            # admit only manifest-committed source files first (orphans
-            # from torn appends / OCC-loser replays can carry committed
-            # seqs with DIFFERENT values — see committed_file_filter)
-            batch = committed_file_filter(
-                self.engine.log, batch, committed=committed, present=present
-            )
-            # restrict to genuinely-new records: redelivered batches after
-            # a crash re-run with seq <= view.since and fold to a no-op.
-            # dropDuplicates(seq): one discovery snapshot can briefly hold
-            # a per-commit file AND the compacted file that replaces it
-            # (same rows twice) — same seq is always the same record, so
-            # per-batch seq dedup is exact, not lossy.
-            fresh = batch.where(F.col("seq") > F.lit(view.since)).dropDuplicates(
-                ["seq"]
-            )
-            # persist before the max-seq agg: the agg and the view's own
-            # fold action would otherwise EACH re-run the source scan +
-            # filters + any Python mapper stage, doubling the Spark work
-            # done while this lock blocks every gated read
-            fresh = fresh.persist()
-            try:
-                row = fresh.agg(F.max("seq").alias("m")).collect()[0]
-                if row.m is None:
-                    return
-                mapped = self.engine._mapped(fresh.select("seq", "ts", "value"))
-                view.fold(mapped, int(row.m))
-            finally:
-                fresh.unpersist()
+            if self.view.since < head:
+                self.engine._feed(self.view, self.view.since, head)
 
     def start(self, trigger_seconds: float | None = None):
         if self.source == "datasource":
             from ..sources.flumelog_source import stream_log_custom
-            from pyspark.sql import functions as F
 
             src = stream_log_custom(self.engine.spark, self.engine.log).where(
                 F.col("seq") > F.lit(self.view.since)
             )
         else:
-            src = stream_log(
-                self.engine.spark,
-                self.engine.log,
-                gt=self.view.since,
-                with_provenance=True,
-            )
+            src = stream_log(self.engine.spark, self.engine.log, gt=self.view.since)
         writer = (
             src.writeStream.option("checkpointLocation", self.checkpoint_dir)
             .foreachBatch(self._fold_batch)

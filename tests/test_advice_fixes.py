@@ -63,10 +63,7 @@ def test_stream_fold_serializes_with_catchup(spark, tmp_log_dir):
 def test_source_pruning_checks_all_row_groups(tmp_path):
     """A file whose row group 0 is out of range but whose LATER row
     groups hold in-range seqs must not be pruned."""
-    from flumedb_spark.sources.flumelog_source import (
-        FlumeLogStreamReader,
-        _SeqRangePartition,
-    )
+    from flumedb_spark.sources.flumelog_source import FlumeLogStreamReader
 
     log_dir = tmp_path / "log"
     data = log_dir / "data"
@@ -87,12 +84,14 @@ def test_source_pruning_checks_all_row_groups(tmp_path):
         json.dumps({"files": ["000000000000.parquet"], "since": 104})
     )
 
-    reader = FlumeLogStreamReader(str(log_dir), 100_000)
+    reader = FlumeLogStreamReader(str(log_dir))
     # range (50, 104]: row group 0's max (4) <= 50 — pruning on rg0 alone
     # would skip the whole file and drop seqs 100-104
-    part = _SeqRangePartition(str(log_dir), 50, 104)
+    parts = reader.partitions({"since": 50}, {"since": 104})
     # read() yields Arrow RecordBatches (the DataSource API batch path)
-    seqs = [s for b in reader.read(part) for s in b.column("seq").to_pylist()]
+    seqs = [
+        s for p in parts for b in reader.read(p) for s in b.column("seq").to_pylist()
+    ]
     assert seqs == list(range(100, 105))
 
 

@@ -198,6 +198,38 @@ def test_library_ann_stays_jvm_side(spark, sf_dir, monkeypatch):
     assert len(seen) >= 4  # the spy saw the materialized tables too
 
 
+def _lsh_bucket_join(df):
+    """The ``BroadcastHashJoin`` on ``(tbl, bucket)`` in ``df``'s physical
+    plan (AQE's input plan, before any stage runs)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "BroadcastHashJoin" and "tbl" in node.leftKeys().toString():
+            return node
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    raise AssertionError("no (tbl, bucket) broadcast join")
+
+
+def test_lsh_broadcasts_the_bounded_query_side(spark, sf_dir):
+    """A bounded LSH query side is broadcast by hint and the bucket table
+    streams, whatever the size statistics say: the catalog row's
+    ``vec_id < 5`` frame and ``lsh_ann_topk(query_ids=...)``'s."""
+    from flumedb_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    for df, query_filter in (
+        (entry.queries()["ns_lsh_ann_topk_md5"](spark, sf_dir), "< 5)"),
+        (similarity.lsh_ann_topk(emb, query_ids=[0, 1], k=5), "IN (0,1)"),
+    ):
+        join = _lsh_bucket_join(df)
+        assert query_filter in join.buildPlan().toString()
+        assert query_filter not in join.streamedPlan().toString()
+
+
 def test_retrieval_selection_family_plan_shapes(plans):
     """Late-r6 family #2: BM25's top-k must be TakeOrderedAndProject
     (distributed partial top-k, never a single-partition global sort),

@@ -4,9 +4,11 @@ import json
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from flumedb_spark import Flume, NativeStats
+from flumedb_spark.log import OffsetLog, ParquetLog, VersionedLog, load_manifest
 from flumedb_spark.streaming.live import (
     LiveViewRunner,
     stream_log,
@@ -310,6 +312,67 @@ def test_live_runner_with_custom_source_on_versioned_log(spark, tmp_log_dir):
     assert live == gated.fresh.get() and live["sum"] == 12
     gated.close()
     db.close()
+
+
+_BACKENDS = {"parquet": ParquetLog, "offset": OffsetLog, "versioned": VersionedLog}
+
+
+@pytest.mark.parametrize("source", ["files", "datasource"])
+@pytest.mark.parametrize("kind", ["parquet", "offset", "versioned"])
+def test_live_runner_over_backends(spark, tmp_log_dir, kind, source):
+    """Both live sources fold exactly once on every log backend, across a
+    compaction between micro-batches, and the live fold is metered like
+    a gated fold (``meta["items"]`` = rows folded)."""
+    db = Flume(_BACKENDS[kind](tmp_log_dir), spark=spark)
+    db.use("stats", NativeStats(1, field="foo"))
+    db.append([{"foo": 1}, {"foo": 2}])
+    db.append({"foo": 3})
+    runner = LiveViewRunner(db, "stats", source=source)
+    runner.start()
+    try:
+        runner.process_all_available()
+        s = db.stats.get(since=-1)
+        assert (s["count"], s["sum"]) == (3, 6)
+        db.log.compact(spark, target_rows_per_file=100)
+        db.append([{"foo": 4}, {"foo": 5}])
+        runner.process_all_available()
+        assert db.stats.since == db.since
+        s = db.stats.get(since=-1)
+        assert (s["count"], s["sum"]) == (5, 15)
+        assert db.stats.meta["items"] == 5
+    finally:
+        runner.stop()
+    db.close()
+
+
+@pytest.mark.parametrize("kind", ["parquet", "offset"])
+def test_datasource_plans_one_partition_per_overlapping_file(tmp_log_dir, kind):
+    """The offset source plans by each committed file's recorded seqs,
+    never by seq arithmetic (OffsetLog seqs are byte offsets)."""
+    from flumedb_spark.sources.flumelog_source import FlumeLogStreamReader
+
+    log = _BACKENDS[kind](tmp_log_dir)
+    heads = [log.append([{"foo": i}, {"foo": i + 1}]) for i in range(0, 6, 2)]
+    reader = FlumeLogStreamReader(tmp_log_dir)
+    files = load_manifest(tmp_log_dir)["files"]
+
+    def planned(gt, lte):
+        return [
+            os.path.basename(p.file)
+            for p in reader.partitions({"since": gt}, {"since": lte})
+        ]
+
+    assert planned(-1, heads[2]) == files
+    assert planned(heads[0], heads[2]) == files[1:]
+    assert planned(heads[0], heads[1]) == files[1:2]
+    assert planned(heads[2], heads[2]) == []
+    rows = [
+        r
+        for p in reader.partitions({"since": heads[0]}, {"since": heads[2]})
+        for b in reader.read(p)
+        for r in b.column("seq").to_pylist()
+    ]
+    assert len(rows) == 4 and min(rows) > heads[0] and max(rows) == heads[2]
 
 
 def test_stream_static_enrichment_join(spark, tmp_log_dir, tmp_path):
@@ -650,7 +713,8 @@ def test_stream_fold_ignores_uncommitted_orphan_files(spark, tmp_log_dir):
     an IN-FLIGHT append whose commit is slow, so the batch FAILS (the
     checkpoint must not advance — silently dropping a slow commit would
     lose its rows forever); once the real commit covers those seqs the
-    redelivered batch drops the orphan and folds only committed rows."""
+    redelivered batch folds the committed range from the manifest, which
+    never lists the orphan."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     import pytest as _pytest
