@@ -21,19 +21,24 @@ Spark-first design (SURVEY.md §1.4):
   ``seq <= since`` so a torn append (file written, meta not) is invisible.
   At cluster scale the same protocol is a Delta/Iceberg commit; the
   manifest-swap shape is identical.
-- reads: ``spark.read.parquet`` — seq-range predicates push down to
-  Parquet min/max (the reference's only pushdown, `index.js:39`), column
-  pruning covers the ``seqs/values`` projection flags (`index.js:96-113`).
-  Point gets (``get``, ``read_seqs``) read the same files in the driver
-  through Arrow with a seq filter, so a one-record read starts no job.
+- reads: every commit records each of its files' ``[min_seq, max_seq,
+  rows]`` in the manifest's ``ranges`` (Delta's per-file ``add``
+  statistics), beside the plain ``files`` list. A range read plans only
+  the files whose range overlaps it, and a point get opens only the
+  files whose range holds a wanted seq; a file without a range (a
+  manifest written before ranges were recorded) is always read. Inside
+  the planned files, seq predicates push down to Parquet min/max (the
+  reference's only pushdown, `index.js:39`), and column pruning covers
+  the ``seqs/values`` projection flags (`index.js:96-113`). Point gets
+  (``get``, ``read_seqs``) read in the driver through Arrow with a seq
+  filter, so a one-record read starts no job.
 
-Files are named by commit index so lexical order == seq order; at scale
-the appender also buckets files into ``seq_bucket=N/`` subdirs (see
-``bucket_size``) so a bounded range scan prunes whole directories.
+Files are named by commit index so lexical order == seq order.
 """
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import time
@@ -101,6 +106,56 @@ def read_parquet_where(
     if where is not None:
         cond = cond & where
     return data.to_table(columns=list(columns), filter=cond)
+
+
+def footer_range(md: pq.FileMetaData) -> list | None:
+    """``[min_seq, max_seq, rows]`` of one log file from its footer, over
+    all row groups (group 0's max alone would miss later groups' seqs);
+    ``[None, None, 0]`` for a file without rows, and None when a group
+    has no seq statistics, so the file is never pruned."""
+    col = md.schema.names.index("seq")
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        if rg.num_rows == 0:
+            continue
+        st = rg.column(col).statistics
+        if st is None or not st.has_min_max:
+            return None
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return [lo, hi, md.num_rows]
+
+
+def files_in_range(meta: dict, gt: int | None, lte: int | None) -> list[str]:
+    """The manifest's files that may hold a seq in ``(gt, lte]`` (None =
+    unbounded), in manifest order: each file whose recorded range
+    overlaps, and each file without a range."""
+    ranges = meta.get("ranges", {})
+    out = []
+    for f in meta.get("files", []):
+        r = ranges.get(f)
+        if r is None or (
+            r[2] > 0 and (gt is None or r[1] > gt) and (lte is None or r[0] <= lte)
+        ):
+            out.append(f)
+    return out
+
+
+def _files_holding(meta: dict, seqs: list[int]) -> list[str]:
+    """The manifest's files whose recorded range holds at least one of
+    the sorted ``seqs``, and each file without a range."""
+    ranges = meta.get("ranges", {})
+    out = []
+    for f in meta.get("files", []):
+        r = ranges.get(f)
+        if r is None:
+            out.append(f)
+        elif r[2] > 0:
+            i = bisect.bisect_left(seqs, r[0])
+            if i < len(seqs) and seqs[i] <= r[1]:
+                out.append(f)
+    return out
 
 
 def _version_files(txn_dir: str) -> list[str]:
@@ -176,12 +231,11 @@ class ParquetLog:
     #: the seq format is log-implementation-defined).
     DENSE = True
 
-    def __init__(self, path: str, bucket_size: int = 1_000_000, codec="json"):
+    def __init__(self, path: str, codec="json"):
         self.codec = CODECS[codec] if isinstance(codec, str) else codec
         self.path = path
         self.data_dir = os.path.join(path, "data")
         self.meta_path = os.path.join(path, "meta.json")
-        self.bucket_size = bucket_size
         self._since_subscribers: list = []
         os.makedirs(self.data_dir, exist_ok=True)
         # Reference parity (README.md:197-201): `since` is UNDEFINED until
@@ -347,6 +401,10 @@ class ParquetLog:
             meta["since"] = seqs[-1]
             meta["commits"] = commit + 1
             meta["files"] = meta.get("files", []) + [fname]
+            meta["ranges"] = {
+                **meta.get("ranges", {}),
+                fname: [seqs[0], seqs[-1], len(seqs)],
+            }
             if meta_updates:
                 meta.update(meta_updates)
             return seqs[-1]
@@ -474,10 +532,13 @@ class ParquetLog:
         # committed data. Relative order within the commit is preserved
         # (the -bNNNNN index precedes the suffix lexically).
         run_id = uuid.uuid4().hex[:8]
+        new_ranges = {}
         for i, f in enumerate(parts):
             name = f"{commit:010d}-b{i:05d}-{run_id}.parquet"
-            shutil.move(os.path.join(tmp, f), os.path.join(self.data_dir, name))
+            dst = os.path.join(self.data_dir, name)
+            shutil.move(os.path.join(tmp, f), dst)
             new_names.append(name)
+            new_ranges[name] = footer_range(pq.read_metadata(dst))
         shutil.rmtree(tmp, ignore_errors=True)
         if not dense:
             # exact tail state for offset seqs: last record's frame size
@@ -498,36 +559,49 @@ class ParquetLog:
         meta["since"] = new_since
         meta["commits"] = commit + 1
         meta["files"] = meta.get("files", []) + new_names
+        meta["ranges"] = {**meta.get("ranges", {}), **new_ranges}
         return new_since
 
     # ---- read path ----------------------------------------------------
-    def df(self, spark: SparkSession, meta: dict | None = None) -> DataFrame:
-        """The committed log as a DataFrame: manifest-listed files only
-        (torn appends and compaction leftovers are invisible). Reads a
-        LOCAL manifest snapshot — read paths never publish to
-        ``self._meta``, so they can't clobber a writer's in-flight
-        commit from another thread. Pass ``meta`` to plan over an
-        explicit snapshot (compaction diffs against the same snapshot
-        it scanned, so a commit landing mid-compact can't be both
-        compacted and kept in the tail)."""
+    def df(
+        self,
+        spark: SparkSession,
+        meta: dict | None = None,
+        gt: int | None = None,
+        lte: int | None = None,
+    ) -> DataFrame:
+        """The committed rows with seq in ``(gt, lte]`` (None = unbounded)
+        as a DataFrame. Only manifest-listed files are read (torn appends
+        and compaction leftovers are invisible), and of those only the
+        ones whose recorded seq range overlaps the bound. Reads a LOCAL
+        manifest snapshot — read paths never publish to ``self._meta``,
+        so they can't clobber a writer's in-flight commit from another
+        thread. Pass ``meta`` to plan over an explicit snapshot
+        (compaction diffs against the same snapshot it scanned, so a
+        commit landing mid-compact can't be both compacted and kept in
+        the tail)."""
         if meta is None:
             meta = self._load_meta()
-        since = meta["since"]
-        files = meta.get("files", [])
-        if since < 0 or not files:
+        hi = meta["since"] if lte is None else min(int(lte), meta["since"])
+        files = files_in_range(meta, gt, hi)
+        if hi < 0 or not files:
             return spark.createDataFrame([], LOG_SCHEMA)
         paths = [os.path.join(self.data_dir, f) for f in files]
         df = spark.read.schema(LOG_SCHEMA).parquet(*paths)
-        return df.where(F.col("seq") <= F.lit(since))
+        if gt is not None:
+            df = df.where(F.col("seq") > F.lit(int(gt)))
+        return df.where(F.col("seq") <= F.lit(hi))
 
     def read_seqs(self, seqs) -> list[dict]:
         """The committed ``{"seq", "value"}`` rows whose seq is in
-        ``seqs``, read in the driver through Arrow (no Spark job): the
-        point-get path. Scans and folds go through :meth:`df`."""
+        ``seqs``, read in the driver through Arrow (no Spark job) from
+        the files whose range holds a wanted seq: the point-get path.
+        Scans and folds go through :meth:`df`."""
         meta = self._load_meta()
-        paths = [os.path.join(self.data_dir, f) for f in meta.get("files", [])]
+        wanted = sorted({int(s) for s in seqs if s is not None})
+        paths = [os.path.join(self.data_dir, f) for f in _files_holding(meta, wanted)]
         return read_parquet_where(
-            paths, "seq", seqs, ("seq", "value"), ds.field("seq") <= meta["since"]
+            paths, "seq", wanted, ("seq", "value"), ds.field("seq") <= meta["since"]
         ).to_pylist()
 
     def get(self, spark: SparkSession, seq: int) -> dict | None:
@@ -557,19 +631,19 @@ class ParquetLog:
         ``ordered=False`` skips the global seq sort (a range-partition
         sampling job plus a shuffle) for consumers that take the rows as
         a set, like view folds and point gets; `reverse` and `limit`
-        need the order, so they cannot be combined with it.
+        need the order, so they cannot be combined with it. The scan
+        plans only the files whose seq range overlaps the bounds
+        (:meth:`df`).
         """
         if not ordered and (reverse or limit is not None):
             raise ValueError("stream_df: reverse/limit need ordered=True")
-        df = self.df(spark)
-        if gt is not None:
-            df = df.where(F.col("seq") > F.lit(int(gt)))
+        # seqs are integers: gte=g is gt=g-1 and lt=l is lte=l-1, so the
+        # four bounds reduce to the tightest (gt, lte]
         if gte is not None:
-            df = df.where(F.col("seq") >= F.lit(int(gte)))
+            gt = int(gte) - 1 if gt is None else max(int(gt), int(gte) - 1)
         if lt is not None:
-            df = df.where(F.col("seq") < F.lit(int(lt)))
-        if lte is not None:
-            df = df.where(F.col("seq") <= F.lit(int(lte)))
+            lte = int(lt) - 1 if lte is None else min(int(lte), int(lt) - 1)
+        df = self.df(spark, gt=gt, lte=lte)
         if ordered:
             df = df.orderBy(F.col("seq").desc() if reverse else F.col("seq").asc())
         if limit is not None:
@@ -634,8 +708,8 @@ class ParquetLog:
         Long-running logs accumulate one file per append commit; scan
         cost grows with file count even when data volume doesn't. The
         compactor rewrites the committed prefix into
-        ``ceil(n/target)`` range-partitioned, seq-sorted files (so
-        parquet min/max keeps pruning ranges), swaps them in via the
+        ``ceil(n/target)`` range-partitioned, seq-sorted files (so each
+        file's recorded seq range stays narrow), swaps them in via the
         same tmp-dir + meta protocol appends use, and leaves any
         concurrent post-compaction appends untouched. Returns the
         number of files after compaction.
@@ -678,46 +752,53 @@ class ParquetLog:
         # orphans; readers never see duplicates), then GC the old files
         import shutil
 
-        new_names = []
+        new_ranges = {}
         parts = [f for f in sorted(os.listdir(tmp)) if f.endswith(".parquet")]
         run_id = uuid.uuid4().hex[:8]  # concurrent OCC compactors must not collide
         for i, f in enumerate(parts):
             name = f"compacted-{since:012d}-{i:05d}-{run_id}.parquet"
-            shutil.move(os.path.join(tmp, f), os.path.join(self.data_dir, name))
-            new_names.append(name)
+            dst = os.path.join(self.data_dir, name)
+            shutil.move(os.path.join(tmp, f), dst)
+            new_ranges[name] = footer_range(pq.read_metadata(dst))
         shutil.rmtree(tmp, ignore_errors=True)
-        # appends may have landed since df() was planned: keep any
-        # manifest entries newer than the compacted prefix. The swap is
-        # a write transaction like any other (re-runnable: pure
-        # recompute over the fresh manifest).
-        def stage(current: dict) -> int:
-            old = set(old_files)  # hoisted: per-element set() is O(n^2)
-            cur = set(current["files"])
-            # concurrent-compactor guard (r4 review): if ANOTHER
-            # compaction already replaced part of our snapshot's prefix,
-            # our new files would DUPLICATE the rows the other
-            # compactor's output (now in the tail) already carries —
-            # permanently, since neither copy gets tombstoned. Abort;
-            # our staged files become harmless orphans.
-            if old - cur:
-                # staged names are regular parquet FILES (moved
-                # part-files) — rmtree would raise NotADirectoryError
-                # and silently no-op under ignore_errors, leaking
-                # orphans into data_dir (r4 ADVICE)
-                for name in new_names:
+        return self._swap_files(old_files, new_ranges)[1]
+
+    def _swap_files(self, old_files: list[str], new_ranges: dict, deleted: int = 0):
+        """Commit the staged files ``new_ranges`` (name -> seq range) in
+        place of ``old_files``, which become TOMBSTONES. Appends may have
+        landed since the rewrite was planned: manifest entries newer
+        than ``old_files`` are kept after the new files. The swap is a
+        write transaction like any other (re-runnable: pure recompute
+        over the fresh manifest). Returns ``(committed, files after)``.
+
+        Concurrent-rewrite guard: if ANOTHER compaction already
+        replaced part of ``old_files``, the new files would DUPLICATE
+        rows that compaction's output (now in the tail) already carries
+        — permanently, since neither copy gets tombstoned. Abort; the
+        staged files are removed one by one (they are regular files:
+        ``rmtree`` would raise NotADirectoryError and silently no-op
+        under ignore_errors, leaking orphans into data_dir)."""
+        old = set(old_files)
+
+        def stage(current: dict):
+            if old - set(current["files"]):
+                for name in new_ranges:
                     try:
                         os.remove(os.path.join(self.data_dir, name))
                     except OSError:
                         pass
-                raise _NoCommit(len(current["files"]))
-            replaced = [f for f in current["files"] if f in old]
+                raise _NoCommit((False, len(current["files"])))
             tail = [f for f in current["files"] if f not in old]
-            current["files"] = new_names + tail
+            ranges = current.get("ranges", {})
+            current["files"] = list(new_ranges) + tail
+            current["ranges"] = {**new_ranges, **{f: ranges[f] for f in tail if f in ranges}}
             now = time.time()
             current["tombstones"] = current.get("tombstones", []) + [
-                {"file": f, "ts": now} for f in replaced
+                {"file": f, "ts": now} for f in old_files
             ]
-            return len(new_names) + len(tail)
+            if deleted:
+                current["deleted"] = current.get("deleted", 0) + deleted
+            return True, len(current["files"])
 
         return self._write_txn(stage)
 
@@ -753,10 +834,9 @@ class ParquetLog:
         """Redact committed records by seq (right-to-be-forgotten).
 
         The mechanism is the compactor's, scoped to the files that can
-        contain the targets: parquet footer min/max on ``seq`` prunes
-        the manifest down to affected files (a LOCAL metadata read, no
-        scan), one Spark job rewrites just those files without the
-        redacted rows, and one atomic manifest commit swaps them in —
+        contain the targets: the manifest's per-file seq ranges prune it
+        down to the affected files (no file is opened), one Spark job
+        rewrites just those files without the redacted rows, and one atomic manifest commit swaps them in —
         originals become TOMBSTONES, so physical erasure completes at
         :meth:`vacuum` (the OPTIMIZE/VACUUM separation applies to
         redaction too: in-flight readers keep a consistent snapshot
@@ -772,13 +852,13 @@ class ParquetLog:
         export sync carries redaction to external readers unchanged.
 
         Returns the number of rows actually deleted. At 100 TB the
-        footer prune keeps the rewrite proportional to affected files
+        range prune keeps the rewrite proportional to affected files
         (deletion batches cluster in recent files in practice).
         ``seqs`` may be an iterable (broadcast into the rewrite filter
         — the takedown-batch form) or a single-column DataFrame of
         seqs (anti-join rewrite — the bulk-redaction form: the target
         set never passes through the driver; only its min/max/count
-        scalars do, for the footer prune and the no-op check).
+        scalars do, for the range prune and the no-op check).
         """
         target_df = None
         if isinstance(seqs, DataFrame):
@@ -800,29 +880,9 @@ class ParquetLog:
                 return 0
             smin, smax = targets[0], targets[-1]
         snap = self._load_meta()
-        if snap["since"] < 0 or not snap.get("files"):
+        if snap["since"] < 0:
             return 0
-        import pyarrow.parquet as pq
-        affected = []
-        for name in snap["files"]:
-            md = pq.ParquetFile(os.path.join(self.data_dir, name)).metadata
-            hit = md.num_row_groups == 0
-            for rg in range(md.num_row_groups):
-                rgm = md.row_group(rg)
-                seq_idx = next(
-                    i
-                    for i in range(rgm.num_columns)
-                    if rgm.column(i).path_in_schema == "seq"
-                )
-                st = rgm.column(seq_idx).statistics
-                if st is None or st.min is None:  # no stats: conservative
-                    hit = True
-                    break
-                if st.min <= smax and st.max >= smin:
-                    hit = True
-                    break
-            if hit:
-                affected.append(name)
+        affected = files_in_range(snap, smin - 1, smax)
         if not affected:
             return 0
         paths = [os.path.join(self.data_dir, f) for f in affected]
@@ -842,45 +902,23 @@ class ParquetLog:
         import shutil
 
         run_id = uuid.uuid4().hex[:8]
-        new_names = []
+        new_ranges = {}
         kept = 0
         for i, f in enumerate(
             sorted(p for p in os.listdir(tmp) if p.endswith(".parquet"))
         ):
             src = os.path.join(tmp, f)
-            n_rows = pq.ParquetFile(src).metadata.num_rows
-            if n_rows == 0:  # don't re-manifest empty shards
+            md = pq.read_metadata(src)
+            if md.num_rows == 0:  # don't re-manifest empty shards
                 continue
-            kept += n_rows
+            kept += md.num_rows
             name = f"redacted-{i:05d}-{run_id}.parquet"
             shutil.move(src, os.path.join(self.data_dir, name))
-            new_names.append(name)
+            new_ranges[name] = footer_range(md)
         shutil.rmtree(tmp, ignore_errors=True)
         deleted = before - kept
-
-        def stage(current: dict) -> int:
-            old = set(affected)
-            cur = set(current["files"])
-            if old - cur:
-                # a concurrent compaction replaced part of our snapshot:
-                # our rewrite would resurrect rows its output already
-                # carries. Abort; staged files become harmless orphans.
-                for name in new_names:
-                    try:
-                        os.remove(os.path.join(self.data_dir, name))
-                    except OSError:
-                        pass
-                raise _NoCommit(0)
-            tail = [f for f in current["files"] if f not in old]
-            current["files"] = new_names + tail
-            now = time.time()
-            current["tombstones"] = current.get("tombstones", []) + [
-                {"file": f, "ts": now} for f in affected
-            ]
-            current["deleted"] = current.get("deleted", 0) + deleted
-            return deleted
-
-        return self._write_txn(stage)
+        committed, _ = self._swap_files(affected, new_ranges, deleted)
+        return deleted if committed else 0
 
     def destroy(self) -> None:
         import shutil
@@ -980,8 +1018,8 @@ class VersionedLog(ParquetLog):
     #: committed versions retained behind the head before pruning
     keep_versions = 16
 
-    def __init__(self, path: str, bucket_size: int = 1_000_000, codec="json"):
-        super().__init__(path, bucket_size=bucket_size, codec=codec)
+    def __init__(self, path: str, codec="json"):
+        super().__init__(path, codec=codec)
         self.txn_dir = os.path.join(path, "_log")
         os.makedirs(self.txn_dir, exist_ok=True)
 

@@ -13,6 +13,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _half_physical_memory() -> str:
+    """Half the host's physical memory, as a JVM size."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, total // 2 >> 20)}m"
+
+
 def get_spark(app_name: str = "flumedb_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -54,8 +60,13 @@ def get_spark(app_name: str = "flumedb_spark", cpus: int | None = None) -> Spark
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local mode = driver IS the executor: size the heap like an
         # executor's (32 task threads x cached tables + shuffle buffers;
-        # an 8g heap puts the 32-thread md5/explode paths into GC churn)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # an 8g heap puts the 32-thread md5/explode paths into GC churn),
+        # but within the host: half its physical memory, so a long-lived
+        # JVM's heap cannot grow until the host runs out
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _half_physical_memory(),
+        )
         # extra driver JVM opts, env-pluggable for experiments (a
         # ReservedCodeCacheSize bump was A/B'd for the 24-shape codegen
         # workload and showed no effect beyond host noise — default none)

@@ -15,7 +15,8 @@ uses, so a ``VersionedLog``'s ``_log/`` versions resolve like a
   files freely between micro-batches, because each batch re-resolves
   its seq range against the current manifest;
 - one partition per committed file that overlaps the batch's seq range,
-  planned from each file's footer min/max seq, read once per file name.
+  planned from the seq ranges the manifest records for its files (a file
+  without one is always planned).
 
 Register once per session then:
 
@@ -34,7 +35,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from ..log import load_manifest
+from ..log import files_in_range, load_manifest
 
 LOG_DDL = "seq bigint, ts timestamp, value string"
 
@@ -48,32 +49,12 @@ class _FilePartition(InputPartition):
         self.lte = lte
 
 
-def _seq_range(fpath: str) -> tuple[int | None, int | None]:
-    """A file's min and max seq from its footer, over ALL row groups (row
-    group 0's max alone would prune files whose later groups hold
-    in-range seqs); ``(None, None)`` when a group has no statistics, so
-    the file is never pruned."""
-    import pyarrow.parquet as pq
-
-    md = pq.read_metadata(fpath)
-    lo = hi = None
-    for g in range(md.num_row_groups):
-        stats = md.row_group(g).column(0).statistics
-        if stats is None or stats.min is None or stats.max is None:
-            return None, None
-        lo = stats.min if lo is None else min(lo, stats.min)
-        hi = stats.max if hi is None else max(hi, stats.max)
-    return lo, hi
-
-
 class FlumeLogStreamReader(DataSourceStreamReader):
     """Offsets are ``{"since": <seq>}`` — the log's own watermark."""
 
     def __init__(self, path: str):
         self.path = path
         self.data_dir = os.path.join(path, "data")
-        # file path -> footer seq range; committed files are immutable
-        self._ranges: dict[str, tuple[int | None, int | None]] = {}
 
     def _since(self) -> int:
         return load_manifest(self.path)["since"]
@@ -88,21 +69,14 @@ class FlumeLogStreamReader(DataSourceStreamReader):
         """One partition per committed file whose seq range overlaps
         ``(gt, lte]``, resolved against the current manifest, so
         compaction can rewrite files between micro-batches. Files are
-        planned by their recorded seqs, never by seq arithmetic: on an
-        ``OffsetLog`` seqs are byte offsets."""
+        planned by the seq ranges the manifest records, never by seq
+        arithmetic: on an ``OffsetLog`` seqs are byte offsets."""
         gt, lte = start["since"], end["since"]
         if lte <= gt:
             return []
-        paths = [
-            os.path.join(self.data_dir, f)
-            for f in load_manifest(self.path).get("files", [])
-        ]
-        # paths that left the manifest (compacted away) drop out
-        self._ranges = {p: self._ranges.get(p) or _seq_range(p) for p in paths}
         return [
-            _FilePartition(p, gt, lte)
-            for p, (lo, hi) in self._ranges.items()
-            if lo is None or (hi > gt and lo <= lte)
+            _FilePartition(os.path.join(self.data_dir, f), gt, lte)
+            for f in files_in_range(load_manifest(self.path), gt, lte)
         ]
 
     def read(self, partition: _FilePartition):

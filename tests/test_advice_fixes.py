@@ -93,6 +93,10 @@ def test_source_pruning_checks_all_row_groups(tmp_path):
         s for p in parts for b in reader.read(p) for s in b.column("seq").to_pylist()
     ]
     assert seqs == list(range(100, 105))
+    # the range a commit records for such a file spans every row group
+    from flumedb_spark.log import footer_range
+
+    assert footer_range(pq.read_metadata(data / "000000000000.parquet")) == [0, 104, 10]
 
 
 # ---- atomic scalar-state commit -------------------------------------

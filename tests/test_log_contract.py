@@ -14,6 +14,9 @@ Behaviors covered per (backend, mapper) combination:
 - rebuild delivery counting: no loss, no duplication (rebuild.js:19-62)
 - driver-side point gets (``db.get``, ``Level.get``) equal the Spark scan,
   before and after redaction and compaction
+- range reads, planned from the manifest's per-file seq ranges, equal the
+  full scan's filter after redaction and compaction, and a manifest
+  written before ranges were recorded still reads every row
 """
 
 import math
@@ -252,4 +255,70 @@ def test_point_gets_match_the_scan(spark, tmp_log_dir, backend):
     db.log.compact(spark)
     db._views["idx"].compact()
     assert len(check()) == len(scan) - 1
+    db.close()
+
+
+def _seqs(df) -> list[int]:
+    return sorted(r.seq for r in df.select("seq").collect())
+
+
+def _check_range_reads(db, spark) -> list[int]:
+    """Range reads and point gets equal the full scan's filter, and the
+    manifest's ``ranges`` name exactly its ``files``. Bounds sit inside
+    files and on file edges (each commit holds five records)."""
+    meta = db.log._load_meta()
+    assert set(meta["ranges"]) == set(meta["files"])
+    seqs = _seqs(db.log.df(spark))
+    bounds = [
+        (None, seqs[3]),
+        (seqs[2], seqs[9]),
+        (seqs[4], seqs[5]),
+        (seqs[7], None),
+        (seqs[-1], None),
+        (None, None),
+    ]
+    for gt, lte in bounds:
+        want = [s for s in seqs if (gt is None or s > gt) and (lte is None or s <= lte)]
+        assert _seqs(db.log.stream_df(spark, gt=gt, lte=lte, ordered=False)) == want
+    assert _seqs(db.log.stream_df(spark, gte=seqs[5], lt=seqs[12], ordered=False)) == seqs[5:12]
+    assert sorted(r["seq"] for r in db.log.read_seqs(seqs[3:8])) == seqs[3:8]
+    return seqs
+
+
+def test_range_reads_match_the_full_scan(spark, tmp_log_dir, backend):
+    """A range read plans only the files whose recorded seq range
+    overlaps it. On every backend it must equal the full scan's filter,
+    and stay equal after redaction, compaction and later appends."""
+    db = Flume(backend(tmp_log_dir + "/log"), spark=spark)
+    for c in range(4):
+        db.append([{"c": c, "i": i} for i in range(5)])
+    seqs = _check_range_reads(db, spark)
+    assert db.delete_seqs([seqs[6], seqs[13]]) == 2
+    assert len(_check_range_reads(db, spark)) == 18
+    db.append([{"c": 4, "i": i} for i in range(5)])
+    db.log.compact(spark)
+    db.append([{"c": 5, "i": i} for i in range(5)])
+    assert len(_check_range_reads(db, spark)) == 28
+    db.close()
+
+
+def test_manifest_without_ranges_reads_every_file(spark, tmp_log_dir, backend):
+    """A manifest written before ranges were recorded: every file is
+    read, and the next append records a range for its own files only."""
+    db = Flume(backend(tmp_log_dir + "/log"), spark=spark)
+    for c in range(3):
+        db.append([{"c": c, "i": i} for i in range(5)])
+    full = db.stream()
+    db.log._write_txn(lambda meta: meta.pop("ranges"))
+    old_files = db.log._load_meta()["files"]
+    assert "ranges" not in db.log._load_meta()
+    assert db.stream() == full
+    seqs = [i["seq"] for i in full]
+    assert _seqs(db.log.stream_df(spark, gt=seqs[3], lte=seqs[11], ordered=False)) == seqs[4:12]
+    assert [db.get(s) for s in seqs] == [i["value"] for i in full]
+    db.append([{"c": 3, "i": i} for i in range(5)])
+    meta = db.log._load_meta()
+    assert set(meta["ranges"]) == set(meta["files"]) - set(old_files)
+    assert len(db.stream()) == 20
+    assert len(_seqs(db.log.stream_df(spark, gt=seqs[-1], ordered=False))) == 5
     db.close()

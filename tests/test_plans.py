@@ -8,6 +8,7 @@ A regression here is a performance bug even when results stay correct.
 
 import contextlib
 import io
+import os
 import re
 
 import pytest
@@ -491,6 +492,31 @@ def test_unordered_log_scan_has_no_sort(spark, tmp_path):
     assert re.search(r"\bSort\b", p) and "rangepartitioning" in p, p
     with pytest.raises(ValueError):
         log.stream_df(spark, limit=3, ordered=False)
+    db.close()
+
+
+def test_range_scan_plans_only_the_overlapping_files(spark, tmp_path):
+    # each commit records its file's seq range in the manifest: a range
+    # scan hands Spark only the files overlapping (gt, lte], not every
+    # committed file, and a scan without bounds still reads them all
+    from flumedb_spark import Flume
+
+    db = Flume(str(tmp_path / "log"), spark=spark)
+    for c in range(5):
+        db.append([{"n": 10 * c + i} for i in range(10)])
+    files = db.log._load_meta()["files"]
+
+    def planned(**bounds):
+        df = db.log.stream_df(spark, ordered=False, **bounds)
+        return sorted(os.path.basename(f) for f in df.inputFiles())
+
+    assert planned(gt=14, lte=25) == sorted(files[1:3])
+    assert planned(gt=19, lte=29) == [files[2]]
+    assert planned(gte=20, lt=30) == [files[2]]
+    assert planned(gt=9, lte=10) == [files[1]]
+    assert planned(gt=49) == []  # nothing past the head
+    assert planned() == sorted(files)
+    assert db.log.stream_df(spark, gt=14, lte=25, ordered=False).count() == 11
     db.close()
 
 
