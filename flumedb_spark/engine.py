@@ -46,6 +46,7 @@ import time
 from typing import Any, Callable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from .log import ParquetLog
@@ -353,14 +354,14 @@ class Flume:
         """The mapper over a handful of fetched ``(seq, value)`` log rows
         (point gets). A Python mapper runs in the driver with the same
         encode/decode round trip as :meth:`_mapped`; an
-        :class:`ExprMapper` is one projection over a local DataFrame of
-        the rows, so every read path evaluates it the same way."""
+        :class:`ExprMapper` is one projection over an Arrow-built local
+        DataFrame of the rows, which Spark evaluates in the driver
+        without a job, so every read path evaluates it the same way."""
         if self.mapper is None or not rows:
             return rows
         if isinstance(self.mapper, ExprMapper):
-            local = self.spark.createDataFrame(
-                [(r["seq"], r["value"]) for r in rows], "seq long, value string"
-            )
+            schema = pa.schema([("seq", pa.int64()), ("value", pa.string())])
+            local = self.spark.createDataFrame(pa.Table.from_pylist(rows, schema))
             return [r.asDict() for r in self._mapped(local).collect()]
         codec, mapper = self.log.codec, self.mapper
         return [
@@ -667,10 +668,10 @@ class Flume:
 
     # ---- maintenance (roadmap #7: cost-based compaction) ----------------
     def maintain(self, **policy) -> dict[str, object]:
-        """Run every due compaction across the log and the views that
-        support one (cost-based triggers — see ``ParquetLog.
-        compaction_due`` / ``Level.compaction_due``). Policy kwargs are
-        forwarded to the log trigger. Returns what ran:
+        """Run every due compaction across the log and the run-store
+        views (cost-based triggers — see ``ParquetLog.compaction_due``
+        and ``RunView.maybe_compact``, which merges a view's runs past
+        16). Policy kwargs are forwarded to the log trigger. Returns what ran:
         ``{"log": n_files_after | None, "views": [names compacted]}``.
 
         Safe to call any time: triggers read only local metadata, the
@@ -689,8 +690,8 @@ class Flume:
         for name, view in self._views.items():
             if getattr(view, "maybe_compact", None) and view.maybe_compact():
                 out["views"].append(name)  # type: ignore[union-attr]
-            # view-side vacuum: snapshots/index files replaced by folds
-            # or compaction are deletion-deferred (views/base.py
+            # view-side vacuum: runs replaced by compaction are
+            # deletion-deferred (views/base.py
             # defer_delete) and die here once past retention. Under the
             # engine lock: the meta mutation + commit must not race a
             # concurrent fold's json.dump of the same dict.

@@ -90,14 +90,7 @@ def read_parquet_where(
     write) stands for its data files. Each value is cast to the column's
     type, as Spark casts a literal against a typed column: ``"5"`` finds
     5 in a long column and ``"abc"`` raises. ``None`` matches nothing."""
-    files = []
-    for p in paths:
-        if os.path.isdir(p):
-            files += sorted(
-                os.path.join(p, f) for f in os.listdir(p) if not f.startswith(("_", "."))
-            )
-        else:
-            files.append(p)
+    files = parquet_files(paths)
     wanted = [v for v in values if v is not None]
     if not files or not wanted:
         return pa.table({c: pa.array([]) for c in columns})
@@ -108,19 +101,36 @@ def read_parquet_where(
     return data.to_table(columns=list(columns), filter=cond)
 
 
-def footer_range(md: pq.FileMetaData) -> list | None:
-    """``[min_seq, max_seq, rows]`` of one log file from its footer, over
-    all row groups (group 0's max alone would miss later groups' seqs);
-    ``[None, None, 0]`` for a file without rows, and None when a group
-    has no seq statistics, so the file is never pruned."""
-    col = md.schema.names.index("seq")
+def parquet_files(paths: list[str]) -> list[str]:
+    """The Parquet files at ``paths``: a file stands for itself, a
+    directory (a Spark write) for its data files."""
+    files = []
+    for p in paths:
+        if os.path.isdir(p):
+            files += sorted(
+                os.path.join(p, f) for f in os.listdir(p) if not f.startswith(("_", "."))
+            )
+        else:
+            files.append(p)
+    return files
+
+
+def footer_range(md: pq.FileMetaData, column: str = "seq") -> list | None:
+    """``[min, max, rows]`` of ``column`` in one Parquet file from its
+    footer, over all row groups (group 0's max alone would miss later
+    groups' values); ``[None, None, 0]`` for a file without rows, and
+    None when a group has no statistics or they are not JSON-native
+    (int, float or str), so the file is never pruned. The log records
+    it per file under ``seq``, the run-store views per run under their
+    key (``views/base.py``)."""
+    col = md.schema.names.index(column)
     lo = hi = None
     for g in range(md.num_row_groups):
         rg = md.row_group(g)
         if rg.num_rows == 0:
             continue
         st = rg.column(col).statistics
-        if st is None or not st.has_min_max:
+        if st is None or not st.has_min_max or not isinstance(st.min, (int, float, str)):
             return None
         lo = st.min if lo is None else min(lo, st.min)
         hi = st.max if hi is None else max(hi, st.max)
@@ -142,9 +152,10 @@ def files_in_range(meta: dict, gt: int | None, lte: int | None) -> list[str]:
     return out
 
 
-def _files_holding(meta: dict, seqs: list[int]) -> list[str]:
+def files_holding(meta: dict, values: list) -> list[str]:
     """The manifest's files whose recorded range holds at least one of
-    the sorted ``seqs``, and each file without a range."""
+    the sorted ``values`` (seqs for the log, keys for a view's runs),
+    and each file without a range."""
     ranges = meta.get("ranges", {})
     out = []
     for f in meta.get("files", []):
@@ -152,8 +163,8 @@ def _files_holding(meta: dict, seqs: list[int]) -> list[str]:
         if r is None:
             out.append(f)
         elif r[2] > 0:
-            i = bisect.bisect_left(seqs, r[0])
-            if i < len(seqs) and seqs[i] <= r[1]:
+            i = bisect.bisect_left(values, r[0])
+            if i < len(values) and values[i] <= r[1]:
                 out.append(f)
     return out
 
@@ -599,7 +610,7 @@ class ParquetLog:
         Scans and folds go through :meth:`df`."""
         meta = self._load_meta()
         wanted = sorted({int(s) for s in seqs if s is not None})
-        paths = [os.path.join(self.data_dir, f) for f in _files_holding(meta, wanted)]
+        paths = [os.path.join(self.data_dir, f) for f in files_holding(meta, wanted)]
         return read_parquet_where(
             paths, "seq", wanted, ("seq", "value"), ds.field("seq") <= meta["since"]
         ).to_pylist()
@@ -765,9 +776,11 @@ class ParquetLog:
 
     def _swap_files(self, old_files: list[str], new_ranges: dict, deleted: int = 0):
         """Commit the staged files ``new_ranges`` (name -> seq range) in
-        place of ``old_files``, which become TOMBSTONES. Appends may have
-        landed since the rewrite was planned: manifest entries newer
-        than ``old_files`` are kept after the new files. The swap is a
+        place of ``old_files``, which become TOMBSTONES. Each new file
+        stands before the first kept file holding later seqs, so
+        manifest order stays seq order: a compaction's output heads the
+        manifest, ahead of the appends that landed since it was
+        planned, and a redaction's stands where its files stood. The swap is a
         write transaction like any other (re-runnable: pure recompute
         over the fresh manifest). Returns ``(committed, files after)``.
 
@@ -788,10 +801,19 @@ class ParquetLog:
                     except OSError:
                         pass
                 raise _NoCommit((False, len(current["files"])))
-            tail = [f for f in current["files"] if f not in old]
+            files = [f for f in current["files"] if f not in old]
             ranges = current.get("ranges", {})
-            current["files"] = list(new_ranges) + tail
-            current["ranges"] = {**new_ranges, **{f: ranges[f] for f in tail if f in ranges}}
+            ranges = {**{f: ranges[f] for f in files if f in ranges}, **new_ranges}
+            for name, r in new_ranges.items():
+                # a kept file without a range (written before ranges
+                # were recorded) counts as later
+                later = (
+                    i for i, f in enumerate(files)
+                    if ranges.get(f) is None or (r and ranges[f][2] and ranges[f][0] > r[0])
+                )
+                files.insert(next(later, len(files)), name)
+            current["files"] = files
+            current["ranges"] = ranges
             now = time.time()
             current["tombstones"] = current.get("tombstones", []) + [
                 {"file": f, "ts": now} for f in old_files

@@ -20,17 +20,35 @@ order — the gate's feed and the live runner deliver the same unordered
 set. Order-insensitive folds (count/sum, index maintenance, latest-by-
 seq) run with full partition parallelism; a fold that needs seq order
 sorts the batch itself, as ``Reduce`` does (SURVEY §7.4.3).
+
+The five file-backed views (``Level``, ``Search``, ``Bloom``,
+``Hashtable``, ``GroupedStats``) share one state layout,
+:class:`RunView`: sorted runs with key ranges, the LSM shape of the
+leveldb store under flumeview-level. The view meta lists the runs in
+``files`` and records ``ranges`` (``{run: [min_key, max_key, rows]}``),
+the log manifest's exact shape, so ``log.footer_range`` and
+``log.files_holding`` serve both. Each view declares one associative
+merge aggregate. A fold applies it to the batch and appends one run
+sorted by key (O(batch) bytes); a point read opens only the runs whose
+range holds the key and merges in Arrow; a scan merges in Spark; and
+one :meth:`RunView.compact` merges every run into one.
 """
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import json
 import os
 import shutil
 import uuid
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+
+from ..log import files_holding, footer_range, parquet_files, read_parquet_where
 
 
 class FlumeView:
@@ -86,12 +104,7 @@ class FlumeView:
         """Atomically persist state + watermark (SURVEY §7.4.2)."""
         self._persist_state()
         self._meta["since"] = int(new_since)
-        tmp = self._meta_path() + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(self._meta, f)
-            f.flush()
-            os.fsync(f.fileno())  # rename-before-data = torn meta on power loss
-        os.replace(tmp, self._meta_path())
+        write_atomic(self._meta_path(), json.dumps(self._meta).encode())
         self._notify_since()
 
     def on_since(self, cb, immediate: bool = True):
@@ -135,7 +148,7 @@ class FlumeView:
         raise NotImplementedError
 
     # ---- retention-gated deletion (r4 review) ---------------------------
-    #: seconds a replaced snapshot/index file survives after being
+    #: seconds a run replaced by compaction survives after being
     #: superseded — concurrent readers whose plans were resolved against
     #: the old manifest (and lazy 'source' DataFrames handed to callers)
     #: can still scan it. The log solved the same race with tombstones +
@@ -188,35 +201,143 @@ class FlumeView:
         pass
 
 
-def write_fold_file(view: "FlumeView", df: DataFrame, upto: int, data_dir: str) -> str | None:
-    """Write-once fold output for manifest-of-files views (Level /
-    Search / Bloom share this protocol): write ``df`` as one parquet
-    dir named ``{upto}-{uuid}``, decide emptiness from footers (never
-    re-run the — possibly Python-stage — plan), remove if empty.
-    Returns the file name to append to the manifest, or None.
-
-    Deliberately does NOT touch the manifest or commit: callers differ
-    in what must happen atomically around the append (Bloom invalidates
-    its sketch under a lock)."""
-    import uuid as _uuid
-
-    fname = f"{upto:012d}-{_uuid.uuid4().hex[:8]}.parquet"
-    fpath = os.path.join(data_dir, fname)
-    df.write.mode("overwrite").parquet(fpath)
-    if parquet_num_rows(fpath) > 0:
-        return fname
-    shutil.rmtree(fpath, ignore_errors=True)
-    return None
+def write_atomic(path: str, data: bytes) -> None:
+    """Write ``data`` to ``path`` through a tmp file, fsync and replace:
+    a crash leaves the old file or the new one, never a torn one
+    (rename-before-data would be a torn file on power loss)."""
+    tmp = f"{path}.tmp.{uuid.uuid4().hex}"
+    with open(tmp, "wb") as f:
+        f.write(data)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
 
 
-def parquet_num_rows(path: str) -> int:
-    """Row count of a written parquet dir from footers only (no scan) —
-    lets folds write ONCE and drop empty outputs, instead of running
-    the (possibly Python-stage) plan twice for an emptiness probe."""
-    import pyarrow.parquet as pq
+class RunView(FlumeView):
+    """A view whose state is sorted runs with key ranges (see the module
+    docstring). A subclass names its key column (``KEY``) and the empty
+    run's schema (``RUN_SCHEMA``), and overrides :meth:`_merge`; its
+    fold calls :meth:`append_run` on rows the merge has already
+    combined, then commits."""
 
-    total = 0
-    for f in os.listdir(path):
-        if f.endswith(".parquet"):
-            total += pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-    return total
+    #: the column every run is sorted by and ranged on
+    KEY = "key"
+    #: Spark DDL of a run's columns (``{key_type}`` is filled in)
+    RUN_SCHEMA = "key {key_type}"
+    key_type = "string"
+
+    def _merge(self, df: DataFrame) -> DataFrame:
+        """The view's merge aggregate over the rows of any runs: the
+        union by default (``Level`` keeps multiplicity)."""
+        return df
+
+    def _run_dir(self) -> str:
+        return os.path.join(self.path, "runs")
+
+    def _load_state(self) -> None:
+        if "ranges" not in self._meta:
+            # a store written before runs had key ranges (or none at
+            # all): rebuilt from the log, as a version bump is
+            self.destroy()
+        os.makedirs(self._run_dir(), exist_ok=True)
+
+    def _reset_state(self) -> None:
+        self._meta["files"] = []
+        self._meta["ranges"] = {}
+        os.makedirs(self._run_dir(), exist_ok=True)
+
+    def _write_run(self, df: DataFrame, prefix: str) -> tuple[str, list | None] | None:
+        """Write ``df`` as one run dir; returns its name and key range,
+        or None (the dir removed) when it holds no rows. Emptiness comes
+        from the footers, so the (possibly Python-stage) plan runs
+        once."""
+        name = f"{prefix}-{uuid.uuid4().hex[:8]}.parquet"
+        path = os.path.join(self._run_dir(), name)
+        df.write.mode("overwrite").parquet(path)
+        mds = [pq.read_metadata(f) for f in parquet_files([path])]
+        rows = sum(md.num_rows for md in mds)
+        if not rows:
+            shutil.rmtree(path, ignore_errors=True)
+            return None
+        parts = [footer_range(md, self.KEY) for md in mds if md.num_rows]
+        if any(r is None for r in parts):
+            return name, None
+        return name, [min(r[0] for r in parts), max(r[1] for r in parts), rows]
+
+    def append_run(self, rows: DataFrame, upto: int) -> str | None:
+        """Fold side: write a batch's merged ``rows`` as one run sorted by
+        key (``sortWithinPartitions``: no exchange, no sampling job),
+        record it in ``files`` and ``ranges``, and collect garbage past
+        retention. The caller commits. Returns the run's name, or None
+        for an empty batch."""
+        written = self._write_run(rows.sortWithinPartitions(self.KEY), f"{upto:012d}")
+        self.collect_garbage()
+        if written is None:
+            return None
+        name, rng = written
+        # fresh containers: a reader without the engine lock sees the
+        # old lists or the new ones, and a run without a range is
+        # always opened
+        self._meta["ranges"] = {**self._meta["ranges"], name: rng}
+        self._meta["files"] = self._meta["files"] + [name]
+        return name
+
+    @functools.cached_property
+    def _key_arrow_type(self) -> pa.DataType:
+        from pyspark.sql.pandas.types import to_arrow_type
+        from pyspark.sql.types import _parse_datatype_string
+
+        return to_arrow_type(_parse_datatype_string(self.key_type))
+
+    def read_runs(self, key: Any, columns) -> pa.Table:
+        """Point read in the driver (no Spark job): the rows under
+        ``key`` of the runs whose range holds it, unmerged. The key is
+        cast to the column type before it meets the ranges, as
+        ``read_parquet_where`` casts it: ``"5"`` finds 5 in a long
+        column and ``"abc"`` raises."""
+        if key is not None:
+            key = pa.array([key]).cast(self._key_arrow_type)[0].as_py()
+        runs = files_holding(self._meta, [key]) if key is not None else []
+        paths = [os.path.join(self._run_dir(), f) for f in runs]
+        return read_parquet_where(paths, self.KEY, [key], columns)
+
+    def runs_df(self) -> DataFrame:
+        """Every run's rows, unmerged (a scan applies :meth:`_merge`)."""
+        files = [os.path.join(self._run_dir(), f) for f in self._meta["files"]]
+        if not files:
+            return self.spark.createDataFrame([], self.RUN_SCHEMA.format(key_type=self.key_type))
+        return self.spark.read.parquet(*files)
+
+    def maybe_compact(self, max_files: int = 16) -> bool:
+        """Compact once there are more than ``max_files`` runs (every fold
+        adds one, so an always-on stream adds one per micro-batch; past
+        the bound the per-read open cost beats the one-off rewrite).
+        True when work was done."""
+        if len(self._meta["files"]) <= max_files:
+            return False
+        self.compact()
+        return True
+
+    def compact(self) -> None:
+        """Merge every run into one key-sorted run.
+
+        Serialized with the folds through the engine lock when attached:
+        without it, a fold committing a run between this method's scan
+        and its swap would have that run silently dropped while
+        ``since`` still claims its seqs are folded. The replaced runs
+        are deletion-deferred: a gated read that planned over them may
+        still be scanning after the lock releases (reads collect outside
+        it, and scans hand callers lazy DataFrames), the same race the
+        log solves with tombstones and vacuum. They die on a later fold
+        or ``maintain()`` once past retention."""
+        engine = self._engine
+        with engine._lock if engine is not None else contextlib.nullcontext():
+            old = self._meta["files"]
+            if not old:
+                return
+            written = self._write_run(self._merge(self.runs_df()).orderBy(self.KEY), "compact")
+            self._meta["ranges"] = {written[0]: written[1]} if written else {}
+            self._meta["files"] = list(self._meta["ranges"])
+            self.defer_delete(*[os.path.join("runs", f) for f in old])
+            self.collect_garbage()
+            self.commit(self.since)

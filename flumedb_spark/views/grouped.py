@@ -2,34 +2,32 @@
 
 The grouped form of flumeview-reduce (`README.md:92`'s reduce family
 generalized per key — the semantics `catalog.py::v1_reduce_grouped`
-declares, as a live view instead of a query). Each fold computes the
-batch's per-key mergeable partials (count / sum / sum-of-squares /
-min / max) with a native Spark aggregate, merges them against the prior
-snapshot by key, and swaps the snapshot atomically — the classic
-incremental-view-maintenance algebra: only new records are aggregated,
-never the history.
+declares, as a live view instead of a query). State is per-key
+mergeable partials (count / sum / sum-of-squares / min / max) kept as
+sorted runs (:class:`~.base.RunView`); the merge sums the partials and
+takes the min of the mins and the max of the maxes — the classic
+incremental-view-maintenance algebra. Each fold computes the batch's
+partials with a native Spark aggregate and appends them as one
+key-sorted run: only new records are aggregated, and only the batch's
+groups are written.
 
-At 100 TB: the snapshot is hash-partitioned by key; the merge touches
-only partitions containing batch keys (MERGE INTO on Delta); reads are
-pruned point/range lookups on the snapshot (``get`` reads it in the
-driver through Arrow).
+At 100 TB: the runs are hash-partitioned by key and ``compact()``
+merges them; reads are pruned point/range lookups (``get`` reads the
+runs holding its key in the driver through Arrow).
 """
 
 from __future__ import annotations
 
 import math
-import os
-import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..log import read_parquet_where
-from .base import FlumeView
+from .base import RunView
 
 
-class GroupedStats(FlumeView):
+class GroupedStats(RunView):
     """``GroupedStats(version, key_expr, field)`` — per-key running
     count/sum/mean/stdev/min/max over a numeric JSON field.
 
@@ -38,24 +36,13 @@ class GroupedStats(FlumeView):
     """
 
     METHODS = {"get": "async", "snapshot": "source", "n_groups": "async"}
+    RUN_SCHEMA = "key {key_type}, n long, s double, sq double, mn double, mx double"
 
     def __init__(self, version: Any, key_expr: str, field: str = "value", key_type: str = "string"):
         super().__init__(version)
         self.key_expr = key_expr
         self.field = field
         self.key_type = key_type
-
-    def _load_state(self) -> None:
-        self._meta.setdefault("snapshot", None)
-
-    def _reset_state(self) -> None:
-        self._meta["snapshot"] = None
-
-    def _snap_df(self) -> DataFrame | None:
-        snap = self._meta.get("snapshot")
-        if snap is None:
-            return None
-        return self.spark.read.parquet(os.path.join(self.path, snap))
 
     def _partials(self, df: DataFrame) -> DataFrame:
         x = F.get_json_object(F.col("value"), f"$.{self.field}").cast("double")
@@ -73,33 +60,17 @@ class GroupedStats(FlumeView):
             )
         )
 
-    @staticmethod
-    def _merge(a: DataFrame, b: DataFrame) -> DataFrame:
-        return (
-            a.unionByName(b)
-            .groupBy("key")
-            .agg(
-                F.sum("n").alias("n"),
-                F.sum("s").alias("s"),
-                F.sum("sq").alias("sq"),
-                F.min("mn").alias("mn"),
-                F.max("mx").alias("mx"),
-            )
+    def _merge(self, df: DataFrame) -> DataFrame:
+        return df.groupBy("key").agg(
+            F.sum("n").alias("n"),
+            F.sum("s").alias("s"),
+            F.sum("sq").alias("sq"),
+            F.min("mn").alias("mn"),
+            F.max("mx").alias("mx"),
         )
 
     def fold(self, batch: DataFrame, upto: int) -> None:
-        new = self._partials(batch)
-        prev = self._snap_df()
-        merged = self._merge(prev, new) if prev is not None else new
-        snap = f"snapshot-{upto:012d}-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(os.path.join(self.path, snap))
-        old = self._meta.get("snapshot")
-        self._meta["snapshot"] = snap
-        # retention-gated (see Hashtable.fold): concurrent readers may
-        # still scan the replaced snapshot
-        if old:
-            self.defer_delete(old)
-        self.collect_garbage()
+        self.append_run(self._partials(batch), upto)
         self.commit(upto)
 
     # ---- reads ---------------------------------------------------------
@@ -117,24 +88,18 @@ class GroupedStats(FlumeView):
         }
 
     def get(self, key: Any) -> dict | None:
-        """One group's stats: a driver-side Arrow read of the snapshot
-        (no Spark job), like ``Hashtable.get``."""
-        snap = self._meta.get("snapshot")
-        if snap is None:
+        """One group's stats: the partials of the runs holding ``key``,
+        merged in the driver (an Arrow read, no Spark job)."""
+        rows = self.read_runs(key, ("n", "s", "sq", "mn", "mx")).to_pylist()
+        if not rows:
             return None
-        rows = read_parquet_where(
-            [os.path.join(self.path, snap)], "key", [key], ("n", "s", "sq", "mn", "mx")
-        ).to_pylist()
-        return self._row_to_stats(rows[0]) if rows else None
+        merged = {c: sum(r[c] for r in rows) for c in ("n", "s", "sq")}
+        merged["mn"] = min(r["mn"] for r in rows)
+        merged["mx"] = max(r["mx"] for r in rows)
+        return self._row_to_stats(merged)
 
     def snapshot(self) -> DataFrame:
-        snap = self._snap_df()
-        if snap is None:
-            return self.spark.createDataFrame(
-                [], f"key {self.key_type}, n long, s double, sq double, mn double, mx double"
-            )
-        return snap
+        return self._merge(self.runs_df())
 
     def n_groups(self) -> int:
-        snap = self._snap_df()
-        return 0 if snap is None else snap.count()
+        return self.runs_df().select("key").distinct().count()

@@ -4,38 +4,37 @@ ARRAY of index keys per record, so one record may index under many keys;
 the index stores seq pointers and resolves back through the log —
 normalized views, `README.md:13-15`).
 
-Spark-first: the index is an incrementally-maintained ``(key, seq)``
-table. Each fold explodes the batch's keys and appends one Parquet file;
-the committed-file list lives in the view's meta (a mini manifest — the
-same commit shape Delta uses), so a retried fold never double-indexes
+Spark-first: the index is a ``(key, seq)`` table kept as sorted runs
+(:class:`~.base.RunView`). Its merge is the union: a record indexed
+twice under one key stays twice, so the index never takes ``distinct``.
+Each fold explodes the batch's keys and appends one key-sorted run;
+the run list lives in the view's meta (a mini manifest — the same
+commit shape Delta uses), so a retried fold never double-indexes
 (exactly-once, SURVEY §7.4.2). A point ``get`` reads Parquet in the
-driver through Arrow: the index files filtered on the key, then the
+driver through Arrow: the runs whose key range holds the key, then the
 log's rows for the matched seqs (``ParquetLog.read_seqs``), so it starts
-no Spark job. Key ranges (``read``) and folds stay on Spark: a pruned
-index scan + a join back to the log on ``seq``. The reference's
-charwise order-preserving key encoding is unnecessary because the index
-column keeps its native type and sorts natively (SURVEY §2.B V2).
+no Spark job. Key ranges (``read``) and folds stay on Spark: an index
+scan + a join back to the log on ``seq``. The reference's charwise
+order-preserving key encoding is unnecessary because the index column
+keeps its native type and sorts natively (SURVEY §2.B V2).
 
-At 100 TB: index files are appended per-batch and compacted by key-range
-(``compact()``); the range join-back broadcasts the matched seq set when
-small and sort-merges on ``seq`` otherwise.
+At 100 TB: runs are appended per batch and merged by ``compact()``;
+the range join-back broadcasts the matched seq set when small and
+sort-merges on ``seq`` otherwise.
 """
 
 from __future__ import annotations
 
-import os
-import uuid
 from typing import Any, Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..log import read_parquet_where
-from .base import FlumeView
+from .base import RunView
 
 
-class Level(FlumeView):
+class Level(RunView):
     """``Level(version, key_fn, key_type='string')`` — inverted key→seq index.
 
     ``key_fn(value) -> list[key]`` (arbitrary Python, run executor-side
@@ -45,6 +44,7 @@ class Level(FlumeView):
     """
 
     METHODS = {"get": "async", "read": "source"}
+    RUN_SCHEMA = "key {key_type}, seq long"
 
     def __init__(
         self,
@@ -59,17 +59,6 @@ class Level(FlumeView):
         self.key_fn = key_fn
         self.key_expr = key_expr
         self.key_type = key_type
-
-    def _data_dir(self) -> str:
-        return os.path.join(self.path, "idx")
-
-    def _load_state(self) -> None:
-        self._meta.setdefault("files", [])
-        os.makedirs(self._data_dir(), exist_ok=True)
-
-    def _reset_state(self) -> None:
-        self._meta["files"] = []
-        os.makedirs(self._data_dir(), exist_ok=True)
 
     def _keys_df(self, batch: DataFrame) -> DataFrame:
         if self.key_expr is not None:
@@ -98,23 +87,12 @@ class Level(FlumeView):
         return exploded.select(F.col("key").cast(self.key_type).alias("key"), "seq")
 
     def fold(self, batch: DataFrame, upto: int) -> None:
-        from .base import write_fold_file
-
-        fname = write_fold_file(self, self._keys_df(batch), upto, self._data_dir())
-        if fname is not None:
-            self._meta["files"] = self._meta.get("files", []) + [fname]
-        self.collect_garbage()
+        self.append_run(self._keys_df(batch), upto)
         self.commit(upto)
 
     # ---- reads ---------------------------------------------------------
-    def _files(self) -> list[str]:
-        return [os.path.join(self._data_dir(), f) for f in self._meta.get("files", [])]
-
     def df(self) -> DataFrame:
-        files = self._files()
-        if not files:
-            return self.spark.createDataFrame([], f"key {self.key_type}, seq long")
-        return self.spark.read.parquet(*files)
+        return self.runs_df()
 
     def _join_back(self, idx: DataFrame) -> DataFrame:
         # the filtered index side (a point get or key range) is tiny
@@ -133,10 +111,10 @@ class Level(FlumeView):
     def get(self, key: Any) -> list[dict]:
         """Point lookup: all log records indexed under ``key``, seq order
         (`test/rebuild.js:38,48`). Both halves are driver-side Arrow reads
-        (no Spark job): the index files filtered on ``key``, then the
+        (no Spark job): the runs whose range holds ``key``, then the
         log's committed rows for the matched seqs."""
         engine = self._engine
-        hits = read_parquet_where(self._files(), "key", [key], ("key", "seq")).to_pylist()
+        hits = self.read_runs(key, ("key", "seq")).to_pylist()
         fetched = engine._map_rows(engine.log.read_seqs({h["seq"] for h in hits}))
         values = {r["seq"]: r["value"] for r in fetched}
         # the join back on seq: a record indexed twice under ``key``
@@ -169,50 +147,3 @@ class Level(FlumeView):
         out = self._join_back(idx) if values else idx
         out = out.orderBy(*order)
         return out.limit(int(limit)) if limit is not None else out
-
-    def compaction_due(self, max_files: int = 16) -> bool:
-        """Manifest-length compaction trigger: every fold commit adds a
-        file, so an always-on maintenance stream grows the manifest one
-        file per micro-batch; past ``max_files`` the per-scan open cost
-        beats the one-off rewrite."""
-        return len(self._meta.get("files", [])) > max_files
-
-    def maybe_compact(self, max_files: int = 16) -> bool:
-        """Compact iff :meth:`compaction_due`; True when work was done."""
-        if not self.compaction_due(max_files):
-            return False
-        self.compact()
-        return True
-
-    def compact(self) -> None:
-        """Rewrite the manifest into one key-sorted file (run-of-the-mill
-        maintenance; at scale this is a per-key-range compaction job).
-
-        Serialized with the fold paths via engine._lock when attached:
-        without it, a fold committing a new index file between this
-        method's scan and its manifest swap would have that file's
-        postings silently dropped while view.since still claims the
-        seqs are indexed."""
-        import contextlib
-
-        lock = (
-            self._engine._lock
-            if self._engine is not None and hasattr(self._engine, "_lock")
-            else contextlib.nullcontext()
-        )
-        with lock:
-            df = self.df().orderBy("key", "seq")
-            fname = f"compact-{uuid.uuid4().hex[:8]}.parquet"
-            df.write.mode("overwrite").parquet(os.path.join(self._data_dir(), fname))
-            old = self._meta["files"]
-            self._meta["files"] = [fname]
-            # retention-gated deletion (r4 review): a gated read that
-            # resolved df() over the old manifest may still be scanning
-            # after the lock releases (reads collect OUTSIDE the lock,
-            # and read() hands callers a lazy DataFrame) — the same
-            # reader-vs-rewrite race ParquetLog solves with tombstones
-            # + vacuum. Old files die on a later fold/compact/maintain
-            # once the retention window passes.
-            self.defer_delete(*[os.path.join("idx", f) for f in old])
-            self.collect_garbage()
-            self.commit(self.since)

@@ -1,7 +1,8 @@
 """flumeview-search — full-text search view (`README.md:95`).
 
-Spark-first: an inverted index ``(token, seq)`` maintained exactly like
-the Level index (manifest-committed Parquet appends, exactly-once).
+Spark-first: an inverted index ``(token, seq)`` kept as token-sorted
+runs like the Level index (:class:`~.base.RunView`; exactly-once). Its
+merge is ``distinct``: one posting per (token, doc).
 Tokenization is fully JVM-side: ``explode(split(lower(text), '\\W+'))``
 — no Python in the hot path. A query AND-intersects the posting lists
 (semi-joins, smallest list first by construction of the group-count
@@ -14,15 +15,13 @@ set into the log scan.
 
 from __future__ import annotations
 
-import json
-import os
 import re
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .base import FlumeView
+from .base import RunView
 
 TOKEN_PATTERN = "[^a-z0-9]+"
 
@@ -33,45 +32,31 @@ def tokens_expr(col):
     return F.array_remove(F.split(F.lower(col), TOKEN_PATTERN), "")
 
 
-class Search(FlumeView):
+class Search(RunView):
     """``Search(version, text_field='text')`` — inverted token index over a
     JSON field of the log value."""
 
     METHODS = {"query": "async", "query_df": "source"}
+    KEY = "token"
+    RUN_SCHEMA = "token {key_type}, seq long"
 
     def __init__(self, version: Any, text_field: str = "text"):
         super().__init__(version)
         self.text_field = text_field
 
-    def _data_dir(self) -> str:
-        return os.path.join(self.path, "idx")
-
-    def _load_state(self) -> None:
-        self._meta.setdefault("files", [])
-        os.makedirs(self._data_dir(), exist_ok=True)
-
-    def _reset_state(self) -> None:
-        self._meta["files"] = []
-        os.makedirs(self._data_dir(), exist_ok=True)
+    def _merge(self, df: DataFrame) -> DataFrame:
+        return df.distinct()
 
     def fold(self, batch: DataFrame, upto: int) -> None:
         text = F.get_json_object(F.col("value"), f"$.{self.text_field}")
-        posting = (
-            batch.select("seq", F.explode(tokens_expr(text)).alias("token"))
-            .distinct()  # one posting per (token, doc)
-        )
-        from .base import write_fold_file
-
-        fname = write_fold_file(self, posting, upto, self._data_dir())
-        if fname is not None:
-            self._meta["files"] = self._meta.get("files", []) + [fname]
+        posting = batch.select("seq", F.explode(tokens_expr(text)).alias("token"))
+        self.append_run(self._merge(posting), upto)
         self.commit(upto)
 
     def df(self) -> DataFrame:
-        files = [os.path.join(self._data_dir(), f) for f in self._meta.get("files", [])]
-        if not files:
-            return self.spark.createDataFrame([], "token string, seq long")
-        return self.spark.read.parquet(*files)
+        # a seq is folded into exactly one run and each run is distinct,
+        # so the union of the runs is already merged
+        return self.runs_df()
 
     def query_df(self, terms: list[str] | str) -> DataFrame:
         """Seqs of records containing ALL terms (AND semantics).

@@ -130,6 +130,37 @@ def test_level_point_get_broadcasts_index(spark, tmp_path):
     db.close()
 
 
+def test_view_folds_plan_no_range_partitioning(spark, tmp_path):
+    # a fold sorts its run with sortWithinPartitions: an orderBy would
+    # plan a RangePartitioning exchange, whose sampling job every
+    # read-your-writes op would then pay
+    from flumedb_spark import Flume
+    from flumedb_spark.views.hashtable import Hashtable
+    from flumedb_spark.views.level import Level
+
+    db = Flume(str(tmp_path / "folds"), spark=spark)
+    db.use("idx", Level(1, key_expr="array(get_json_object(value, '$.k'))", key_type="long"))
+    db.use("ht", Hashtable(1, key_expr="get_json_object(value, '$.k')", key_type="long"))
+    plans = {}
+    for name in ("idx", "ht"):
+        view = db._views[name]
+
+        def spy(df, prefix, _write=view._write_run, _name=name):
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                df.explain(mode="formatted")
+            plans[_name] = buf.getvalue()
+            return _write(df, prefix)
+
+        view._write_run = spy
+    db.append([{"k": i % 7} for i in range(50)])
+    assert db.idx.get(3) and db.ht.get(3) == {"k": 3}
+    assert set(plans) == {"idx", "ht"}
+    for name, plan in plans.items():
+        assert "RangePartitioning" not in plan, name
+    db.close()
+
+
 def test_scoring_family_plan_shapes(plans):
     # late-r6 scoring family (SCALING posture):
     # - gopher_quality is a pure narrow projection: no join, no
@@ -521,8 +552,8 @@ def test_range_scan_plans_only_the_overlapping_files(spark, tmp_path):
 
 
 def test_hashtable_fold_merges_in_one_exchange(spark, tmp_path):
-    # the fold aggregates prev snapshot ∪ keyed batch ONCE: one hash
-    # exchange on key, not a per-batch latest and then a second merge
+    # the fold aggregates the keyed batch ONCE into its run: one hash
+    # exchange on key, and the key sort adds no range exchange
     from flumedb_spark import Flume
     from flumedb_spark.plans import formatted_plan
     from flumedb_spark.views.hashtable import Hashtable
@@ -530,11 +561,11 @@ def test_hashtable_fold_merges_in_one_exchange(spark, tmp_path):
     db = Flume(str(tmp_path / "log"), spark=spark)
     db.use("latest", Hashtable(1, key_expr="get_json_object(value, '$.k')", key_type="long"))
     db.append([{"k": i % 4, "n": i} for i in range(12)])
-    assert db.latest.get(3)["n"] == 11  # the snapshot exists now
+    assert db.latest.get(3)["n"] == 11  # the first run exists now
     db.append([{"k": i % 4, "n": 12 + i} for i in range(6)])
     view = db._views["latest"]
     batch = db.log.stream_df(spark, gt=view.since, lte=db.since, ordered=False)
-    merged = view._merged(batch)
+    merged = view._merge(view._batch_keys(batch)).sortWithinPartitions("key")
     # each Exchange node prints its partitioning as "Arguments: <kind>(..."
     exchanges = re.findall(r"Arguments: (\w+)\(", formatted_plan(merged))
     assert exchanges == ["hashpartitioning"], exchanges

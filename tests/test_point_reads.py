@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from flumedb_spark import ExprMapper, Flume
+from flumedb_spark.views.bloom import Bloom
 from flumedb_spark.views.grouped import GroupedStats
 from flumedb_spark.views.hashtable import Hashtable
 from flumedb_spark.views.level import Level
@@ -42,6 +43,13 @@ def _key_twice(v):
 
 def _enrich(v):
     return {**v, "mapped": v["v"] * 10}
+
+
+_DOUBLE_V = (
+    "to_json(named_struct('k', CAST(get_json_object(value, '$.k') AS BIGINT),"
+    " 'v', CAST(get_json_object(value, '$.v') AS BIGINT) * 10,"
+    " 'name', get_json_object(value, '$.name')))"
+)
 
 
 def _ht_oracle(db, view, key):
@@ -123,11 +131,7 @@ def test_level_and_db_get_match_join_back(spark, tmp_log_dir, mapper):
     mappers = {
         "none": None,
         "python": _enrich,
-        "expr": ExprMapper(
-            "to_json(named_struct('k', CAST(get_json_object(value, '$.k') AS BIGINT),"
-            " 'v', CAST(get_json_object(value, '$.v') AS BIGINT) * 10,"
-            " 'name', get_json_object(value, '$.name')))"
-        ),
+        "expr": ExprMapper(_DOUBLE_V),
     }
     db = Flume(tmp_log_dir, mapper=mappers[mapper], spark=spark)
     db.use("idx", Level(1, key_fn=_names))
@@ -190,9 +194,8 @@ def test_snapshot_dir_without_data_files(spark, tmp_log_dir):
         getattr(db, name).ready()
     assert db.ht.get(1) == RECS[1]
     # keep only the Spark write's markers (_SUCCESS, .crc files)
-    dirs = [os.path.join(db._views[n].path, db._views[n]._meta["snapshot"]) for n in ("ht", "g")]
-    view = db._views["idx"]
-    dirs += [os.path.join(view._data_dir(), f) for f in view._meta["files"]]
+    views = [db._views[n] for n in ("ht", "g", "idx")]
+    dirs = [os.path.join(v._run_dir(), f) for v in views for f in v._meta["files"]]
     for d in dirs:
         for f in os.listdir(d):
             if not f.startswith(("_", ".")):
@@ -204,14 +207,22 @@ def test_snapshot_dir_without_data_files(spark, tmp_log_dir):
 
 
 def test_point_gets_start_no_spark_job(spark, tmp_log_dir):
-    """Gated gets with nothing left to fold run entirely in the driver."""
+    """Gated gets with nothing left to fold run entirely in the driver:
+    the views' point reads, ``db.get`` and ``Level.get`` through an
+    ``ExprMapper`` (projected over an Arrow-built local frame), and both
+    ``Bloom`` probes."""
     db = Flume(tmp_log_dir, spark=spark)
     db.use("ht", Hashtable(1, key_expr="get_json_object(value, '$.k')", key_type="long"))
     db.use("idx", Level(1, key_expr="array(get_json_object(value, '$.k'))", key_type="long"))
     db.use("g", GroupedStats(1, "get_json_object(value, '$.k')", field="v", key_type="long"))
+    db.use("seen", Bloom(1, key_expr="get_json_object(value, '$.name')", expected_items=100))
     _fill(db)
-    for name in ("ht", "idx", "g"):
+    for name in ("ht", "idx", "g", "seen"):
         getattr(db, name).ready()
+    mapped = Flume(tmp_log_dir + "-mapped", mapper=ExprMapper(_DOUBLE_V), spark=spark)
+    mapped.use("idx", Level(1, key_expr="array(get_json_object(value, '$.k'))", key_type="long"))
+    _fill(mapped)
+    mapped.idx.ready()
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     group = f"point-gets-{uuid.uuid4().hex[:8]}"
@@ -226,10 +237,17 @@ def test_point_gets_start_no_spark_job(spark, tmp_log_dir):
         assert len(db.idx.get(3)) == len([r for r in RECS if r["k"] == 3])
         assert db.g.get(3)["count"] == len([r for r in RECS if r["k"] == 3])
         assert db.get(5) == RECS[5]
+        assert mapped.get(5) == {**RECS[5], "v": 50}
+        assert [r["value"]["v"] for r in mapped.idx.get(3)] == [
+            10 * r["v"] for r in RECS if r["k"] == 3
+        ]
+        assert db.seen.has("n2") and not db.seen.has("nope")
+        assert db.seen.might_have("n2")
         assert tracker.getJobIdsForGroup(group) == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     db.close()
+    mapped.close()
 
 
 def _name_str(v):

@@ -29,15 +29,17 @@ def events_rows(spark, sf_dir):
     )
 
 
-@pytest.fixture(scope="module")
-def db(spark, events_rows, tmp_path_factory):
-    d = Flume(str(tmp_path_factory.mktemp("parity") / "db"), spark=spark)
+def _fed_db(spark, events_rows, path, compact_mid_feed=False):
+    """The views fed through the real append path in uneven batches (log
+    seq == event_id because events are dense from 0). With
+    ``compact_mid_feed`` the run-store views also fold every few
+    appends and merge their runs once, halfway through the feed."""
+    d = Flume(path, spark=spark)
     d.use("by_user", Level(1, key_expr="array(get_json_object(value, '$.user_id'))", key_type="long"))
     d.use("latest", Hashtable(1, key_expr="get_json_object(value, '$.user_id')", key_type="long"))
     d.use("stats", NativeStats(1, field="value"))
     d.use("seen", Bloom(1, key_expr="get_json_object(value, '$.user_id')", expected_items=500))
-    # feed through the real append path in uneven batches (log seq ==
-    # event_id because events are dense from 0)
+    run_views = ("by_user", "latest", "seen")
     batch, size = [], 7
     for r in events_rows:
         batch.append(
@@ -46,8 +48,22 @@ def db(spark, events_rows, tmp_path_factory):
         if len(batch) == size:
             d.append(batch)
             batch, size = [], (size % 13) + 3
+            if compact_mid_feed and d.log.since % 4 == 0:
+                for name in run_views:
+                    getattr(d, name).ready()
+            if compact_mid_feed and d.log.since >= N_EVENTS // 2:
+                for name in run_views:
+                    assert len(d._views[name]._meta["files"]) > 1
+                    d._views[name].compact()
+                compact_mid_feed = False
     if batch:
         d.append(batch)
+    return d
+
+
+@pytest.fixture(scope="module")
+def db(spark, events_rows, tmp_path_factory):
+    d = _fed_db(spark, events_rows, str(tmp_path_factory.mktemp("parity") / "db"))
     yield d
     d.close()
 
@@ -95,6 +111,22 @@ def test_bloom_matches_membership_oracle(db, events_rows):
         assert db.seen.has(k) and db.seen.might_have(k)
     absent = max(members) + 1000
     assert not db.seen.has(absent)
+
+
+def test_oracles_hold_after_a_mid_feed_compaction(spark, events_rows, tmp_path):
+    # the same oracle checks, on one more input: the run-store views
+    # compacted halfway through the feed, then folded on top
+    d = _fed_db(spark, events_rows, str(tmp_path / "db"), compact_mid_feed=True)
+    for check in (
+        test_level_index_matches_oracle,
+        test_level_range_matches_oracle,
+        test_hashtable_matches_argmax_oracle,
+        test_stats_matches_aggregate_oracle,
+        test_bloom_matches_membership_oracle,
+    ):
+        check(d, events_rows)
+    assert all(len(d._views[n]._meta["files"]) >= 2 for n in ("by_user", "latest", "seen"))
+    d.close()
 
 
 # ---- empty-log edges -----------------------------------------------------

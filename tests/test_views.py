@@ -1,10 +1,13 @@
 """View-family tests (SURVEY §2.B): level index, hashtable, search,
 bloom, query DSL — including late registration, rebuild, persistence."""
 
+import os
+
 import pytest
 
 from flumedb_spark import Flume
 from flumedb_spark.views.bloom import Bloom
+from flumedb_spark.views.grouped import GroupedStats
 from flumedb_spark.views.hashtable import Hashtable
 from flumedb_spark.views.level import Level
 from flumedb_spark.views.query import Query
@@ -182,8 +185,6 @@ def test_query_dsl_sees_mapped_values(spark, tmp_log_dir):
 
 
 def test_grouped_stats_incremental(db):
-    from flumedb_spark.views.grouped import GroupedStats
-
     db.use("by_author_stats", GroupedStats(1, "get_json_object(value, '$.author')", field="likes"))
     s = db.by_author_stats.get("alice")
     assert s["count"] == 2 and s["sum"] == 10 and s["mean"] == 5
@@ -236,32 +237,148 @@ def test_bloom_no_false_negative_after_append_and_restart(spark, tmp_log_dir):
 
 
 def test_snapshot_deletion_is_retention_gated(spark, tmp_log_dir):
-    """r4 review: a fold must NOT rmtree the replaced snapshot/index
-    files immediately — a concurrent reader (or a lazy source DataFrame
-    handed to a caller) may still scan them. Replaced files are
-    deletion-deferred and die via maintain()'s vacuum once past
-    retention."""
-    import os
-
-    from flumedb_spark import Flume
-
+    """r4 review: compaction must NOT rmtree the runs it replaces — a
+    concurrent reader (or a lazy source DataFrame handed to a caller)
+    may still scan them. Replaced runs are deletion-deferred and die via
+    maintain()'s vacuum once past retention."""
     db = Flume(tmp_log_dir, spark=spark)
     db.use("ht", Hashtable(1, key_expr="get_json_object(value, '$.author')"))
     db.append(DOCS)
-    assert db.ht.get("alice") is not None  # fold 1 -> snapshot A
-    snap_a = db._views["ht"]._meta["snapshot"]
-    # grab a lazy frame over snapshot A (the caller-held reader)
-    lazy = db.ht.df_snapshot()
+    assert db.ht.get("alice") is not None  # fold 1 -> run A
     db.append({"author": "zed", "tags": [], "text": "", "likes": 1})
-    assert db.ht.get("zed") is not None  # fold 2 -> snapshot B, A deferred
-    a_path = os.path.join(db._views["ht"].path, snap_a)
-    assert os.path.exists(a_path), "old snapshot deleted immediately"
-    assert lazy.count() >= 3  # caller's lazy frame still scans fine
-    # vacuum with zero retention removes it
+    assert db.ht.get("zed") is not None  # fold 2 -> run B
+    view = db._views["ht"]
+    runs = [os.path.join(view._run_dir(), f) for f in view._meta["files"]]
+    assert len(runs) == 2
+    # grab a lazy frame over runs A and B (the caller-held reader)
+    lazy = db.ht.df_snapshot()
+    view.compact()  # A and B deferred
+    assert view._meta["files"] != [os.path.basename(r) for r in runs]
+    assert all(os.path.exists(r) for r in runs), "replaced run deleted immediately"
+    assert lazy.count() == 4  # caller's lazy frame still scans fine
+    # vacuum with zero retention removes them
     db.maintain(vacuum_after_seconds=0.0)
-    assert not os.path.exists(a_path)
+    assert not any(os.path.exists(r) for r in runs)
     # the garbage queue is durably trimmed
-    assert db._views["ht"]._meta.get("garbage", []) == []
+    assert view._meta.get("garbage", []) == []
+    assert db.ht.get("zed")["likes"] == 1 and db.ht.get("alice")["likes"] == 7
+    db.close()
+
+
+# ---- the run store shared by the file-backed views ------------------------
+
+
+def _part_files(view, run):
+    d = os.path.join(view._run_dir(), run)
+    return [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
+
+
+def test_folds_write_one_batch_sized_run(spark, tmp_log_dir):
+    """A fold writes O(batch): 100 rows folded into a 100k-key Hashtable
+    and GroupedStats add one run of at most 100 footer rows each, and
+    leave every earlier run's files as they were."""
+    import pyarrow.parquet as pq
+
+    db = Flume(tmp_log_dir, spark=spark)
+    db.use("ht", Hashtable(1, key_expr="get_json_object(value, '$.k')", key_type="long"))
+    db.use("g", GroupedStats(1, "get_json_object(value, '$.k')", field="v", key_type="long"))
+    db.append([{"k": i, "v": i} for i in range(100_000)])
+    views = [db._views["ht"], db._views["g"]]
+    db.ht.ready()
+    db.g.ready()
+    before = []
+    for v in views:
+        files = [f for run in v._meta["files"] for f in _part_files(v, run)]
+        before.append((list(v._meta["files"]), {f: os.stat(f).st_mtime_ns for f in files}))
+    db.append([{"k": 1000 * i, "v": 1} for i in range(100)])
+    assert db.ht.get(5000) == {"k": 5000, "v": 1}
+    assert db.g.get(5000)["count"] == 2 and db.g.get(5000)["sum"] == 5001
+    for v, (runs, mtimes) in zip(views, before):
+        new = [f for f in v._meta["files"] if f not in runs]
+        assert v._meta["files"][: len(runs)] == runs and len(new) == 1, v.name
+        assert sum(pq.read_metadata(f).num_rows for f in _part_files(v, new[0])) <= 100
+        assert v._meta["ranges"][new[0]] == [0, 99_000, 100]
+        assert {f: os.stat(f).st_mtime_ns for f in mtimes} == mtimes
+    db.close()
+
+
+def _twice_first_tag(v):
+    return v["tags"] + v["tags"][:1]
+
+
+def test_maintain_compacts_every_run_view(spark, tmp_log_dir):
+    """Past 16 runs, maintain() merges each run-store view into one run,
+    and no answer changes: Level keeps its multiplicity, keep="first"
+    keeps the first writer, the Bloom sketch still covers every key."""
+    author = "get_json_object(value, '$.author')"
+    db = Flume(tmp_log_dir, spark=spark)
+    db.use("idx", Level(1, key_fn=_twice_first_tag))
+    db.use("ht", Hashtable(1, key_expr=author))
+    db.use("first", Hashtable(1, key_expr=author, keep="first"))
+    db.use("g", GroupedStats(1, author, field="likes"))
+    db.use("s", Search(1))
+    db.use("seen", Bloom(1, key_expr=author, expected_items=100))
+    names = ["idx", "ht", "first", "g", "s", "seen"]
+    authors = [f"a{i % 6}" for i in range(17)]
+    for i, a in enumerate(authors):
+        db.append({"author": a, "tags": ["db", f"t{i}"], "text": f"log w{i % 3}", "likes": i})
+        for n in names:
+            getattr(db, n).ready()
+
+    def answers():
+        return (
+            [(h["seq"], h["key"]) for h in db.idx.get("db")],
+            [(db.ht.get(a), db.first.get(a), db.g.get(a)) for a in sorted(set(authors))],
+            [r["seq"] for r in db.s.query(["log", "w1"])],
+            [(db.seen.has(a), db.seen.might_have(a)) for a in authors],
+            db.ht.keys(),
+            db.g.n_groups(),
+            db.seen.approx_count(),
+        )
+
+    before = answers()
+    assert all(len(db._views[n]._meta["files"]) == 17 for n in names)
+    assert len(before[0]) == 2 * 17
+    assert db.first.get("a1")["likes"] == 1 and db.ht.get("a1")["likes"] == 13
+    out = db.maintain()
+    assert sorted(out["views"]) == sorted(names)
+    assert all(len(db._views[n]._meta["files"]) == 1 for n in names)
+    assert answers() == before
+    assert db.maintain()["views"] == []  # one run each: nothing due
+    # folds keep appending runs after the compaction
+    db.append({"author": "a1", "tags": ["db"], "text": "log w1", "likes": 99})
+    assert db.ht.get("a1")["likes"] == 99 and db.first.get("a1")["likes"] == 1
+    assert db.g.get("a1")["count"] == 4 and len(db.idx.get("db")) == 2 * 18
+    assert db.s.query(["log", "w1"])[-1]["seq"] == 17
+    db.close()
+
+
+def test_store_without_ranges_rebuilds_on_attach(spark, tmp_log_dir):
+    """A view store whose meta records no key ranges (the snapshot
+    layout, or index files without ranges) is destroyed on attach and
+    rebuilt from the log."""
+    import json
+
+    db = Flume(tmp_log_dir, spark=spark)
+    db.append(DOCS)
+    layouts = {
+        "ht": {"since": 3, "version": 1, "snapshot": "snapshot-000000000003-0badc0de"},
+        "idx": {"since": 3, "version": 1, "files": ["000000000003-0badc0de.parquet"]},
+    }
+    for name, meta in layouts.items():
+        path = os.path.join(db.dir, "views", name)
+        os.makedirs(path)
+        with open(os.path.join(path, "meta.json"), "w") as f:
+            json.dump(meta, f)
+        os.makedirs(os.path.join(path, meta.get("snapshot", "idx")))
+    db.use("ht", Hashtable(1, key_expr="get_json_object(value, '$.author')"))
+    db.use("idx", Level(1, key_fn=lambda v: v["tags"]))
+    for name in layouts:
+        view = db._views[name]
+        assert view.since == -1 and view._meta["ranges"] == {}
+        assert sorted(os.listdir(view.path)) == ["runs"]
+    assert db.ht.get("alice")["likes"] == 7
+    assert [h["seq"] for h in db.idx.get("db")] == [0, 1]
     db.close()
 
 
