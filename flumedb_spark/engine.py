@@ -54,6 +54,15 @@ from .views.base import FlumeView
 
 REQUIRED_VIEW_ATTRS = ("close", "fold", "destroy", "since")  # index.js:174-182
 
+#: A fold whose log files hold at most this many rows (the manifest's
+#: per-file counts) runs in the driver: below a few thousand rows a
+#: Spark job's fixed scheduling cost is most of the fold. It sits under
+#: the 10k-row commits of a typical backfill, which stay on Spark.
+DRIVER_FOLD_ROWS = 4096
+
+#: ``(seq, value)`` log rows as an Arrow-built local frame
+_ROWS = pa.schema([("seq", pa.int64()), ("value", pa.string())])
+
 
 class GateTimeout(TimeoutError):
     """ready(since=N) did not observe seq N within ``gate_wait_seconds``.
@@ -360,8 +369,7 @@ class Flume:
         if self.mapper is None or not rows:
             return rows
         if isinstance(self.mapper, ExprMapper):
-            schema = pa.schema([("seq", pa.int64()), ("value", pa.string())])
-            local = self.spark.createDataFrame(pa.Table.from_pylist(rows, schema))
+            local = self.spark.createDataFrame(pa.Table.from_pylist(rows, _ROWS))
             return [r.asDict() for r in self._mapped(local).collect()]
         codec, mapper = self.log.codec, self.mapper
         return [
@@ -550,17 +558,34 @@ class Flume:
     def _feed(self, view: FlumeView, gt: int, lte: int) -> None:
         """One incremental batch (seq in (gt, lte]) through the mapper into
         the view's fold — the pull pipeline of `index.js:51-55`. The
-        batch is unordered (see :meth:`FlumeView.fold`)."""
-        batch = self.log.stream_df(self.spark, gt=gt, lte=lte, ordered=False)
-        view.fold(self._mapped(batch), lte)
+        batch is unordered (see :meth:`FlumeView.fold`).
+
+        One manifest snapshot sizes the batch. When its files hold at
+        most ``DRIVER_FOLD_ROWS`` rows, the rows are read in the driver
+        through Arrow, mapped by :meth:`_map_rows` and handed to the fold
+        as an Arrow-built local frame (``batch.isLocal()``), on which the
+        views fold without a Spark job. Larger batches (backfill,
+        rebuild, catch-up after idle) are a Spark scan of the same
+        snapshot with the mapper composed."""
+        meta = self.log._load_meta()
+        table = self.log.read_range(meta, gt, lte, DRIVER_FOLD_ROWS)
+        if table is not None:
+            rows = self._map_rows(table.to_pylist())
+            batch = self.spark.createDataFrame(pa.Table.from_pylist(rows, _ROWS))
+            n = table.num_rows
+        else:
+            scan = self.log.stream_df(self.spark, gt=gt, lte=lte, ordered=False, meta=meta)
+            batch = self._mapped(scan)
+        view.fold(batch, lte)
         # per-item meter (wrap.js:67,74-76): rows delivered through the
-        # feed. Dense seqs make the count exact with zero extra Spark
-        # work; non-dense backends (OffsetLog) pay one pruned range
-        # count. A rebuild re-delivers and re-counts, mirroring
-        # test/rebuild.js:21-23.
+        # feed. A driver batch counts its rows; on Spark, dense seqs make
+        # the count exact with zero extra work and non-dense backends
+        # (OffsetLog) pay one pruned range count. A rebuild re-delivers
+        # and re-counts, mirroring test/rebuild.js:21-23.
         handle = self._handles.get(view.name)
         if handle is not None:
-            n = (lte - gt) if self.log.DENSE else batch.count()
+            if table is None:
+                n = (lte - gt) if self.log.DENSE else scan.count()
             handle.meta["items"] = handle.meta.get("items", 0) + n
 
     def _catch_up(self, view: FlumeView, target: int) -> None:

@@ -30,8 +30,9 @@ Spark-first design (SURVEY.md §1.4):
   the planned files, seq predicates push down to Parquet min/max (the
   reference's only pushdown, `index.js:39`), and column pruning covers
   the ``seqs/values`` projection flags (`index.js:96-113`). Point gets
-  (``get``, ``read_seqs``) read in the driver through Arrow with a seq
-  filter, so a one-record read starts no job.
+  (``get``, ``read_seqs``) and small folds (``read_range``, a few
+  thousand rows by the manifest's counts) read in the driver through
+  Arrow with a seq filter, so they start no job.
 
 Files are named by commit index so lexical order == seq order.
 """
@@ -84,20 +85,23 @@ def _decode(raw: str) -> Any:
 def read_parquet_where(
     paths: list[str], column: str, values, columns, where: ds.Expression | None = None
 ) -> pa.Table:
-    """Point read in the driver, no Spark job: the rows of the Parquet
-    files at ``paths`` whose ``column`` is in ``values`` (and that match
-    ``where``), as an Arrow table of ``columns``. A directory (a Spark
-    write) stands for its data files. Each value is cast to the column's
-    type, as Spark casts a literal against a typed column: ``"5"`` finds
-    5 in a long column and ``"abc"`` raises. ``None`` matches nothing."""
+    """Read in the driver, no Spark job: the rows of the Parquet files at
+    ``paths`` whose ``column`` is in ``values`` (and that match
+    ``where``), as an Arrow table of ``columns``; ``values=None`` filters
+    by ``where`` alone (a range read). A directory (a Spark write) stands
+    for its data files. Each value is cast to the column's type, as
+    Spark casts a literal against a typed column: ``"5"`` finds 5 in a
+    long column and ``"abc"`` raises. A ``None`` value matches nothing."""
     files = parquet_files(paths)
-    wanted = [v for v in values if v is not None]
-    if not files or not wanted:
+    wanted = None if values is None else [v for v in values if v is not None]
+    if not files or wanted == []:
         return pa.table({c: pa.array([]) for c in columns})
     data = ds.dataset(files, format="parquet")
-    cond = ds.field(column).isin(pa.array(wanted).cast(data.schema.field(column).type))
-    if where is not None:
-        cond = cond & where
+    cond = where
+    if wanted is not None:
+        cond = ds.field(column).isin(pa.array(wanted).cast(data.schema.field(column).type))
+        if where is not None:
+            cond = cond & where
     return data.to_table(columns=list(columns), filter=cond)
 
 
@@ -545,27 +549,26 @@ class ParquetLog:
         run_id = uuid.uuid4().hex[:8]
         new_ranges = {}
         for i, f in enumerate(parts):
+            src = os.path.join(tmp, f)
+            md = pq.read_metadata(src)
+            if md.num_rows == 0:  # empty partitions stay out of the manifest
+                continue
             name = f"{commit:010d}-b{i:05d}-{run_id}.parquet"
-            dst = os.path.join(self.data_dir, name)
-            shutil.move(os.path.join(tmp, f), dst)
+            shutil.move(src, os.path.join(self.data_dir, name))
             new_names.append(name)
-            new_ranges[name] = footer_range(pq.read_metadata(dst))
+            new_ranges[name] = footer_range(md)
         shutil.rmtree(tmp, ignore_errors=True)
         if not dense:
-            # exact tail state for offset seqs: last record's frame size
-            # (read from the last non-empty staged file — footer + one
-            # column page, not a data scan)
-            last_val = None
-            for name in reversed(new_names):
-                t = pq.read_table(
-                    os.path.join(self.data_dir, name), columns=["seq", "value"]
-                )
-                if t.num_rows:
-                    last_val = t.column("value")[-1].as_py()
-                    new_since = t.column("seq")[-1].as_py()
-                    break
-            if last_val is None:  # all-empty batch
+            if not new_names:  # all-empty batch
                 raise _NoCommit(since)
+            # exact tail state for offset seqs: last record's frame size
+            # (read from the last staged file — footer + one column
+            # page, not a data scan)
+            t = pq.read_table(
+                os.path.join(self.data_dir, new_names[-1]), columns=["seq", "value"]
+            )
+            new_since = t.column("seq")[-1].as_py()
+            last_val = t.column("value")[-1].as_py()
             meta["last_frame"] = len(last_val.encode("utf-8")) + overhead
         meta["since"] = new_since
         meta["commits"] = commit + 1
@@ -607,13 +610,32 @@ class ParquetLog:
         """The committed ``{"seq", "value"}`` rows whose seq is in
         ``seqs``, read in the driver through Arrow (no Spark job) from
         the files whose range holds a wanted seq: the point-get path.
-        Scans and folds go through :meth:`df`."""
+        Small folds read through :meth:`read_range`, scans and large
+        folds through :meth:`df`."""
         meta = self._load_meta()
         wanted = sorted({int(s) for s in seqs if s is not None})
         paths = [os.path.join(self.data_dir, f) for f in files_holding(meta, wanted)]
         return read_parquet_where(
             paths, "seq", wanted, ("seq", "value"), ds.field("seq") <= meta["since"]
         ).to_pylist()
+
+    def read_range(self, meta: dict, gt: int, lte: int, max_rows: int) -> pa.Table | None:
+        """The committed ``(seq, value)`` rows with seq in ``(gt, lte]``
+        of the manifest snapshot ``meta``, read in the driver through
+        Arrow (no Spark job) from the files whose range overlaps: the
+        small-fold path. None when those files hold more than
+        ``max_rows`` rows by the manifest's per-file counts, or one of
+        them has no recorded range; the caller then scans through
+        :meth:`df`. Counts come from ``ranges``, not from seq arithmetic,
+        so byte-offset seqs size the same way."""
+        hi = min(int(lte), meta["since"])
+        files = files_in_range(meta, gt, hi)
+        ranges = [meta.get("ranges", {}).get(f) for f in files]
+        if None in ranges or sum(r[2] for r in ranges) > max_rows:
+            return None
+        paths = [os.path.join(self.data_dir, f) for f in files]
+        cond = (ds.field("seq") > int(gt)) & (ds.field("seq") <= hi)
+        return read_parquet_where(paths, "seq", None, ("seq", "value"), cond)
 
     def get(self, spark: SparkSession, seq: int) -> dict | None:
         """Point lookup (index.js:157-162). None if absent."""
@@ -634,6 +656,7 @@ class ParquetLog:
         seqs: bool = True,
         values: bool = True,
         ordered: bool = True,
+        meta: dict | None = None,
     ) -> DataFrame:
         """Range scan plan (index.js:149-156, README.md:130-133).
 
@@ -644,7 +667,8 @@ class ParquetLog:
         a set, like view folds and point gets; `reverse` and `limit`
         need the order, so they cannot be combined with it. The scan
         plans only the files whose seq range overlaps the bounds
-        (:meth:`df`).
+        (:meth:`df`), of ``meta`` when given, else of a fresh manifest
+        snapshot.
         """
         if not ordered and (reverse or limit is not None):
             raise ValueError("stream_df: reverse/limit need ordered=True")
@@ -654,7 +678,7 @@ class ParquetLog:
             gt = int(gte) - 1 if gt is None else max(int(gt), int(gte) - 1)
         if lt is not None:
             lte = int(lt) - 1 if lte is None else min(int(lte), int(lt) - 1)
-        df = self.df(spark, gt=gt, lte=lte)
+        df = self.df(spark, meta=meta, gt=gt, lte=lte)
         if ordered:
             df = df.orderBy(F.col("seq").desc() if reverse else F.col("seq").asc())
         if limit is not None:

@@ -21,6 +21,18 @@ set. Order-insensitive folds (count/sum, index maintenance, latest-by-
 seq) run with full partition parallelism; a fold that needs seq order
 sorts the batch itself, as ``Reduce`` does (SURVEY §7.4.3).
 
+A batch comes in one of two forms, and a fold branches on
+``batch.isLocal()``. A small batch (a read-your-writes fold: the feed
+sizes it from the log manifest) is an Arrow-built local frame. Spark
+evaluates a projection over it in the driver and ``collect()`` starts
+no job, but an explode, an aggregate or a write would start one. So a
+view's driver branch evaluates its key and value expressions as one
+projection (still Spark SQL, so both forms share one expression
+semantics), merges the rows in Python and writes its run with pyarrow.
+A large batch (backfill, rebuild, catch-up) is a Spark scan, folded by
+Spark plans. A view without a driver branch (``Reduce``, ``Query``)
+folds a local frame with its Spark plan, which is correct, only slower.
+
 The five file-backed views (``Level``, ``Search``, ``Bloom``,
 ``Hashtable``, ``GroupedStats``) share one state layout,
 :class:`RunView`: sorted runs with key ranges, the LSM shape of the
@@ -31,7 +43,9 @@ the log manifest's exact shape, so ``log.footer_range`` and
 merge aggregate. A fold applies it to the batch and appends one run
 sorted by key (O(batch) bytes); a point read opens only the runs whose
 range holds the key and merges in Arrow; a scan merges in Spark; and
-one :meth:`RunView.compact` merges every run into one.
+one :meth:`RunView.compact` merges every run into one. A run is a
+Spark write or, from a driver fold, one pyarrow file with the same
+schema, so every reader takes both.
 """
 
 from __future__ import annotations
@@ -47,6 +61,7 @@ from typing import Any
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..log import files_holding, footer_range, parquet_files, read_parquet_where
 
@@ -144,7 +159,9 @@ class FlumeView:
         """Consume one batch of mapped `(seq, value)` rows: exactly the
         seqs in ``(since, upto]``, in no particular order (a fold that
         needs seq order sorts the batch itself); must call
-        ``self.commit(upto)`` exactly once at the end."""
+        ``self.commit(upto)`` exactly once at the end. The batch may be
+        an Arrow-built local frame (``batch.isLocal()``), on which a
+        fold can stay in the driver (see the module docstring)."""
         raise NotImplementedError
 
     # ---- retention-gated deletion (r4 review) ---------------------------
@@ -201,6 +218,14 @@ class FlumeView:
         pass
 
 
+def stat_partials(xs) -> tuple:
+    """``(count, sum, sum of squares, min, max)`` of the non-null ``xs``:
+    the driver form of the stats views' partial aggregate. Integers stay
+    exact integers."""
+    xs = [x for x in xs if x is not None]
+    return len(xs), sum(xs), sum(x * x for x in xs), min(xs, default=None), max(xs, default=None)
+
+
 def write_atomic(path: str, data: bytes) -> None:
     """Write ``data`` to ``path`` through a tmp file, fsync and replace:
     a crash leaves the old file or the new one, never a torn one
@@ -246,31 +271,47 @@ class RunView(FlumeView):
         self._meta["ranges"] = {}
         os.makedirs(self._run_dir(), exist_ok=True)
 
-    def _write_run(self, df: DataFrame, prefix: str) -> tuple[str, list | None] | None:
-        """Write ``df`` as one run dir; returns its name and key range,
-        or None (the dir removed) when it holds no rows. Emptiness comes
-        from the footers, so the (possibly Python-stage) plan runs
-        once."""
+    def _write_run(self, rows: DataFrame | pa.Table, prefix: str) -> tuple[str, list | None] | None:
+        """Write ``rows`` as one run dir; returns its name and key range,
+        or None (nothing left behind) when it holds no rows. A Spark
+        frame is written by Spark, and its emptiness comes from the
+        footers, so the (possibly Python-stage) plan runs once. An Arrow
+        table is one pyarrow file, written into a tmp dir that is then
+        renamed into place, so a crash leaves an unlisted orphan as a
+        Spark write does."""
         name = f"{prefix}-{uuid.uuid4().hex[:8]}.parquet"
         path = os.path.join(self._run_dir(), name)
-        df.write.mode("overwrite").parquet(path)
+        if isinstance(rows, pa.Table):
+            if not rows.num_rows:
+                return None
+            tmp = os.path.join(self._run_dir(), f".tmp-{name}")
+            os.makedirs(tmp)
+            pq.write_table(rows, os.path.join(tmp, "part-00000.parquet"))
+            os.rename(tmp, path)
+        else:
+            rows.write.mode("overwrite").parquet(path)
         mds = [pq.read_metadata(f) for f in parquet_files([path])]
-        rows = sum(md.num_rows for md in mds)
-        if not rows:
+        n = sum(md.num_rows for md in mds)
+        if not n:
             shutil.rmtree(path, ignore_errors=True)
             return None
         parts = [footer_range(md, self.KEY) for md in mds if md.num_rows]
         if any(r is None for r in parts):
             return name, None
-        return name, [min(r[0] for r in parts), max(r[1] for r in parts), rows]
+        return name, [min(r[0] for r in parts), max(r[1] for r in parts), n]
 
-    def append_run(self, rows: DataFrame, upto: int) -> str | None:
+    def append_run(self, rows: DataFrame | pa.Table, upto: int) -> str | None:
         """Fold side: write a batch's merged ``rows`` as one run sorted by
-        key (``sortWithinPartitions``: no exchange, no sampling job),
-        record it in ``files`` and ``ranges``, and collect garbage past
-        retention. The caller commits. Returns the run's name, or None
-        for an empty batch."""
-        written = self._write_run(rows.sortWithinPartitions(self.KEY), f"{upto:012d}")
+        key (a Spark frame with ``sortWithinPartitions``: no exchange, no
+        sampling job; an Arrow table from a driver fold sorts in
+        pyarrow), record it in ``files`` and ``ranges``, and collect
+        garbage past retention. The caller commits. Returns the run's
+        name, or None for an empty batch."""
+        if isinstance(rows, pa.Table):
+            rows = rows.sort_by([(self.KEY, "ascending")], null_placement="at_start")
+        else:
+            rows = rows.sortWithinPartitions(self.KEY)
+        written = self._write_run(rows, f"{upto:012d}")
         self.collect_garbage()
         if written is None:
             return None
@@ -283,11 +324,29 @@ class RunView(FlumeView):
         return name
 
     @functools.cached_property
-    def _key_arrow_type(self) -> pa.DataType:
-        from pyspark.sql.pandas.types import to_arrow_type
+    def _run_arrow_schema(self) -> pa.Schema:
+        """``RUN_SCHEMA`` as the Arrow schema Spark writes (``int64``,
+        ``string``, nullable), so Spark and pyarrow runs mix."""
+        from pyspark.sql.pandas.types import to_arrow_schema
         from pyspark.sql.types import _parse_datatype_string
 
-        return to_arrow_type(_parse_datatype_string(self.key_type))
+        ddl = self.RUN_SCHEMA.format(key_type=self.key_type)
+        return to_arrow_schema(_parse_datatype_string(ddl))
+
+    def run_table(self, rows) -> pa.Table:
+        """A driver fold's merged ``rows`` (tuples in ``RUN_SCHEMA``
+        column order, e.g. collected Spark rows) as an Arrow run."""
+        schema = self._run_arrow_schema
+        cols = list(zip(*rows)) or [()] * len(schema)
+        return pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema)
+
+    def cast_keys(self, **columns: pa.Array) -> list:
+        """The rows of ``columns`` with ``key`` (strings, as a Python
+        ``key_fn`` yields them) cast to ``key_type`` by Spark, as the
+        Spark fold casts it: a projection over an Arrow-built local
+        frame, so no job. Pass the columns in ``RUN_SCHEMA`` order."""
+        local = self.spark.createDataFrame(pa.table(columns))
+        return local.withColumn("key", F.col("key").cast(self.key_type)).collect()
 
     def read_runs(self, key: Any, columns) -> pa.Table:
         """Point read in the driver (no Spark job): the rows under
@@ -296,17 +355,20 @@ class RunView(FlumeView):
         ``read_parquet_where`` casts it: ``"5"`` finds 5 in a long
         column and ``"abc"`` raises."""
         if key is not None:
-            key = pa.array([key]).cast(self._key_arrow_type)[0].as_py()
+            key = pa.array([key]).cast(self._run_arrow_schema.field(self.KEY).type)[0].as_py()
         runs = files_holding(self._meta, [key]) if key is not None else []
         paths = [os.path.join(self._run_dir(), f) for f in runs]
         return read_parquet_where(paths, self.KEY, [key], columns)
 
     def runs_df(self) -> DataFrame:
-        """Every run's rows, unmerged (a scan applies :meth:`_merge`)."""
+        """Every run's rows, unmerged (a scan applies :meth:`_merge`).
+        Read with the declared schema: Spark and pyarrow runs mix, and
+        planning the scan starts no schema-inference job."""
         files = [os.path.join(self._run_dir(), f) for f in self._meta["files"]]
+        schema = self.RUN_SCHEMA.format(key_type=self.key_type)
         if not files:
-            return self.spark.createDataFrame([], self.RUN_SCHEMA.format(key_type=self.key_type))
-        return self.spark.read.parquet(*files)
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*files)
 
     def maybe_compact(self, max_files: int = 16) -> bool:
         """Compact once there are more than ``max_files`` runs (every fold

@@ -80,10 +80,16 @@ class Bloom(RunView):
 
     def fold(self, batch: DataFrame, upto: int) -> None:
         keys = batch.select(F.expr(self.key_expr).cast("string").alias("key"))
-        name = self.append_run(self._merge(keys), upto)
+        if batch.isLocal():
+            # driver fold: the batch's distinct keys are the run
+            run = self.run_table({(r.key,) for r in keys.collect()})
+            name = self.append_run(run, upto)
+        else:
+            name = self.append_run(self._merge(keys), upto)
+            if name is not None:
+                run = pq.read_table(os.path.join(self._run_dir(), name), columns=["key"])
         sketch = self._sketch
         if name is not None:
-            run = pq.read_table(os.path.join(self._run_dir(), name), columns=["key"])
             sketch = bytearray(sketch)
             for p in self._positions(run["key"]):
                 sketch[p >> 3] |= 1 << (p & 7)

@@ -7,9 +7,9 @@ mergeable partials (count / sum / sum-of-squares / min / max) kept as
 sorted runs (:class:`~.base.RunView`); the merge sums the partials and
 takes the min of the mins and the max of the maxes — the classic
 incremental-view-maintenance algebra. Each fold computes the batch's
-partials with a native Spark aggregate and appends them as one
-key-sorted run: only new records are aggregated, and only the batch's
-groups are written.
+partials (a native Spark aggregate, or in Python for a small batch
+folded in the driver) and appends them as one key-sorted run: only new
+records are aggregated, and only the batch's groups are written.
 
 At 100 TB: the runs are hash-partitioned by key and ``compact()``
 merges them; reads are pruned point/range lookups (``get`` reads the
@@ -24,7 +24,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .base import RunView
+from .base import RunView, stat_partials
 
 
 class GroupedStats(RunView):
@@ -44,11 +44,14 @@ class GroupedStats(RunView):
         self.field = field
         self.key_type = key_type
 
-    def _partials(self, df: DataFrame) -> DataFrame:
+    def _keyed(self, df: DataFrame) -> DataFrame:
         x = F.get_json_object(F.col("value"), f"$.{self.field}").cast("double")
         key = F.expr(self.key_expr).cast(self.key_type)
+        return df.select(key.alias("key"), x.alias("x"))
+
+    def _partials(self, df: DataFrame) -> DataFrame:
         return (
-            df.select(key.alias("key"), x.alias("x"))
+            self._keyed(df)
             .where(F.col("x").isNotNull())
             .groupBy("key")
             .agg(
@@ -69,8 +72,18 @@ class GroupedStats(RunView):
             F.max("mx").alias("mx"),
         )
 
+    def _local_partials(self, batch: DataFrame):
+        """The driver fold's run: the keyed values collected, partials
+        per key in Python."""
+        groups: dict = {}
+        for key, x in self._keyed(batch).collect():
+            if x is not None:
+                groups.setdefault(key, []).append(x)
+        return self.run_table([(k, *stat_partials(xs)) for k, xs in groups.items()])
+
     def fold(self, batch: DataFrame, upto: int) -> None:
-        self.append_run(self._partials(batch), upto)
+        partials = self._local_partials(batch) if batch.isLocal() else self._partials(batch)
+        self.append_run(partials, upto)
         self.commit(upto)
 
     # ---- reads ---------------------------------------------------------

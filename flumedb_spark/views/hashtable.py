@@ -27,10 +27,18 @@ import os
 from typing import Any, Callable
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .base import RunView
+
+
+def _record_keys(key_fn, decode, values) -> list[str]:
+    """``key_fn`` over each record, as a string key. Both fold paths run
+    it: the Spark fold in ``mapInPandas``, the driver fold on the
+    collected batch."""
+    return [str(key_fn(decode(v))) for v in values]
 
 
 class Hashtable(RunView):
@@ -74,13 +82,8 @@ class Hashtable(RunView):
 
             def run(it):
                 for pdf in it:
-                    yield pd.DataFrame(
-                        {
-                            "key": [str(key_fn(decode(v))) for v in pdf["value"]],
-                            "seq": pdf["seq"],
-                            "value": pdf["value"],
-                        }
-                    )
+                    keys = _record_keys(key_fn, decode, pdf["value"])
+                    yield pd.DataFrame({"key": keys, "seq": pdf["seq"], "value": pdf["value"]})
 
             keyed = batch.select("seq", "value").mapInPandas(run, "key string, seq long, value string")
         return keyed.select(F.col("key").cast(self.key_type).alias("key"), "seq", "value")
@@ -94,8 +97,35 @@ class Hashtable(RunView):
             F.max("seq").alias("seq"), F.max_by("value", "seq").alias("value")
         )
 
+    def _local_merged(self, batch: DataFrame) -> pa.Table:
+        """The driver fold's run: the keyed batch collected (``key_fn``
+        run in the driver, its keys cast by Spark) and merged in Python,
+        keeping the row with the max seq per key (min for ``first``)."""
+        if self.key_expr is not None:
+            key = F.expr(self.key_expr).cast(self.key_type)
+            rows = batch.select(key.alias("key"), "seq", "value").collect()
+        else:
+            rows = batch.select("seq", "value").collect()
+            values = [r.value for r in rows]
+            rows = self.cast_keys(
+                key=pa.array(_record_keys(self.key_fn, self._engine.log.codec.decode, values), pa.string()),
+                seq=pa.array([r.seq for r in rows], pa.int64()),
+                value=pa.array(values, pa.string()),
+            )
+        first = self.keep == "first"
+        best: dict = {}
+        for r in rows:
+            cur = best.get(r.key)
+            if cur is None or (r.seq < cur.seq if first else r.seq > cur.seq):
+                best[r.key] = r
+        return self.run_table(best.values())
+
     def fold(self, batch: DataFrame, upto: int) -> None:
-        name = self.append_run(self._merge(self._batch_keys(batch)), upto)
+        if batch.isLocal():
+            merged = self._local_merged(batch)
+        else:
+            merged = self._merge(self._batch_keys(batch))
+        name = self.append_run(merged, upto)
         if name is not None:
             # the newest run, sized by perfbench/store.py:82 until ROADMAP item 3 drops that read
             self._meta["snapshot"] = os.path.join("runs", name)

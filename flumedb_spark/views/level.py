@@ -13,8 +13,9 @@ commit shape Delta uses), so a retried fold never double-indexes
 (exactly-once, SURVEY §7.4.2). A point ``get`` reads Parquet in the
 driver through Arrow: the runs whose key range holds the key, then the
 log's rows for the matched seqs (``ParquetLog.read_seqs``), so it starts
-no Spark job. Key ranges (``read``) and folds stay on Spark: an index
-scan + a join back to the log on ``seq``. The reference's charwise
+no Spark job. A small fold explodes its keys in the driver and writes
+its run with pyarrow; large folds and key ranges (``read``) stay on
+Spark: an index scan + a join back to the log on ``seq``. The reference's charwise
 order-preserving key encoding is unnecessary because the index column
 keeps its native type and sorts natively (SURVEY §2.B V2).
 
@@ -28,17 +29,36 @@ from __future__ import annotations
 from typing import Any, Callable
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .base import RunView
 
 
+def _index_keys(key_fn, decode, seqs, values) -> tuple[list, list]:
+    """``key_fn`` over each record: the ``(seq, key)`` pairs as two
+    lists, one pair per returned key, keys as strings. Both fold paths
+    run it: the Spark fold in ``mapInPandas``, the driver fold on the
+    collected batch."""
+    out_seqs, keys = [], []
+    for s, v in zip(seqs, values):
+        ks = key_fn(decode(v))
+        if isinstance(ks, (str, bytes)):
+            raise TypeError(
+                f"Level key_fn must return a list of keys, got {type(ks).__name__} {ks!r}"
+            )
+        for k in ks or []:
+            out_seqs.append(s)
+            keys.append(str(k))
+    return out_seqs, keys
+
+
 class Level(RunView):
     """``Level(version, key_fn, key_type='string')`` — inverted key→seq index.
 
     ``key_fn(value) -> list[key]`` (arbitrary Python, run executor-side
-    via Arrow batches), or pass ``key_expr=`` a Spark SQL expression
+    via Arrow batches, or in the driver for a small fold), or pass ``key_expr=`` a Spark SQL expression
     string evaluating to ``array<key_type>`` over the JSON ``value``
     column for the fully-JVM fast path.
     """
@@ -71,23 +91,31 @@ class Level(RunView):
 
             def run(it):
                 for pdf in it:
-                    seqs, keys = [], []
-                    for s, v in zip(pdf["seq"], pdf["value"]):
-                        ks = key_fn(decode(v))
-                        if isinstance(ks, (str, bytes)):
-                            raise TypeError(
-                                f"Level key_fn must return a list of keys, got {type(ks).__name__} {ks!r}"
-                            )
-                        for k in ks or []:
-                            seqs.append(s)
-                            keys.append(str(k))
+                    seqs, keys = _index_keys(key_fn, decode, pdf["seq"], pdf["value"])
                     yield pd.DataFrame({"seq": pd.Series(seqs, dtype="int64"), "key": keys})
 
             exploded = batch.select("seq", "value").mapInPandas(run, "seq long, key string")
         return exploded.select(F.col("key").cast(self.key_type).alias("key"), "seq")
 
+    def _local_keys(self, batch: DataFrame) -> pa.Table:
+        """The driver fold's run: keys cast to ``array<key_type>`` in one
+        projection and exploded in Python, or ``key_fn`` run in the
+        driver and its keys cast by Spark."""
+        if self.key_expr is not None:
+            keys = F.expr(self.key_expr).cast(f"array<{self.key_type}>")
+            rows = batch.select("seq", keys.alias("keys")).collect()
+            return self.run_table([(k, r.seq) for r in rows for k in r["keys"] or ()])
+        rows = batch.select("seq", "value").collect()
+        seqs, keys = _index_keys(
+            self.key_fn, self._engine.log.codec.decode, [r.seq for r in rows], [r.value for r in rows]
+        )
+        return self.run_table(
+            self.cast_keys(key=pa.array(keys, pa.string()), seq=pa.array(seqs, pa.int64()))
+        )
+
     def fold(self, batch: DataFrame, upto: int) -> None:
-        self.append_run(self._keys_df(batch), upto)
+        keys = self._local_keys(batch) if batch.isLocal() else self._keys_df(batch)
+        self.append_run(keys, upto)
         self.commit(upto)
 
     # ---- reads ---------------------------------------------------------

@@ -11,7 +11,8 @@ Two execution strategies (SURVEY §7.4.3 order classification):
 - :class:`NativeStats` — the mergeable-statistics special case
   (count/sum/mean/stddev — exactly what the reference's own tests
   compute via the `statistics` reducer). Folds run as native Spark
-  aggregates with full partition parallelism and map-side combine;
+  aggregates with full partition parallelism and map-side combine (a
+  small batch folds in the driver: one projection, partials in Python);
   partials merge algebraically (count, sum, sum of squares, min, max),
   so a 100 TB backfill is one distributed agg, not a serial fold.
 """
@@ -27,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .base import FlumeView
+from .base import FlumeView, stat_partials
 
 
 class Reduce(FlumeView):
@@ -234,22 +235,27 @@ class NativeStats(FlumeView):
 
     def fold(self, batch: DataFrame, upto: int) -> None:
         x = F.get_json_object(F.col("value"), f"$.{self.field}").cast("double")
-        if self.scale:
-            xi = F.round(x * self.scale).cast("long")
-            agg = [F.count(xi).alias("n"), F.sum(xi).alias("s"), F.sum(xi * xi).alias("sq")]
+        # summed: the value, or with ``scale`` its exact scaled integer
+        xs = F.round(x * self.scale).cast("long") if self.scale else x
+        if batch.isLocal():
+            # driver fold: one projection, the partials in Python
+            rows = batch.select(x.alias("x"), xs.alias("xs")).collect()
+            n, total, sq, _, _ = stat_partials(r.xs for r in rows)
+            _, _, _, mn, mx = stat_partials(r.x for r in rows)
         else:
-            agg = [F.count(x).alias("n"), F.sum(x).alias("s"), F.sum(x * x).alias("sq")]
-        row = batch.agg(*agg, F.min(x).alias("mn"), F.max(x).alias("mx")).collect()[0]
-        if row.n:
+            n, total, sq, mn, mx = batch.agg(
+                F.count(xs), F.sum(xs), F.sum(xs * xs), F.min(x), F.max(x)
+            ).collect()[0]
+        if n:
             if self._s is None:
                 zero = 0 if self.scale else 0.0
-                self._s = {"n": 0, "sum": zero, "sq": zero, "min": row.mn, "max": row.mx}
+                self._s = {"n": 0, "sum": zero, "sq": zero, "min": mn, "max": mx}
             s = self._s
-            s["n"] += row.n
-            s["sum"] += row.s
-            s["sq"] += row.sq
-            s["min"] = min(s["min"], row.mn)
-            s["max"] = max(s["max"], row.mx)
+            s["n"] += n
+            s["sum"] += total
+            s["sq"] += sq
+            s["min"] = min(s["min"], mn)
+            s["max"] = max(s["max"], mx)
         self.commit(upto)
 
     def get(self, path: Any = None) -> Any:

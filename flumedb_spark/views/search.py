@@ -38,7 +38,7 @@ class Search(RunView):
 
     METHODS = {"query": "async", "query_df": "source"}
     KEY = "token"
-    RUN_SCHEMA = "token {key_type}, seq long"
+    RUN_SCHEMA = "seq long, token {key_type}"
 
     def __init__(self, version: Any, text_field: str = "text"):
         super().__init__(version)
@@ -48,9 +48,15 @@ class Search(RunView):
         return df.distinct()
 
     def fold(self, batch: DataFrame, upto: int) -> None:
-        text = F.get_json_object(F.col("value"), f"$.{self.text_field}")
-        posting = batch.select("seq", F.explode(tokens_expr(text)).alias("token"))
-        self.append_run(self._merge(posting), upto)
+        tokens = tokens_expr(F.get_json_object(F.col("value"), f"$.{self.text_field}"))
+        if batch.isLocal():
+            # driver fold: the token arrays in one projection, exploded
+            # and made distinct in Python
+            rows = batch.select("seq", tokens.alias("tokens")).collect()
+            posting = self.run_table({(r.seq, t) for r in rows for t in r.tokens or ()})
+        else:
+            posting = self._merge(batch.select("seq", F.explode(tokens).alias("token")))
+        self.append_run(posting, upto)
         self.commit(upto)
 
     def df(self) -> DataFrame:

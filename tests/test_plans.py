@@ -131,10 +131,12 @@ def test_level_point_get_broadcasts_index(spark, tmp_path):
 
 
 def test_view_folds_plan_no_range_partitioning(spark, tmp_path):
-    # a fold sorts its run with sortWithinPartitions: an orderBy would
-    # plan a RangePartitioning exchange, whose sampling job every
-    # read-your-writes op would then pay
+    # a Spark fold sorts its run with sortWithinPartitions: an orderBy
+    # would plan a RangePartitioning exchange, whose sampling job every
+    # large fold would then pay. The batch is above the engine's driver
+    # fold bound, so the folds take their Spark plans.
     from flumedb_spark import Flume
+    from flumedb_spark.engine import DRIVER_FOLD_ROWS
     from flumedb_spark.views.hashtable import Hashtable
     from flumedb_spark.views.level import Level
 
@@ -153,7 +155,7 @@ def test_view_folds_plan_no_range_partitioning(spark, tmp_path):
             return _write(df, prefix)
 
         view._write_run = spy
-    db.append([{"k": i % 7} for i in range(50)])
+    db.append([{"k": i % 7} for i in range(DRIVER_FOLD_ROWS + 1)])
     assert db.idx.get(3) and db.ht.get(3) == {"k": 3}
     assert set(plans) == {"idx", "ht"}
     for name, plan in plans.items():

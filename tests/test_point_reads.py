@@ -5,7 +5,8 @@ Each oracle is the old Spark read, rebuilt inside the test: a
 ``where(col("key") == lit(k))`` filter plus ``collect()`` on the view's
 snapshot, ``Level._join_back`` for the index, and the mapped Spark scan
 (``db.stream_df``) for ``db.get``. Then the point gets that have nothing
-left to fold must start no Spark job at all.
+left to fold must start no Spark job at all, and neither may a gated
+read that folds a small append first, on every log backend.
 """
 
 import os
@@ -15,13 +16,16 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from flumedb_spark import ExprMapper, Flume
+from flumedb_spark import ExprMapper, Flume, NativeStats
+from flumedb_spark.log import OffsetLog, ParquetLog, VersionedLog
 from flumedb_spark.views.bloom import Bloom
 from flumedb_spark.views.grouped import GroupedStats
 from flumedb_spark.views.hashtable import Hashtable
 from flumedb_spark.views.level import Level
+from flumedb_spark.views.search import Search
 
 RECS = [{"k": i % 7, "v": i, "name": f"n{i % 5}"} for i in range(40)]
+RW = [{"k": i % 7, "v": i, "name": f"n{i % 5}"} for i in range(100)]
 ABSENT = object()
 
 
@@ -206,11 +210,45 @@ def test_snapshot_dir_without_data_files(spark, tmp_log_dir):
     db.close()
 
 
+def _rw_db(spark, log):
+    """The six folding views over ``log``, caught up on ``RECS``."""
+    db = Flume(log, spark=spark)
+    db.use("stats", NativeStats(1, field="v"))
+    db.use("idx", Level(1, key_expr="array(get_json_object(value, '$.k'))", key_type="long"))
+    db.use("ht", Hashtable(1, key_expr="get_json_object(value, '$.k')", key_type="long"))
+    db.use("g", GroupedStats(1, "get_json_object(value, '$.k')", field="v", key_type="long"))
+    db.use("words", Search(1, text_field="name"))
+    db.use("seen", Bloom(1, key_expr="get_json_object(value, '$.name')", expected_items=100))
+    _fill(db)
+    for name in ("stats", "idx", "ht", "g", "words", "seen"):
+        getattr(db, name).ready()
+    return db
+
+
+def _rw_reads(db):
+    """Append 100 records, then one gated read of each view: each read
+    first folds the append (a small batch, folded in the driver)."""
+    db.append(RW)
+    every = RECS + RW
+    threes = [r for r in every if r["k"] == 3]
+    assert db.stats.get()["count"] == len(every)
+    assert len(db.idx.get(3)) == len(threes)
+    assert db.ht.get(3) == threes[-1]
+    assert db.g.get(3)["count"] == len(threes)
+    db.words.query_df("n2")  # gated, lazy: folds, then plans the query
+    assert db.seen.might_have("n4") and db.seen.has("n4")
+    for name in ("stats", "idx", "ht", "g", "words", "seen"):
+        assert getattr(db, name).meta["items"] == len(every), name
+
+
 def test_point_gets_start_no_spark_job(spark, tmp_log_dir):
     """Gated gets with nothing left to fold run entirely in the driver:
     the views' point reads, ``db.get`` and ``Level.get`` through an
     ``ExprMapper`` (projected over an Arrow-built local frame), and both
-    ``Bloom`` probes."""
+    ``Bloom`` probes. So does a read-your-writes op: a 100-record append,
+    then a gated read of each folding view, on every log backend (the
+    ``OffsetLog`` item meter counts the driver batch, not a Spark
+    count)."""
     db = Flume(tmp_log_dir, spark=spark)
     db.use("ht", Hashtable(1, key_expr="get_json_object(value, '$.k')", key_type="long"))
     db.use("idx", Level(1, key_expr="array(get_json_object(value, '$.k'))", key_type="long"))
@@ -223,6 +261,7 @@ def test_point_gets_start_no_spark_job(spark, tmp_log_dir):
     mapped.use("idx", Level(1, key_expr="array(get_json_object(value, '$.k'))", key_type="long"))
     _fill(mapped)
     mapped.idx.ready()
+    rw = [_rw_db(spark, log(f"{tmp_log_dir}-rw-{log.__name__}")) for log in (ParquetLog, OffsetLog, VersionedLog)]
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     group = f"point-gets-{uuid.uuid4().hex[:8]}"
@@ -243,11 +282,13 @@ def test_point_gets_start_no_spark_job(spark, tmp_log_dir):
         ]
         assert db.seen.has("n2") and not db.seen.has("nope")
         assert db.seen.might_have("n2")
+        for d in rw:
+            _rw_reads(d)
         assert tracker.getJobIdsForGroup(group) == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    db.close()
-    mapped.close()
+    for d in (db, mapped, *rw):
+        d.close()
 
 
 def _name_str(v):

@@ -9,14 +9,29 @@ Properties:
   (fold(batch-splits) == fold(whole)) — the incremental-maintenance
   correctness core;
 - the gate invariant: after any append pattern, a gated read reflects
-  exactly the appended prefix.
+  exactly the appended prefix;
+- a view's two fold paths agree: the Spark fold of a scanned batch and
+  the driver fold of the same batch as an Arrow-built local frame leave
+  equal state and equal point reads, also after a compaction over runs
+  written by both, on every log backend and through either mapper kind.
 """
 
+import collections
+import os
+from unittest import mock
+
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from flumedb_spark import Flume, Reduce
+from flumedb_spark import ExprMapper, Flume, NativeStats, Reduce, engine
+from flumedb_spark.log import OffsetLog, ParquetLog, VersionedLog
+from flumedb_spark.views.bloom import Bloom
+from flumedb_spark.views.grouped import GroupedStats
+from flumedb_spark.views.hashtable import Hashtable
+from flumedb_spark.views.level import Level
+from flumedb_spark.views.search import Search
 
 N = 30  # log size for the scan-lattice property
 
@@ -83,6 +98,123 @@ def test_fold_invariant_under_batching(spark, tmp_path_factory, values, data):
             assert db.sum.get() == sum(values[: i + size])
         i += size
     assert db.sum.get() == sum(values)
+    db.close()
+
+
+def _ks(v):
+    return v["ks"] or []
+
+
+def _k(v):
+    return v["k"]
+
+
+def _double_k(v):
+    return {**v, "k": None if v["k"] is None else 2 * v["k"]}
+
+
+#: one fresh view per case; each Level/Hashtable form and both stats forms
+FOLD_CASES = {
+    "level_expr": lambda: Level(
+        1, key_expr="from_json(get_json_object(value, '$.ks'), 'array<bigint>')", key_type="long"
+    ),
+    "level_fn": lambda: Level(1, key_fn=_ks),
+    "latest": lambda: Hashtable(1, key_expr="get_json_object(value, '$.k')", key_type="long"),
+    "first": lambda: Hashtable(1, key_fn=_k, keep="first"),
+    "grouped": lambda: GroupedStats(1, "get_json_object(value, '$.k')", field="v", key_type="long"),
+    "search": lambda: Search(1),
+    "bloom": lambda: Bloom(1, key_expr="get_json_object(value, '$.name')", expected_items=64),
+    "stats": lambda: NativeStats(1, field="v"),
+    "scaled": lambda: NativeStats(1, field="v", scale=4),
+}
+#: (backend, mapper): every backend, and each mapper kind on one of them
+FOLD_LOGS = {
+    "parquet-expr": (ParquetLog, ExprMapper("replace(value, 'Hello', 'Howdy')")),
+    "offset-python": (OffsetLog, _double_k),
+    "versioned-none": (VersionedLog, None),
+}
+KS = [None, 0, 1, 2, 3]
+record = st.fixed_dictionaries(
+    {
+        "k": st.sampled_from(KS),
+        # quarter units: every partial sum is exact, whatever the order
+        "v": st.one_of(st.none(), st.integers(-40, 40).map(lambda i: i / 4)),
+        # null, empty and multi-key arrays, with null and repeated keys
+        "ks": st.one_of(st.none(), st.lists(st.sampled_from(KS), max_size=3)),
+        "name": st.sampled_from([None, "a", "b"]),
+        "text": st.sampled_from(["", "Hello world", "hello, HELLO!", "x-y z"]),
+    }
+)
+
+
+def _feed(db, view, gt, lte, local):
+    """One fold of (gt, lte] through the engine's feed, in the asked
+    form: the bound patched below any batch forces the Spark scan."""
+    forms = []
+    fold = view.fold
+    view.fold = lambda batch, upto: (forms.append(batch.isLocal()), fold(batch, upto))
+    bound = engine.DRIVER_FOLD_ROWS if local else -1
+    try:
+        with mock.patch.object(engine, "DRIVER_FOLD_ROWS", bound):
+            db._feed(view, gt, lte)
+    finally:
+        del view.fold
+    assert forms == [local]
+
+
+def _reads(db, name):
+    """What a caller can see of a view: its point reads, its sketch,
+    and its runs' rows as a multiset (one run once compacted)."""
+    view = db._views[name]
+    if isinstance(view, NativeStats):
+        return view._s
+    out = {}
+    if isinstance(view, Bloom):
+        out["sketch"] = bytes(view._sketch)
+        out["gets"] = [(view.has(n), view.might_have(n)) for n in ("a", "b", "None", "zz")]
+    elif not isinstance(view, Search):
+        # a key_fn's None key is the string "None"
+        strings = ("None",) if view.key_type == "string" else ()
+        out["gets"] = [view.get(k) for k in (*KS[1:], 9, *strings)]
+    rows = collections.Counter()
+    for f in view._meta["files"]:
+        t = pq.read_table(os.path.join(view._run_dir(), f))
+        rows.update(tuple(r.values()) for r in t.to_pylist())
+    out["rows"] = rows
+    return out
+
+
+@pytest.mark.parametrize("combo", list(FOLD_LOGS))
+@settings(
+    max_examples=1,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(batches=st.lists(st.lists(record, min_size=1, max_size=12), min_size=2, max_size=3))
+def test_driver_and_spark_folds_agree(spark, tmp_path_factory, combo, batches):
+    backend, mapper = FOLD_LOGS[combo]
+    db = Flume(backend(str(tmp_path_factory.mktemp("forms") / "log")), mapper=mapper, spark=spark)
+    for side in "ab":
+        for case, make in FOLD_CASES.items():
+            db.use(f"{side}_{case}", make())
+    for i, batch in enumerate(batches):
+        gt = db.log.ready_since()
+        lte = db.append(batch)
+        # each batch folds once in each form, and the sets swap forms
+        # batch by batch, so both hold runs of both writers
+        a_local = i % 2 == 0
+        for case in FOLD_CASES:
+            _feed(db, db._views[f"a_{case}"], gt, lte, a_local)
+            _feed(db, db._views[f"b_{case}"], gt, lte, not a_local)
+    for case in FOLD_CASES:
+        assert _reads(db, f"a_{case}") == _reads(db, f"b_{case}"), case
+    for case in FOLD_CASES:
+        a, b = db._views[f"a_{case}"], db._views[f"b_{case}"]
+        if hasattr(a, "compact"):
+            a.compact()
+            b.compact()
+            assert _reads(db, f"a_{case}")["rows"] == _reads(db, f"b_{case}")["rows"], case
+            assert len(a._meta["files"]) <= 1
     db.close()
 
 
