@@ -697,7 +697,10 @@ class Flume:
         views (cost-based triggers — see ``ParquetLog.compaction_due``
         and ``RunView.maybe_compact``, which merges a view's runs past
         16). Policy kwargs are forwarded to the log trigger. Returns what ran:
-        ``{"log": n_files_after | None, "views": [names compacted]}``.
+        ``{"log": n_files_after | None, "views": [names compacted]}``,
+        where ``log`` is None unless a compaction merged files. The log
+        compaction is tiered and runs in the driver, so it starts no
+        Spark job (``ParquetLog.compact``).
 
         Safe to call any time: triggers read only local metadata, the
         compactions themselves use the same atomic manifest-swap commit

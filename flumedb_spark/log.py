@@ -33,8 +33,15 @@ Spark-first design (SURVEY.md §1.4):
   (``get``, ``read_seqs``) and small folds (``read_range``, a few
   thousand rows by the manifest's counts) read in the driver through
   Arrow with a seq filter, so they start no job.
+- compaction (the file hygiene of a log that adds one file per commit)
+  is tiered and runs in the driver: planned from the manifest's row
+  counts, it keeps every file at the target size and merges only runs
+  of adjacent small files, through Arrow, one bounded group at a time,
+  so it starts no job and costs O(new data), not O(log). A file-source
+  live tail re-delivers only the merged files.
 
-Files are named by commit index so lexical order == seq order.
+Appended files are named by commit index, and the manifest lists every
+file in seq order.
 """
 
 from __future__ import annotations
@@ -52,6 +59,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 LOG_SCHEMA = T.StructType(
     [
@@ -61,13 +69,7 @@ LOG_SCHEMA = T.StructType(
     ]
 )
 
-_ARROW_SCHEMA = pa.schema(
-    [
-        pa.field("seq", pa.int64(), nullable=False),
-        pa.field("ts", pa.timestamp("us", tz="UTC")),
-        pa.field("value", pa.string()),
-    ]
-)
+_ARROW_SCHEMA = to_arrow_schema(LOG_SCHEMA)
 
 
 from .codecs import CODECS
@@ -409,7 +411,7 @@ class ParquetLog:
             )
             commit = meta["commits"]
             fname = f"{commit:010d}-{uuid.uuid4().hex[:8]}.parquet"
-            pq.write_table(table, os.path.join(self.data_dir, fname))
+            self._write_file(table, fname)
             # one atomic meta commit makes the file visible: readers
             # consume the manifest, so a torn write (file without meta)
             # is invisible
@@ -427,6 +429,26 @@ class ParquetLog:
         last = self._write_txn(stage)
         self._notify_since()
         return last
+
+    def _write_file(self, table: pa.Table, name: str) -> pq.FileMetaData:
+        """Write ``table`` (of :data:`_ARROW_SCHEMA`) as the log file
+        ``data/<name>`` and return its footer. The one place that knows
+        the log's Parquet encoding: ``seq`` is delta-encoded (dense and
+        byte-offset seqs are near-arithmetic runs, a few bits a row),
+        ``ts`` and ``value`` are dictionary-encoded. The file is written
+        under a hidden name and renamed into place, so a directory
+        listing (the file-source tail) never sees a torn file."""
+        tmp = os.path.join(self.data_dir, f".{name}.tmp")
+        footer: list[pq.FileMetaData] = []
+        pq.write_table(
+            table,
+            tmp,
+            use_dictionary=["ts", "value"],
+            column_encoding={"seq": "DELTA_BINARY_PACKED"},
+            metadata_collector=footer,
+        )
+        os.replace(tmp, os.path.join(self.data_dir, name))
+        return footer[0]
 
     def _assign_seqs(self, encoded: list[str], since: int, meta: dict) -> list[int]:
         """Dense integer seqs — the flumelog-memory choice. Subclasses
@@ -732,22 +754,33 @@ class ParquetLog:
         target_rows_per_file: int = 500_000,
     ) -> int | None:
         """Compact iff :meth:`compaction_due`; returns the post-compaction
-        file count, or None when no work was needed."""
+        file count, or None when no work was needed: not due, or due but
+        with nothing to merge (every small file already stands alone
+        between files at the target size)."""
         if not self.compaction_due(max_files, small_file_bytes, max_small_ratio):
             return None
-        return self.compact(spark, target_rows_per_file=target_rows_per_file)
+        return self._compact(target_rows_per_file)
 
     def compact(self, spark: SparkSession, target_rows_per_file: int = 500_000) -> int:
-        """Merge the many per-commit files into few seq-sorted files.
+        """Merge runs of small per-commit files into seq-sorted files of
+        at most ``target_rows_per_file`` rows; returns the number of
+        files after compaction.
 
         Long-running logs accumulate one file per append commit; scan
         cost grows with file count even when data volume doesn't. The
-        compactor rewrites the committed prefix into
-        ``ceil(n/target)`` range-partitioned, seq-sorted files (so each
-        file's recorded seq range stays narrow), swaps them in via the
-        same tmp-dir + meta protocol appends use, and leaves any
-        concurrent post-compaction appends untouched. Returns the
-        number of files after compaction.
+        compaction is tiered and planned from the manifest alone: a file
+        that holds ``target_rows_per_file`` rows (by its recorded range,
+        else its footer) is kept as it is, and each run of adjacent
+        smaller files is packed greedily into groups of at most that
+        many rows; a group of one file is left alone, and no input file
+        is split. A log already at the target size is never rewritten,
+        so a compaction costs O(new data), not O(log). Each group is
+        merged in the driver through Arrow (no Spark job; memory is
+        bounded by one group), sorted by seq, and written as one file;
+        one atomic manifest swap commits every group, each output
+        standing where its group stood, and leaves any concurrent
+        post-compaction appends untouched. ``spark`` is unused; the
+        signature is the one every caller passes through.
 
         OPTIMIZE/VACUUM separation (the Delta protocol's shape, which
         this manifest maps to): compaction does NOT delete the replaced
@@ -757,56 +790,81 @@ class ParquetLog:
         pre-swap manifest) keep reading bit-identical data; deletion
         happens later via :meth:`vacuum`, gated on a retention window no
         healthy reader outlives. A file-source live tail additionally
-        observes the compacted files as new and re-delivers the prefix,
-        which `LiveViewRunner` folds to a no-op (it folds the manifest
-        range up to the batch's max seq, already covered), and the
-        stream source reads with ignoreMissingFiles as a last line of
-        defense for readers that DO outlive retention.
+        observes the merged files as new and re-delivers their rows
+        (only those: kept files are untouched), which `LiveViewRunner`
+        folds to a no-op (it folds the manifest range up to the batch's
+        max seq, already covered), and the stream source reads with
+        ignoreMissingFiles as a last line of defense for readers that DO
+        outlive retention.
         """
+        n = self._compact(target_rows_per_file)
+        return len(self._load_meta()["files"]) if n is None else n
+
+    def _compact(self, target_rows_per_file: int) -> int | None:
+        """:meth:`compact`'s work; None when the plan merges nothing."""
+        # plan over ONE snapshot, which the swap diffs against: a commit
+        # landing mid-compaction is neither merged nor dropped
         snap = self._load_meta()
-        since = snap["since"]
-        if since < 0:
-            return 0
-        old_files = list(snap.get("files", []))
-        # plan over the SAME snapshot the swap diffs against: a commit
-        # landing between two manifest loads must not be both compacted
-        # (fresh scan) and kept in the tail (old-files diff) — that
-        # would double every one of its rows
-        df = self.df(spark, meta=snap)
-        n = df.count()
-        n_files = max(1, (n + target_rows_per_file - 1) // target_rows_per_file)
-        tmp = os.path.join(self.path, f"compact-{uuid.uuid4().hex[:8]}")
-        (
-            df.repartitionByRange(n_files, "seq")
-            .sortWithinPartitions("seq")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        # swap: stage compacted files into data/, then ONE atomic meta
-        # commit replaces the manifest (crash before it = harmless
-        # orphans; readers never see duplicates), then GC the old files
-        import shutil
-
-        new_ranges = {}
-        parts = [f for f in sorted(os.listdir(tmp)) if f.endswith(".parquet")]
+        groups, footers = self._compaction_groups(snap, target_rows_per_file)
+        if not groups:
+            return None
         run_id = uuid.uuid4().hex[:8]  # concurrent OCC compactors must not collide
-        for i, f in enumerate(parts):
-            name = f"compacted-{since:012d}-{i:05d}-{run_id}.parquet"
-            dst = os.path.join(self.data_dir, name)
-            shutil.move(os.path.join(tmp, f), dst)
-            new_ranges[name] = footer_range(pq.read_metadata(dst))
-        shutil.rmtree(tmp, ignore_errors=True)
-        return self._swap_files(old_files, new_ranges)[1]
+        new_ranges = {}
+        for i, group in enumerate(groups):
+            # Spark-written files store ts as INT96, which Arrow reads
+            # as timestamp[ns]: cast every file to the log's schema
+            table = pa.concat_tables(
+                pq.read_table(os.path.join(self.data_dir, f), columns=_ARROW_SCHEMA.names)
+                .cast(_ARROW_SCHEMA)
+                for f in group
+            ).sort_by("seq")
+            # a group of files without rows (empty bulk parts that older
+            # logs committed) merges into no file
+            if table.num_rows:
+                name = f"compacted-{snap['since']:012d}-{i:05d}-{run_id}.parquet"
+                new_ranges[name] = footer_range(self._write_file(table, name))
+        merged = [f for group in groups for f in group]
+        return self._swap_files(merged, new_ranges, known=footers)[1]
 
-    def _swap_files(self, old_files: list[str], new_ranges: dict, deleted: int = 0):
+    def _compaction_groups(self, meta: dict, target: int) -> tuple[list[list[str]], dict]:
+        """The tiered plan over ``meta``'s files in manifest (seq) order:
+        the groups of adjacent files below ``target`` rows, packed
+        greedily up to ``target`` rows, that hold two files or more; and
+        the ranges read from the footers of files the manifest has none
+        for (recorded by the swap, so its insertion rule sees them)."""
+        ranges = meta.get("ranges", {})
+        footers = {}
+        groups, run, rows = [], [], 0
+        for f in meta.get("files", []) + [None]:  # None closes the last run
+            n, r = target, ranges.get(f)
+            if r is not None:
+                n = r[2]
+            elif f is not None:
+                md = pq.read_metadata(os.path.join(self.data_dir, f))
+                footers[f] = footer_range(md)
+                n = md.num_rows
+            if run and (n >= target or rows + n > target):
+                if len(run) > 1:
+                    groups.append(run)
+                run, rows = [], 0
+            if n < target:
+                run.append(f)
+                rows += n
+        return groups, {f: r for f, r in footers.items() if r is not None}
+
+    def _swap_files(
+        self, old_files: list[str], new_ranges: dict, deleted: int = 0, known: dict | None = None
+    ):
         """Commit the staged files ``new_ranges`` (name -> seq range) in
-        place of ``old_files``, which become TOMBSTONES. Each new file
-        stands before the first kept file holding later seqs, so
-        manifest order stays seq order: a compaction's output heads the
-        manifest, ahead of the appends that landed since it was
-        planned, and a redaction's stands where its files stood. The swap is a
-        write transaction like any other (re-runnable: pure recompute
-        over the fresh manifest). Returns ``(committed, files after)``.
+        place of ``old_files``, which become TOMBSTONES. ``known`` holds
+        footer-read ranges of kept files the manifest has none for, and
+        the same commit records them. Each new file stands before the
+        first kept file holding later seqs, so manifest order stays seq
+        order: a compaction's or a redaction's output stands where its
+        files stood, ahead of any appends that landed since it was
+        planned. The swap is a write transaction like any other
+        (re-runnable: pure recompute over the fresh manifest). Returns
+        ``(committed, files after)``.
 
         Concurrent-rewrite guard: if ANOTHER compaction already
         replaced part of ``old_files``, the new files would DUPLICATE
@@ -826,7 +884,7 @@ class ParquetLog:
                         pass
                 raise _NoCommit((False, len(current["files"])))
             files = [f for f in current["files"] if f not in old]
-            ranges = current.get("ranges", {})
+            ranges = {**(known or {}), **current.get("ranges", {})}
             ranges = {**{f: ranges[f] for f in files if f in ranges}, **new_ranges}
             for name, r in new_ranges.items():
                 # a kept file without a range (written before ranges
@@ -879,10 +937,11 @@ class ParquetLog:
     def delete_seqs(self, spark: SparkSession, seqs) -> int:
         """Redact committed records by seq (right-to-be-forgotten).
 
-        The mechanism is the compactor's, scoped to the files that can
+        The swap is the compactor's, scoped to the files that can
         contain the targets: the manifest's per-file seq ranges prune it
-        down to the affected files (no file is opened), one Spark job
-        rewrites just those files without the redacted rows, and one atomic manifest commit swaps them in —
+        down to the affected files, whose footers give the row count
+        before, one Spark job rewrites just those files without the
+        redacted rows, and one atomic manifest commit swaps them in —
         originals become TOMBSTONES, so physical erasure completes at
         :meth:`vacuum` (the OPTIMIZE/VACUUM separation applies to
         redaction too: in-flight readers keep a consistent snapshot
@@ -932,8 +991,8 @@ class ParquetLog:
         if not affected:
             return 0
         paths = [os.path.join(self.data_dir, f) for f in affected]
+        before = sum(pq.read_metadata(p).num_rows for p in paths)
         df = spark.read.schema(LOG_SCHEMA).parquet(*paths)
-        before = df.count()
         if target_df is not None:
             remaining = df.join(target_df, "seq", "left_anti")
         else:

@@ -1,8 +1,11 @@
 """Cost-based compaction scheduling (roadmap #7): metadata-only
 triggers, maybe_compact idempotence, engine-level maintain()."""
 
+import os
+import uuid
+
 from flumedb_spark import Flume
-from flumedb_spark.log import ParquetLog
+from flumedb_spark.log import _ARROW_SCHEMA, ParquetLog
 from flumedb_spark.views.level import Level
 
 
@@ -17,6 +20,75 @@ def test_log_trigger_and_maybe_compact(spark, tmp_path):
     seqs = [r.seq for r in log.stream_df(spark).select("seq").collect()]
     assert seqs == list(range(12))
     assert log.maybe_compact(spark, max_files=10) is None
+
+
+def test_maybe_compact_none_when_nothing_merges(spark, tmp_path):
+    """Due past ``max_files``, but every file is at the target size: the
+    plan merges nothing, so nothing commits and no file is tombstoned."""
+    db = Flume(str(tmp_path / "db"), spark=spark)
+    for i in range(6):
+        db.append([{"foo": i}, {"foo": -i}])
+    log = db.log
+    assert log.compaction_due(max_files=4)
+    meta = log._load_meta()
+    stamp = os.stat(log.meta_path).st_mtime_ns
+    assert log.maybe_compact(spark, max_files=4, target_rows_per_file=2) is None
+    assert db.maintain(max_files=4, target_rows_per_file=2)["log"] is None
+    assert log._load_meta() == meta and "tombstones" not in meta
+    assert os.stat(log.meta_path).st_mtime_ns == stamp
+    db.close()
+
+
+def test_log_compaction_starts_no_spark_job(spark, tmp_path):
+    """``compact`` and ``maintain()`` merge the log in the driver: under
+    a job group, neither starts a Spark job."""
+    db = Flume(str(tmp_path / "db"), spark=spark)
+    db.use("idx", Level(1, key_fn=lambda v: [str(v["foo"])]))
+    for i in range(12):
+        db.append({"foo": i})
+    db.idx.get("3")  # one fold: the view is not due
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"compact-{uuid.uuid4().hex[:8]}"
+    probe = f"probe-{uuid.uuid4().hex[:8]}"
+    try:
+        # the group does capture this thread's jobs
+        sc.setJobGroup(probe, "probe")
+        db.log.df(spark).count()
+        assert tracker.getJobIdsForGroup(probe)
+        sc.setJobGroup(group, "compaction")
+        assert db.log.compact(spark) == 1
+        for i in range(12, 24):
+            db.append({"foo": i})
+        report = db.maintain(max_files=8, target_rows_per_file=12)
+        assert report == {"log": 2, "views": [], "vacuumed": 0}
+        assert tracker.getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(db.stream(values=False)) == list(range(24))
+    assert db.idx.get("17")[0]["value"]["foo"] == 17
+    db.close()
+
+
+def test_compaction_drops_files_without_rows(spark, tmp_path):
+    """Logs written before empty bulk parts were skipped list files
+    without rows; a group of only such files merges into no file."""
+    log = ParquetLog(str(tmp_path / "log"))
+    log.append([{"foo": i} for i in range(4)])
+    empties = ["empty-0.parquet", "empty-1.parquet"]
+    for name in empties:
+        log._write_file(_ARROW_SCHEMA.empty_table(), name)
+
+    def stage(meta):
+        meta["files"] += empties
+        meta["ranges"].update({f: [None, None, 0] for f in empties})
+
+    log._write_txn(stage)
+    log.append([{"foo": i} for i in range(4, 8)])
+    assert log.compact(spark, target_rows_per_file=4) == 2
+    meta = log._load_meta()
+    assert not set(empties) & set(meta["files"]) and set(meta["ranges"]) == set(meta["files"])
+    assert [r.seq for r in log.stream_df(spark).select("seq").collect()] == list(range(8))
 
 
 def test_small_file_ratio_trigger(spark, tmp_path):

@@ -17,9 +17,13 @@ Behaviors covered per (backend, mapper) combination:
 - range reads, planned from the manifest's per-file seq ranges, equal the
   full scan's filter after redaction and compaction, and a manifest
   written before ranges were recorded still reads every row
+- tiered compaction keeps a file at the target size (name and mtime)
+  and merges only the small files after it, every row (``ts`` included)
+  unchanged and manifest order still seq order
 """
 
 import math
+import os
 
 import pytest
 
@@ -144,7 +148,6 @@ def test_view_ahead_of_log_rebuilds(db, spark, backend, tmp_log_dir, mapper):
     # Deleting the whole log dir would also delete <log>/views/sum and
     # the destroy-then-rebuild logic would never run — the fresh view
     # would trivially start at -1 (a vacuous pass).
-    import os
     import shutil
 
     root = tmp_log_dir + "/log"
@@ -290,7 +293,8 @@ def _check_range_reads(db, spark) -> list[int]:
 def test_range_reads_match_the_full_scan(spark, tmp_log_dir, backend):
     """A range read plans only the files whose recorded seq range
     overlaps it. On every backend it must equal the full scan's filter,
-    and stay equal after redaction, compaction and later appends."""
+    and stay equal after redaction, compaction, later appends and a
+    tiered compaction."""
     db = Flume(backend(tmp_log_dir + "/log"), spark=spark)
     for c in range(4):
         db.append([{"c": c, "i": i} for i in range(5)])
@@ -308,6 +312,26 @@ def test_range_reads_match_the_full_scan(spark, tmp_log_dir, backend):
     db.log.compact(spark)
     db.append([{"c": 5, "i": i} for i in range(5)])
     assert len(_check_range_reads(db, spark)) == 28
+    # tiered: the compacted file holds the target's rows, so the next
+    # compaction keeps it (same name, same mtime) and merges only the
+    # small files after it; the *-bulk backends' small files store ts
+    # as INT96
+    meta = db.log._load_meta()
+    big = meta["files"][0]
+    mtime = os.stat(os.path.join(db.log.data_dir, big)).st_mtime_ns
+    for c in range(6, 9):
+        db.append([{"c": c, "i": i} for i in range(2)])
+    small = db.log._load_meta()["files"][1:]
+    rows = sorted(db.log.df(spark).collect())
+    db.log.compact(spark, target_rows_per_file=meta["ranges"][big][2])
+    meta = db.log._load_meta()
+    assert meta["files"][0] == big and len(meta["files"]) == 2
+    assert os.stat(os.path.join(db.log.data_dir, big)).st_mtime_ns == mtime
+    assert not set(small) & set(meta["files"])
+    assert sorted(db.log.df(spark).collect()) == rows  # ts included
+    lows = [meta["ranges"][f][0] for f in meta["files"]]
+    assert lows == sorted(lows)
+    assert len(_check_range_reads(db, spark)) == 34
     db.close()
 
 
@@ -330,4 +354,18 @@ def test_manifest_without_ranges_reads_every_file(spark, tmp_log_dir, backend):
     assert set(meta["ranges"]) == set(meta["files"]) - set(old_files)
     assert len(db.stream()) == 20
     assert len(_seqs(db.log.stream_df(spark, gt=seqs[-1], ordered=False))) == 5
+    # compaction counts a file without a range by its footer, and records
+    # the ranges of the files it keeps, so its output stands after them
+    db.log.compact(spark)
+    db.log._write_txn(lambda meta: meta.pop("ranges"))
+    [big] = db.log._load_meta()["files"]
+    db.append([{"c": 4, "i": i} for i in range(2)])
+    db.append([{"c": 5, "i": i} for i in range(2)])
+    db.log.compact(spark, target_rows_per_file=20)
+    meta = db.log._load_meta()
+    assert meta["files"][0] == big and len(meta["files"]) == 2
+    assert set(meta["ranges"]) == set(meta["files"])
+    assert meta["ranges"][big][2] == 20
+    scan = db.stream()
+    assert scan[:15] == full and len(scan) == 24
     db.close()
